@@ -1,9 +1,6 @@
-# Developer entry points. `make bootstrap` is the one documented command a
-# fresh clone needs: it installs the pre-commit tail-tripwire hook
-# (.githooks/pre-commit — out-of-window oracle gate; SKIP_TAIL_TRIPWIRE=1
-# to bypass per-commit). Running the test suite also installs the hook
-# (tests/conftest.py::pytest_configure), so either path makes the
-# enforcement structural.
+# Developer entry points. `make bootstrap` installs the opt-in pre-commit
+# tail-tripwire hook (.githooks/pre-commit — out-of-window oracle gate;
+# SKIP_TAIL_TRIPWIRE=1 to bypass per-commit).
 
 .PHONY: bootstrap test oracle tripwire bench plans docs
 

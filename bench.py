@@ -139,7 +139,7 @@ def _spread(runs: list[float]) -> float:
     return round((max(runs) - min(runs)) / med, 3) if med > 0 else 0.0
 
 
-def bench_snapshot_throughput(spark, sf_dir: str) -> tuple[float, float]:
+def bench_snapshot_throughput(spark, sf_dir: str) -> tuple[float, float, int, float]:
     """End-to-end snapshot load (S2→S10 analogue): lineitem → normalize →
     partitioned parquet write. Mirrors the reference's rows/sec progress
     metric (migrate_v3.py:656,827,848)."""
@@ -165,22 +165,21 @@ def bench_snapshot_throughput(spark, sf_dir: str) -> tuple[float, float]:
     return dt, n_rows / dt, len(runs) - 1, _spread(runs[1:])
 
 
-def bench_changelog_apply(spark, sf_dir: str, sink_cls=None, method: str = "apply") -> tuple[float, float]:
+def bench_changelog_apply(
+    spark, sf_dir: str, method: str = "apply"
+) -> tuple[float, float, float, int, int, float, float]:
     """Changelog-apply throughput (ST2): bootstrap sink from orders, then
     MERGE one batch of updates+deletes (20% of keys). Mirrors the
     reference's sink batch apply (batch.size 3000,
-    connectors/sinks/postgres/performance.json:30). ``sink_cls`` selects the
-    merge-sink implementation (link-forward MVCC vs transaction log)."""
+    connectors/sinks/postgres/performance.json:30). ``method`` is ``apply``
+    (copy-on-write) or ``mor`` (merge-on-read ``apply_delta``)."""
     import shutil
     import tempfile
 
     from pyspark.sql import functions as F
 
-    from cdc_connector_spark.changelog.sink import ParquetMergeSink
+    from cdc_connector_spark.changelog.txlog import TxLogMergeSink
     from cdc_connector_spark.tables import load_table
-
-    if sink_cls is None:
-        sink_cls = ParquetMergeSink
 
     orders = load_table(spark, sf_dir, "orders")
     changes = (
@@ -204,9 +203,9 @@ def bench_changelog_apply(spark, sf_dir: str, sink_cls=None, method: str = "appl
     n_small = small.count()
     root = tempfile.mkdtemp(prefix="bench_apply_")
     try:
-        sink = sink_cls(spark, os.path.join(root, "orders"), ["o_orderkey"], num_buckets=64)
+        sink = TxLogMergeSink(spark, os.path.join(root, "orders"), ["o_orderkey"], num_buckets=64)
         sink.overwrite(orders)
-        do_apply = getattr(sink, "apply_delta") if method == "mor" else sink.apply
+        do_apply = sink.apply_delta if method == "mor" else sink.apply
         # warm-up once (codegen/file-listing), then variance-bounded
         # batches per entry — replay is idempotent (same merge work each
         # pass), so a noisy batch re-runs safely (r14, verdict #1)
@@ -453,28 +452,17 @@ def main() -> None:
     total += snap_dt
     print(f"# snapshot_load_lineitem: {snap_dt:.2f}s ({snap_rps:,.0f} rows/s)", file=sys.stderr)
 
-    apply_dt, apply_eps, small_dt, n_small, apply_runs, sp_big, sp_small = bench_changelog_apply(spark, sf_dir)
-    timings["changelog_apply_orders"] = round(apply_dt, 3)
-    timings["changelog_apply_small_batch"] = round(small_dt, 3)
-    query_stats["changelog_apply_orders"] = {"median": round(apply_dt, 3), "runs": apply_runs, "spread": sp_big}
-    query_stats["changelog_apply_small_batch"] = {"median": round(small_dt, 3), "runs": apply_runs, "spread": sp_small}
-    total += apply_dt + small_dt
-    print(f"# changelog_apply_orders: {apply_dt:.2f}s ({apply_eps:,.0f} events/s)", file=sys.stderr)
-    print(f"# changelog_apply_small_batch: {small_dt:.2f}s ({n_small} events, bucket-pruned)", file=sys.stderr)
-
-    from cdc_connector_spark.changelog.txlog import TxLogMergeSink
-
-    tx_dt, tx_eps, tx_small_dt, _, tx_runs, tx_sp, tx_sp_small = bench_changelog_apply(spark, sf_dir, sink_cls=TxLogMergeSink)
+    tx_dt, tx_eps, tx_small_dt, n_small, tx_runs, tx_sp, tx_sp_small = bench_changelog_apply(spark, sf_dir)
     timings["changelog_apply_txlog"] = round(tx_dt, 3)
     timings["changelog_apply_txlog_small_batch"] = round(tx_small_dt, 3)
     query_stats["changelog_apply_txlog"] = {"median": round(tx_dt, 3), "runs": tx_runs, "spread": tx_sp}
     query_stats["changelog_apply_txlog_small_batch"] = {"median": round(tx_small_dt, 3), "runs": tx_runs, "spread": tx_sp_small}
     total += tx_dt + tx_small_dt
     print(f"# changelog_apply_txlog: {tx_dt:.2f}s ({tx_eps:,.0f} events/s)", file=sys.stderr)
-    print(f"# changelog_apply_txlog_small_batch: {tx_small_dt:.2f}s", file=sys.stderr)
+    print(f"# changelog_apply_txlog_small_batch: {tx_small_dt:.2f}s ({n_small} events, bucket-pruned)", file=sys.stderr)
 
     mor_dt, mor_eps, mor_small_dt, _, mor_runs, mor_sp, mor_sp_small = bench_changelog_apply(
-        spark, sf_dir, sink_cls=TxLogMergeSink, method="mor"
+        spark, sf_dir, method="mor"
     )
     timings["changelog_apply_mor"] = round(mor_dt, 3)
     timings["changelog_apply_mor_small_batch"] = round(mor_small_dt, 3)
@@ -495,11 +483,11 @@ def main() -> None:
     total += sum(live_timings.values())
 
     # entry-count convention (verdict r14 #5): query_stats carries EXACTLY
-    # the queries() surface + the 8 named throughput entries + whatever the
+    # the queries() surface + the 6 named throughput entries + whatever the
     # live plane produced (0 when no live PG). Asserted, and the breakdown
     # ships in the artifact so round-over-round diffs never depend on an
     # undocumented counting convention.
-    named_throughput = 8  # bpe + snapshot + 3 apply flavors x (big, small)
+    named_throughput = 6  # bpe + snapshot + 2 apply flavors x (big, small)
     n_expected = len(qs) + named_throughput + len(live_timings)
     assert len(query_stats) == n_expected, (
         f"query_stats carries {len(query_stats)} entries, expected "
@@ -527,7 +515,7 @@ def main() -> None:
             "pre_live_ratio": canary_pre_live,
         },
         "snapshot_rows_per_sec": round(snap_rps),
-        "apply_events_per_sec": round(apply_eps),
+        "apply_events_per_sec": round(tx_eps),
         **live_rates,
     }
     # The stdout contract line carries everything the driver's round-over-

@@ -7,4 +7,3 @@ from cdc_connector_spark.changelog.envelope import (  # noqa: F401
     envelope_schema,
     flatten_envelope,
 )
-from cdc_connector_spark.changelog.sink import ParquetMergeSink  # noqa: F401

@@ -13,7 +13,7 @@ tests/validation.py:8-12):
 Implemented as pure DataFrame algebra (max_by aggregate + anti-join + union), so it is
 the same code path for batch backfill and ``foreachBatch`` streaming. On a
 cluster the anti-join shuffles by key once; with the sink bucketed by key
-(see ParquetMergeSink) the shuffle is one-sided.
+(see TxLogMergeSink) the shuffle is one-sided.
 """
 
 from __future__ import annotations

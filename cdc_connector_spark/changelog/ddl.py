@@ -21,8 +21,8 @@ semantics for late events produced under the pre-DDL schema:
   column, never a resurrection of old values.)
 
 Renaming or dropping a KEY column is rejected: key identity pins the sink's
-bucket layout (`_META num_buckets` invariant) and would need a full
-table-version migration, not a projection.
+bucket layout (the `key_cols`/`num_buckets` table properties in its log) and
+would need a full table-version migration, not a projection.
 
 DDL replay is IDEMPOTENT (same contract as the data plane, ST1): an
 already-applied rename (old name gone, new name present) or drop (column
@@ -39,7 +39,6 @@ explicit schema so the Spark 4 parquet reader's widening promotions
 (SPARK-40876: int32->long, float->double, ...) upcast narrow files at scan
 time; compaction gradually migrates them. Widening a KEY column is
 rejected (xxhash64 is width-sensitive, so the bucket layout would tear).
-The plain ParquetMergeSink keeps the full-rewrite fallback.
 """
 
 from __future__ import annotations
@@ -213,22 +212,3 @@ def apply_changes_with_ddl(
 
     migrated = apply_ddl(current, ddl_ops, key_cols) if current is not None else None
     return apply_changes(migrated, normalize_batch(changes, ddl_ops), key_cols, **kwargs)
-
-
-def migrate_sink_schema(sink, ops: Sequence[DdlOp]) -> None:
-    """Apply a DDL op sequence to a merge sink. Later batches may still carry
-    the pre-DDL shape — run them through ``normalize_batch(batch, ops)``
-    before ``sink.apply``.
-
-    Sinks exposing a ``ddl`` method (TxLogMergeSink) get the METADATA-ONLY
-    path for rename/drop — one O(1) log commit via column mapping, zero data
-    files touched; widen still rewrites (parquet has no cross-file int
-    promotion). Sinks without it (ParquetMergeSink) take the full-rewrite
-    path: read current state, migrate, commit as a new version."""
-    if hasattr(sink, "ddl"):
-        sink.ddl(ops)
-        return
-    cur = sink.read()
-    if cur is None:
-        raise ValueError("cannot migrate an empty sink")
-    sink.overwrite(apply_ddl(cur, ops, sink.key_cols))

@@ -1,12 +1,12 @@
 """Transaction-log merge sink: a lakehouse-style table on plain parquet.
 
-``ParquetMergeSink`` (sink.py) keeps MVCC snapshots as whole version
-DIRECTORIES and carries untouched buckets forward with hard links — correct,
-but every commit still costs O(num_buckets) driver metadata work (one
-listdir+link per untouched bucket) and readers discover state by listing the
-filesystem. This module removes both scale limits with the design Delta Lake
-and Iceberg made standard (public format specs; no Delta/Iceberg jars exist
-in this environment, so the log protocol is implemented directly):
+The engine's one merge sink. It replaces the reference's JDBC upsert sink
+(S9) and COPY bulk load (S10): the reference's per-batch upsert (batch.size
+3000, connectors/sinks/postgres/performance.json:30) maps to one
+``apply()``, the bulk load to one ``overwrite()``. The table follows the
+design Delta Lake and Iceberg made standard (public format specs; no
+Delta/Iceberg jars exist in this environment, so the log protocol is
+implemented directly):
 
 - **Data files are immutable and never move.** Each commit writes its new
   files under ``data/<commit-uuid>/__bucket=<b>/`` and leaves every other
@@ -26,7 +26,7 @@ in this environment, so the log protocol is implemented directly):
   simply re-publishes the same files at the next version (its merge inputs
   are untouched), otherwise it recomputes the merge from the new snapshot.
   Writers on different key ranges therefore never serialize a Spark job
-  behind each other — the property the lock-based sink cannot offer.
+  behind each other — the property a lock-based sink cannot offer.
 - **Snapshot isolation + time travel.** A reader resolves a version's file
   set once and is immune to concurrent commits; ``read(version=K)`` replays
   to any retained version. ``vacuum`` deletes files *removed* more than
@@ -38,8 +38,8 @@ in this environment, so the log protocol is implemented directly):
   files, not O(history). Commit JSONs are tiny and kept (they are the
   history/time-travel record); only *data* files are vacuumed.
 
-MERGE semantics are identical to ``ParquetMergeSink.apply`` (the engine's
-ST2/W5 contract, reference ``connectors/sinks/postgres/trading.json:13-15``):
+MERGE semantics are the engine's ST2/W5 contract (reference
+``connectors/sinks/postgres/trading.json:13-15``):
 hash-bucket the keys, read only touched buckets, ``apply_changes`` (latest
 per key wins, deletes drop), rewrite only touched buckets. At 100 TB with
 100k buckets a 3000-event trigger commits ~a dozen adds/removes and one
@@ -104,8 +104,12 @@ class _Snapshot:
 
 
 class TxLogMergeSink:
-    """Drop-in peer of ``ParquetMergeSink`` (same ``overwrite`` / ``apply`` /
-    ``read`` / ``count`` / ``exists`` surface) backed by a transaction log."""
+    """Bucketed merge sink (``overwrite`` / ``apply`` / ``apply_delta`` /
+    ``read`` / ``count`` / ``exists``) backed by a transaction log.
+
+    ``key_cols`` and ``num_buckets`` are table properties recorded in the
+    log: reopening an existing table needs only its path, and a path that
+    holds no table without ``key_cols`` raises before anything is created."""
 
     def __init__(
         self,
@@ -124,12 +128,10 @@ class TxLogMergeSink:
         self.merge_schema = merge_schema
         self.checkpoint_interval = checkpoint_interval
         self.max_commit_retries = max_commit_retries
-        os.makedirs(self.log_dir, exist_ok=True)
-        os.makedirs(self.data_dir, exist_ok=True)
         snap = self._snapshot()
         if snap.version >= 0:
-            # table properties live in the log; a caller-supplied mismatch is
-            # the same corruption hazard sink.py guards against
+            # table properties live in the log; a caller-supplied mismatch
+            # would hash keys with the wrong modulus and corrupt the merge
             if num_buckets is not None and num_buckets != snap.num_buckets:
                 raise ValueError(
                     f"table at {self.path} has num_buckets={snap.num_buckets}; "
@@ -147,6 +149,8 @@ class TxLogMergeSink:
                 raise ValueError("key_cols required to create a new table")
             self.key_cols = list(key_cols)
             self.num_buckets = num_buckets or 32
+        os.makedirs(self.log_dir, exist_ok=True)
+        os.makedirs(self.data_dir, exist_ok=True)
 
     # -- log primitives ------------------------------------------------------
     def _commit_file(self, version: int) -> str:
@@ -797,6 +801,12 @@ class TxLogMergeSink:
         are byte-identical in the new snapshot), else the merge re-runs
         against the new snapshot. Deletes+upserts stay idempotent either
         way, so at-least-once delivery still yields exactly-once state."""
+        # empty table: nothing to prune or merge against, so commit version 0
+        # in one Spark job, without the touched-bucket discovery job below
+        if self._snapshot().version < 0 and self._bootstrap_commit(
+            apply_changes(None, changes, self.key_cols)
+        ):
+            return
         # touched buckets from the raw batch: metadata-scale collect
         touched = sorted(
             r[0]

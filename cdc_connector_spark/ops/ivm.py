@@ -16,7 +16,7 @@ row's A-side key appear in ΔA"), deletes fall out for free (a deleted row
 is simply absent from A'/ΔA_live), and per-batch cost is O(|Δ| · match
 fan-out) + an anti-join against V — never a full A ⋈ B.
 
-State/persistence is the CALLER's concern (the changelog sinks already
+State/persistence is the CALLER's concern (the merge sinks already
 materialize A' and B'; pair this with ``TxLogMergeSink.scan(keys=...)``
 to make the ``ΔA ⋈ B'`` probe a bucket-pruned read instead of a full
 scan). This module is pure DataFrame algebra, proved equal to the full

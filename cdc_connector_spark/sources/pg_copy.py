@@ -605,7 +605,7 @@ def upsert_to_postgres(
     for tombstones, in a single transaction. Latest-per-key reduction
     (ts, seq) happens Spark-side first, so the merge is deterministic
     regardless of batch-internal ordering — same contract as
-    ``ParquetMergeSink.apply``. Returns counts.
+    ``TxLogMergeSink.apply``. Returns counts.
 
     Concurrency: the staging table name is unique per call (pid + nonce), so
     concurrent appliers targeting the same table cannot clobber each other's

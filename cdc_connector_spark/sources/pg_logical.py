@@ -7,7 +7,7 @@ real PostgreSQL server: a logical replication slot with the built-in
 ``test_decoding`` output plugin, drained via psql and parsed into the same
 ``{before, after, op, ts_ms, source, seq}`` envelope the rest of the engine
 speaks — so live DML (INSERT/UPDATE/DELETE) flows WAL → envelope →
-``flatten_envelope`` → ``ParquetMergeSink.apply`` with per-key ordering by
+``flatten_envelope`` → ``TxLogMergeSink.apply`` with per-key ordering by
 (commit-ts, lsn).
 
 Semantics mapped from the WAL:
@@ -289,7 +289,7 @@ def run_cdc_poll(
 ) -> int:
     """Micro-batch CDC loop (O5/ST5 live analogue): each poll drains the
     slot, converts to the envelope, and MERGEs into ``sink`` (any object
-    with ``.apply``, e.g. ParquetMergeSink). ``on_progress`` receives a
+    with ``.apply``, e.g. TxLogMergeSink). ``on_progress`` receives a
     heartbeat dict per poll — the liveness hook the reference surfaces via
     connector status. Returns total events applied. Empty polls are cheap
     (one psql round trip), so the interval tunes end-to-end latency the

@@ -3,8 +3,8 @@
 Operational complement to ChangelogStream's ST7 quarantine: after an
 operator fix, ``replay`` drains the DLQ through the same flatten+MERGE path
 the stream uses; ``vacuum`` enforces retention so dead batches return their
-disk. Sink identity (key_cols, num_buckets) comes from the sink's own
-persisted _META — the CLI needs only the path.
+disk. Sink identity (key_cols, num_buckets) comes from the table
+properties in the sink's transaction log — the CLI needs only the path.
 
 Usage::
 
@@ -12,7 +12,8 @@ Usage::
     python -m cdc_connector_spark.streaming.dlq replay --sink-path /data/t [--batch-id 7]
     python -m cdc_connector_spark.streaming.dlq vacuum --sink-path /data/t --retention-hours 168
 
-Exit codes: 0 = ok (replay: all drained), 1 = replay left batches parked.
+Exit codes: 0 = ok (replay: all drained), 1 = replay left batches parked,
+2 = replay found no table at ``--sink-path`` (nothing is created there).
 """
 
 from __future__ import annotations
@@ -47,15 +48,19 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps({"removed": removed, "remaining": quarantined_batch_ids(qdir)}))
         return 0
 
-    # replay: needs a session + the sink reopened from its own _META
+    # replay: needs a session + the sink reopened from its own log
     import shutil
 
     from cdc_connector_spark.changelog.envelope import flatten_envelope
-    from cdc_connector_spark.changelog.sink import ParquetMergeSink
+    from cdc_connector_spark.changelog.txlog import TxLogMergeSink
     from cdc_connector_spark.session import get_spark
 
     spark = get_spark("dlq-replay")
-    sink = ParquetMergeSink.open(spark, args.sink_path)
+    try:
+        sink = TxLogMergeSink(spark, args.sink_path)
+    except ValueError as e:
+        print(json.dumps({"error": str(e)}))
+        return 2
     ids = [args.batch_id] if args.batch_id is not None else quarantined_batch_ids(qdir)
     replayed, failed = [], []
     for bid in ids:

@@ -4,7 +4,7 @@ Spark-first replacement for the reference's Kafka-Connect plane (SURVEY.md
 §3.2): ``readStream`` over an envelope stream (file source here; the same
 code takes Kafka with ``format("kafka")`` + ``parse_json_envelope``) →
 flatten (P1) → per-table SMT analogues (P2/P3) → ``foreachBatch`` MERGE
-applier (W5 + ST2) into a ParquetMergeSink, with:
+applier (W5 + ST2) into a TxLogMergeSink, with:
 
 - checkpointing per query (ST6)
 - quarantine/DLQ for failed batches (ST7): bad batch parks as parquet under
@@ -22,21 +22,21 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from cdc_connector_spark.changelog.envelope import apply_casts, apply_renames, envelope_schema, flatten_envelope
-from cdc_connector_spark.changelog.sink import ParquetMergeSink
+from cdc_connector_spark.changelog.txlog import TxLogMergeSink
 
 
 class ChangelogStream:
     """One logical table-stream: envelope source dir → merge sink.
 
-    ``sink`` is any object with ``.apply(DataFrame)`` and ``.path`` —
-    ``ParquetMergeSink`` (link-forward MVCC) or ``TxLogMergeSink``
-    (transaction-log lakehouse format, the scale path)."""
+    ``sink`` is a ``TxLogMergeSink`` or any object with
+    ``.apply(DataFrame)`` and ``.path`` (``merge_on_read`` also needs
+    ``.apply_delta`` and ``.compact``)."""
 
     def __init__(
         self,
         spark: SparkSession,
         source_dir: str,
-        sink: ParquetMergeSink | "object",
+        sink: TxLogMergeSink | "object",
         row_schema: T.StructType,
         key_cols: list[str],
         checkpoint_dir: str,

@@ -21,12 +21,12 @@ import uuid
 from pyspark.sql import functions as F
 
 from cdc_connector_spark.changelog.envelope import envelope_schema
-from cdc_connector_spark.changelog.sink import ParquetMergeSink
+from cdc_connector_spark.changelog.txlog import TxLogMergeSink
 from cdc_connector_spark.streaming.pipeline import ChangelogStream
 
 
 class LiveProbe:
-    def __init__(self, spark, stream: ChangelogStream, sink: ParquetMergeSink, value_col: str = "val") -> None:
+    def __init__(self, spark, stream: ChangelogStream, sink: TxLogMergeSink, value_col: str = "val") -> None:
         self.spark = spark
         self.stream = stream
         self.sink = sink

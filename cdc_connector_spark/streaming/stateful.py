@@ -1,6 +1,6 @@
 """Custom stateful streaming operator: continuous latest-row-per-key.
 
-The ``foreachBatch``+MERGE applier (changelog/sink.py) materializes the CDC
+The ``foreachBatch``+MERGE applier (changelog/txlog.py) materializes the CDC
 state into a table per micro-batch. This module is the other idiomatic
 option — ``applyInPandasWithState`` keeps the latest row per key in Spark's
 keyed state store and EMITS the updated rows each trigger, so downstream

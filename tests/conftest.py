@@ -1,35 +1,12 @@
 from __future__ import annotations
 
 import os
-import subprocess
 
 import pytest
 
 from cdc_connector_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-
-
-def pytest_configure(config):
-    """Install the repo's pre-commit tripwire hook on first test run, so a
-    fresh clone gets the out-of-window oracle gate without any manual step
-    (structural enforcement — the hook itself honors SKIP_TAIL_TRIPWIRE).
-    Best-effort: never fails the test session (e.g. exported tarball)."""
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    if not os.path.isdir(os.path.join(root, ".githooks")):
-        return
-    try:
-        cur = subprocess.run(
-            ["git", "config", "--get", "core.hooksPath"],
-            cwd=root, capture_output=True, text=True, timeout=10,
-        ).stdout.strip()
-        if not cur:
-            subprocess.run(
-                ["git", "config", "core.hooksPath", ".githooks"],
-                cwd=root, capture_output=True, timeout=10,
-            )
-    except (OSError, subprocess.SubprocessError):
-        pass
 
 
 @pytest.fixture(scope="session")

@@ -20,7 +20,6 @@ from cdc_connector_spark.changelog.ddl import (
     WidenColumn,
     apply_changes_with_ddl,
     apply_ddl,
-    migrate_sink_schema,
     normalize_batch,
 )
 
@@ -205,23 +204,20 @@ def test_replay_idempotent_across_ddl_boundary(spark):
     assert sorted(once.collect()) == sorted(twice.collect())
 
 
-@pytest.mark.parametrize("sink_kind", ["parquet", "txlog"])
-def test_sink_schema_migration_round_trip(spark, sink_kind):
-    """migrate_sink_schema on both merge sinks: rename + widen + drop, then
-    a post-DDL batch applies and reads back correctly."""
-    from cdc_connector_spark.changelog.sink import ParquetMergeSink
+def test_sink_schema_migration_round_trip(spark):
+    """``TxLogMergeSink.ddl``: rename + widen + drop, then a post-DDL batch
+    applies and reads back correctly."""
     from cdc_connector_spark.changelog.txlog import TxLogMergeSink
 
-    cls = ParquetMergeSink if sink_kind == "parquet" else TxLogMergeSink
     with tempfile.TemporaryDirectory() as root:
-        sink = cls(spark, os.path.join(root, "t"), ["id"], num_buckets=4)
+        sink = TxLogMergeSink(spark, os.path.join(root, "t"), ["id"], num_buckets=4)
         sink.overwrite(_state(spark))
         ddl = [
             RenameColumn("user", "owner_user_id"),
             WidenColumn("qty", "bigint"),
             DropColumn("score"),
         ]
-        migrate_sink_schema(sink, ddl)
+        sink.ddl(ddl)
         post = _batch(
             spark,
             [(3, "carol", 2**31 + 7, "c", 100, 1)],
@@ -243,7 +239,7 @@ def test_streaming_rename_ddl_mixed_shapes(spark, tmp_path):
     from pyspark.sql import types as T
 
     from cdc_connector_spark.changelog.envelope import envelope_schema
-    from cdc_connector_spark.changelog.sink import ParquetMergeSink
+    from cdc_connector_spark.changelog.txlog import TxLogMergeSink
     from cdc_connector_spark.streaming.pipeline import ChangelogStream
 
     union_schema = T.StructType(
@@ -255,7 +251,7 @@ def test_streaming_rename_ddl_mixed_shapes(spark, tmp_path):
     )
     src = tmp_path / "in"
     src.mkdir()
-    sink = ParquetMergeSink(spark, str(tmp_path / "sink"), ["id"], num_buckets=2)
+    sink = TxLogMergeSink(spark, str(tmp_path / "sink"), ["id"], num_buckets=2)
     sink.overwrite(
         spark.createDataFrame([(1, "alice")], "id long, owner_user_id string")
     )

@@ -213,7 +213,7 @@ def test_live_cdc_parameterized_column_types(spark, pg, tmp_path):
     from decimal import Decimal
 
     from cdc_connector_spark.changelog.envelope import flatten_envelope
-    from cdc_connector_spark.changelog.sink import ParquetMergeSink
+    from cdc_connector_spark.changelog.txlog import TxLogMergeSink
     from cdc_connector_spark.sources.pg_logical import (
         changes_to_envelope,
         create_slot,
@@ -247,7 +247,7 @@ def test_live_cdc_parameterized_column_types(spark, pg, tmp_path):
         # and the envelope applies cleanly against the introspected schema
         row_schema = pg_table_schema(pg, "typed_t")
         env = changes_to_envelope(spark, changes, row_schema, table="typed_t")
-        sink = ParquetMergeSink(spark, str(tmp_path / "typed"), ["id"], num_buckets=2)
+        sink = TxLogMergeSink(spark, str(tmp_path / "typed"), ["id"], num_buckets=2)
         sink.apply(flatten_envelope(env, key_cols=["id"]))
         rows = sink.read().collect()
         assert len(rows) == 1
@@ -397,7 +397,7 @@ def test_live_logical_decoding_cdc_end_to_end(spark, pg, tmp_path):
     from pyspark.sql import types as T
 
     from cdc_connector_spark.changelog.envelope import flatten_envelope
-    from cdc_connector_spark.changelog.sink import ParquetMergeSink
+    from cdc_connector_spark.changelog.txlog import TxLogMergeSink
     from cdc_connector_spark.sources.pg_logical import (
         changes_to_envelope,
         create_slot,
@@ -412,7 +412,7 @@ def test_live_logical_decoding_cdc_end_to_end(spark, pg, tmp_path):
     # snapshot bootstrap (op 'r' analogue: plain overwrite)
     spark.dataSource.register(PostgresCopyDataSource)
     snap = spark.read.format("pgcopy").options(**pg.options(), table="acct").load()
-    sink = ParquetMergeSink(spark, str(tmp_path / "acct"), ["id"], num_buckets=4)
+    sink = TxLogMergeSink(spark, str(tmp_path / "acct"), ["id"], num_buckets=4)
     sink.overwrite(snap)
 
     create_slot(pg, "cdc_test")
@@ -510,7 +510,7 @@ def test_live_cdc_structured_streaming_source(spark, pg, tmp_path):
     from pyspark.sql import types as T
 
     from cdc_connector_spark.changelog.envelope import flatten_envelope
-    from cdc_connector_spark.changelog.sink import ParquetMergeSink
+    from cdc_connector_spark.changelog.txlog import TxLogMergeSink
     from cdc_connector_spark.sources.pg_logical import (
         PostgresCdcStreamSource,
         create_slot,
@@ -520,7 +520,7 @@ def test_live_cdc_structured_streaming_source(spark, pg, tmp_path):
     run_sql(pg, "DROP TABLE IF EXISTS st_t")
     run_sql(pg, "CREATE TABLE st_t (id bigint PRIMARY KEY, v text)")
     spark.dataSource.register(PostgresCdcStreamSource)
-    sink = ParquetMergeSink(spark, str(tmp_path / "st_t"), ["id"], num_buckets=2)
+    sink = TxLogMergeSink(spark, str(tmp_path / "st_t"), ["id"], num_buckets=2)
 
     create_slot(pg, "stream_test")
     try:
@@ -564,13 +564,13 @@ def test_live_cdc_poll_loop_heartbeat(spark, pg, tmp_path):
     per poll, sink converges after each."""
     from pyspark.sql import types as T
 
-    from cdc_connector_spark.changelog.sink import ParquetMergeSink
+    from cdc_connector_spark.changelog.txlog import TxLogMergeSink
     from cdc_connector_spark.sources.pg_logical import create_slot, drop_slot, run_cdc_poll
 
     run_sql(pg, "DROP TABLE IF EXISTS poll_t")
     run_sql(pg, "CREATE TABLE poll_t (id bigint PRIMARY KEY, v text)")
     spark.dataSource.register(PostgresCopyDataSource)
-    sink = ParquetMergeSink(spark, str(tmp_path / "poll_t"), ["id"], num_buckets=2)
+    sink = TxLogMergeSink(spark, str(tmp_path / "poll_t"), ["id"], num_buckets=2)
     row_schema = T.StructType([T.StructField("id", T.LongType()), T.StructField("v", T.StringType())])
 
     create_slot(pg, "poll_test")
@@ -592,7 +592,7 @@ def test_live_cdc_poll_loop_heartbeat(spark, pg, tmp_path):
 def test_live_snapshot_to_merge_sink_end_to_end(spark, pg, lineitem, tmp_path):
     """The reference's migration flow, engine-shaped: live DB → partitioned
     snapshot → merge sink → validation checks all green."""
-    from cdc_connector_spark.changelog.sink import ParquetMergeSink
+    from cdc_connector_spark.changelog.txlog import TxLogMergeSink
     from cdc_connector_spark.validation.checks import run_all_checks
 
     # testdata lineitem plants duplicate PKs (CDC realism) — a faithful
@@ -606,7 +606,7 @@ def test_live_snapshot_to_merge_sink_end_to_end(spark, pg, lineitem, tmp_path):
                  partition_column="l_orderkey", num_partitions="2")
         .load()
     )
-    sink = ParquetMergeSink(spark, str(tmp_path / "sink"), ["l_orderkey", "l_linenumber"], num_buckets=4)
+    sink = TxLogMergeSink(spark, str(tmp_path / "sink"), ["l_orderkey", "l_linenumber"], num_buckets=4)
     sink.overwrite(src)
     report = run_all_checks("li_small", src, sink.read(), ["l_orderkey", "l_linenumber"])
     assert report.verdict == "PASS"

@@ -2,7 +2,7 @@
 
 from pyspark.sql import types as T
 
-from cdc_connector_spark.changelog.sink import ParquetMergeSink
+from cdc_connector_spark.changelog.txlog import TxLogMergeSink
 from cdc_connector_spark.streaming.pipeline import ChangelogStream
 from cdc_connector_spark.streaming.probe import LiveProbe
 from cdc_connector_spark.validation.drift_cli import main as drift_main
@@ -13,7 +13,7 @@ ROW_SCHEMA = T.StructType([T.StructField("id", T.LongType()), T.StructField("val
 def test_live_probe_round_trip(spark, tmp_path):
     src = tmp_path / "in"
     src.mkdir()
-    sink = ParquetMergeSink(spark, str(tmp_path / "sink"), ["id"], num_buckets=4)
+    sink = TxLogMergeSink(spark, str(tmp_path / "sink"), ["id"], num_buckets=4)
     sink.overwrite(spark.createDataFrame([(i, f"v{i}") for i in range(20)], ROW_SCHEMA))
     stream = ChangelogStream(
         spark, str(src), sink, ROW_SCHEMA, ["id"], checkpoint_dir=str(tmp_path / "ckpt")

@@ -1,14 +1,13 @@
-"""ParquetMergeSink versioning + end-to-end streaming changelog apply."""
+"""TxLogMergeSink merge semantics + end-to-end streaming changelog apply."""
 
 import os
-import time
 
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cdc_connector_spark.changelog.envelope import envelope_schema, flatten_envelope
-from cdc_connector_spark.changelog.sink import ParquetMergeSink
+from cdc_connector_spark.changelog.txlog import TxLogMergeSink
 from cdc_connector_spark.streaming.pipeline import ChangelogStream
 
 ROW_SCHEMA = T.StructType(
@@ -22,7 +21,7 @@ def _env_df(spark, rows):
 
 
 def test_sink_bootstrap_apply_versions(spark, tmp_path):
-    sink = ParquetMergeSink(spark, str(tmp_path / "t"), ["id"], num_buckets=2)
+    sink = TxLogMergeSink(spark, str(tmp_path / "t"), ["id"], num_buckets=2)
     assert sink.read() is None
     sink.overwrite(spark.createDataFrame([(1, "a"), (2, "b")], ROW_SCHEMA))
     assert sink.current_version() == 0 and sink.count() == 2
@@ -44,18 +43,10 @@ def test_sink_bootstrap_apply_versions(spark, tmp_path):
     assert rows == {1: "a2", 3: "c"}
 
 
-def test_sink_vacuum_keeps_recent(spark, tmp_path):
-    sink = ParquetMergeSink(spark, str(tmp_path / "t"), ["id"], keep_versions=2)
-    for i in range(4):
-        sink.overwrite(spark.createDataFrame([(i, "x")], ROW_SCHEMA))
-    versions = sorted(d for d in os.listdir(sink.path) if d.startswith("v="))
-    assert versions == ["v=2", "v=3"]
-
-
 def test_streaming_changelog_end_to_end(spark, tmp_path):
     src = tmp_path / "stream_in"
     src.mkdir()
-    sink = ParquetMergeSink(spark, str(tmp_path / "sink"), ["id"])
+    sink = TxLogMergeSink(spark, str(tmp_path / "sink"), ["id"])
     # two files of envelope events, incl. replay duplicate + delete + tie
     _env_df(
         spark,
@@ -99,7 +90,7 @@ def test_quarantine_dlq_on_bad_batch(spark, tmp_path, monkeypatch):
     NOT kill the stream or corrupt the sink."""
     src = tmp_path / "stream_in"
     src.mkdir()
-    sink = ParquetMergeSink(spark, str(tmp_path / "sink"), ["id"])
+    sink = TxLogMergeSink(spark, str(tmp_path / "sink"), ["id"])
     sink.overwrite(spark.createDataFrame([(1, "a")], ROW_SCHEMA))
 
     _env_df(spark, [(None, {"id": 2, "val": "b"}, "c", 10, 1)]).coalesce(1).write.mode(
@@ -172,38 +163,39 @@ def test_dlq_cli_list_and_vacuum(tmp_path, capsys):
     assert out["removed"] == [3] and out["remaining"] == []
 
 
-def test_apply_prunes_untouched_buckets(spark, tmp_path):
-    """File-pruning MERGE: a 1-key batch rewrites only that key's bucket;
-    every other bucket hard-links forward (same inode)."""
-    sink = ParquetMergeSink(spark, str(tmp_path / "t"), ["id"], num_buckets=8)
-    sink.overwrite(spark.createDataFrame([(i, f"v{i}") for i in range(100)], ROW_SCHEMA))
+def test_dlq_cli_replay(spark, tmp_path, capsys, monkeypatch):
+    """``replay`` reopens the sink from its path alone, applies the parked
+    batch and drains the DLQ; a path that holds no table exits non-zero
+    and leaves nothing behind."""
+    import json as _json
 
-    batch = flatten_envelope(
-        _env_df(spark, [({"id": 7, "val": "v7"}, {"id": 7, "val": "V7!"}, "u", 10, 1)]),
-        key_cols=["id"],
+    from cdc_connector_spark.streaming.dlq import main as dlq_main
+
+    # reuse the test session instead of re-configuring it
+    monkeypatch.setattr("cdc_connector_spark.session.get_spark", lambda *a, **k: spark)
+    sink = TxLogMergeSink(spark, str(tmp_path / "sink"), ["id"], num_buckets=2)
+    sink.overwrite(spark.createDataFrame([(1, "a")], ROW_SCHEMA))
+    # a parked batch is the raw envelope micro-batch, as the stream writes it
+    qdir = os.path.join(sink.path, "_quarantine")
+    _env_df(spark, [(None, {"id": 2, "val": "b"}, "c", 10, 1)]).write.parquet(
+        os.path.join(qdir, "batch=4")
     )
-    sink.apply(batch)
 
-    v0, v1 = sink.path + "/v=0", sink.path + "/v=1"
-    rewritten, linked = [], []
-    for name in sorted(os.listdir(v1)):
-        if not name.startswith("__bucket="):
-            continue
-        old = os.path.join(v0, name)
-        new = os.path.join(v1, name)
-        old_inodes = {os.stat(os.path.join(old, f)).st_ino for f in os.listdir(old) if f.endswith(".parquet")}
-        new_inodes = {os.stat(os.path.join(new, f)).st_ino for f in os.listdir(new) if f.endswith(".parquet")}
-        (linked if old_inodes == new_inodes else rewritten).append(name)
-    assert len(rewritten) == 1 and len(linked) == 7  # only key 7's bucket rewrote
+    assert dlq_main(["replay", "--sink-path", sink.path]) == 0
+    assert _json.loads(capsys.readouterr().out) == {"replayed": [4], "failed": []}
+    assert os.listdir(qdir) == []
+    assert {r["id"]: r["val"] for r in sink.read().collect()} == {1: "a", 2: "b"}
 
-    rows = {r["id"]: r["val"] for r in sink.read().collect()}
-    assert rows[7] == "V7!" and rows[0] == "v0" and len(rows) == 100
+    typo = tmp_path / "no_such_sink"
+    assert dlq_main(["replay", "--sink-path", str(typo)]) == 2
+    assert "key_cols" in _json.loads(capsys.readouterr().out)["error"]
+    assert not typo.exists()
 
 
 def test_sink_schema_evolution_merge_schema(spark, tmp_path):
     """ST8 at the sink level: a batch carrying a NEW column widens the table;
     merge_schema=True reconciles mixed bucket schemas on read."""
-    sink = ParquetMergeSink(spark, str(tmp_path / "t"), ["id"], num_buckets=4, merge_schema=True)
+    sink = TxLogMergeSink(spark, str(tmp_path / "t"), ["id"], num_buckets=4, merge_schema=True)
     sink.overwrite(spark.createDataFrame([(1, "a"), (2, "b")], ROW_SCHEMA))
 
     widened = spark.createDataFrame(
@@ -225,7 +217,7 @@ def test_sink_composite_key(spark, tmp_path):
             T.StructField("val", T.StringType()),
         ]
     )
-    sink = ParquetMergeSink(spark, str(tmp_path / "t"), ["ok", "ln"], num_buckets=4)
+    sink = TxLogMergeSink(spark, str(tmp_path / "t"), ["ok", "ln"], num_buckets=4)
     sink.overwrite(spark.createDataFrame([(1, 1, "a"), (1, 2, "b"), (2, 1, "c")], schema))
     batch = flatten_envelope(
         spark.createDataFrame(
@@ -246,37 +238,39 @@ def test_sink_num_buckets_persisted(spark, tmp_path):
     """Reopening with a different num_buckets must fail, and a reopen with
     no num_buckets must adopt the stored layout (regression: silent
     modulus mismatch corrupted the merge)."""
-    sink = ParquetMergeSink(spark, str(tmp_path / "t"), ["id"], num_buckets=8)
+    sink = TxLogMergeSink(spark, str(tmp_path / "t"), ["id"], num_buckets=8)
     sink.overwrite(spark.createDataFrame([(1, "a")], ROW_SCHEMA))
-    reopened = ParquetMergeSink(spark, str(tmp_path / "t"), ["id"])
+    reopened = TxLogMergeSink(spark, str(tmp_path / "t"), ["id"])
     assert reopened.num_buckets == 8
     with pytest.raises(ValueError, match="num_buckets"):
-        ParquetMergeSink(spark, str(tmp_path / "t"), ["id"], num_buckets=32)
+        TxLogMergeSink(spark, str(tmp_path / "t"), ["id"], num_buckets=32)
 
 
 def test_sink_retry_after_partial_write_is_clean(spark, tmp_path):
-    """A stale never-flipped version dir from a crashed attempt must be
-    clobbered, not appended into (regression: duplicate rows on retry)."""
-    sink = ParquetMergeSink(spark, str(tmp_path / "t"), ["id"], num_buckets=2)
+    """A crashed apply leaves staged data files and a staged commit file
+    that was never published; neither may become visible (regression:
+    duplicate rows on retry)."""
+    sink = TxLogMergeSink(spark, str(tmp_path / "t"), ["id"], num_buckets=2)
     df = spark.createDataFrame([(1, "a"), (2, "b")], ROW_SCHEMA)
     sink.overwrite(df)
-    # simulate a crashed apply: partial v=1 exists, _VERSION still 0
-    df.withColumn("__bucket", F.lit(0)).write.partitionBy("__bucket").parquet(
-        str(tmp_path / "t" / "v=1")
-    )
-    assert sink.current_version() == 0
+    # simulate a crashed apply: its files are staged, its commit is not
+    staged = os.path.join(sink.data_dir, "crashed")
+    df.withColumn("__bucket", F.lit(0)).write.partitionBy("__bucket").parquet(staged)
+    with open(os.path.join(sink.log_dir, ".tmp.crashed.json"), "w") as f:
+        f.write('{"add":{"path":"data/crashed/__bucket=0","bucket":0}}\n')
+    assert sink.current_version() == 0 and sink.count() == 2
     batch = flatten_envelope(
         _env_df(spark, [({"id": 1, "val": "a"}, {"id": 1, "val": "a2"}, "u", 10, 1)]),
         key_cols=["id"],
     )
-    sink.apply(batch)  # retried apply writes v=1 again
+    sink.apply(batch)  # the retried apply commits version 1
     rows = {r["id"]: r["val"] for r in sink.read().collect()}
     assert rows == {1: "a2", 2: "b"}
     assert sink.count() == 2  # no duplicates from the stale partial
 
 
 def test_sink_schema_widening_requires_merge_schema(spark, tmp_path):
-    sink = ParquetMergeSink(spark, str(tmp_path / "t"), ["id"], num_buckets=2)
+    sink = TxLogMergeSink(spark, str(tmp_path / "t"), ["id"], num_buckets=2)
     sink.overwrite(spark.createDataFrame([(1, "a")], ROW_SCHEMA))
     widened = spark.createDataFrame(
         [(1, "a2", "x", "u", 10, 1)],
@@ -288,9 +282,9 @@ def test_sink_schema_widening_requires_merge_schema(spark, tmp_path):
 
 def test_sink_schema_widening_guard_covers_new_buckets(spark, tmp_path):
     """ST8 guard hole: a widening batch whose keys all land in buckets that
-    do NOT yet exist in the current version (current_touched is None) must
-    still be refused — the comparison falls back to the table schema."""
-    sink = ParquetMergeSink(spark, str(tmp_path / "t"), ["id"], num_buckets=8)
+    hold NO files yet (nothing to read) must still be refused — the guard
+    compares against the table schema recorded in the log."""
+    sink = TxLogMergeSink(spark, str(tmp_path / "t"), ["id"], num_buckets=8)
     # find two ids hashing to DIFFERENT buckets
     probe = spark.createDataFrame([(i,) for i in range(1, 50)], "id bigint")
     by_bucket = {
@@ -308,118 +302,3 @@ def test_sink_schema_widening_guard_covers_new_buckets(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="merge_schema=True"):
         sink.apply(widened)
-
-
-def test_sink_bootstrap_apply_holds_lock(spark, tmp_path):
-    """The bootstrap branch of apply() must respect the writer lock (two
-    first-writers racing would both take the overwrite path)."""
-    sink = ParquetMergeSink(spark, str(tmp_path / "t"), ["id"], num_buckets=2)
-    lock = os.path.join(sink.path, "_LOCK")
-    with open(lock, "w") as f:
-        f.write("held")
-    batch = flatten_envelope(
-        _env_df(spark, [(None, {"id": 1, "val": "a"}, "c", 10, 1)]), key_cols=["id"]
-    )
-    t0 = time.monotonic()
-    with pytest.raises(TimeoutError):
-        orig = sink._writer_lock
-
-        def short_lock(timeout_s=0.5, stale_s=3600.0):
-            return orig(timeout_s=timeout_s, stale_s=stale_s)
-
-        sink._writer_lock = short_lock
-        sink.apply(batch)
-    assert time.monotonic() - t0 < 30
-    os.unlink(lock)
-    sink._writer_lock = orig
-    sink.apply(batch)
-    assert sink.count() == 1
-
-
-def test_link_forward_many_buckets(spark, tmp_path):
-    """Untouched buckets link forward via the thread pool: a 256-bucket
-    table applying a 1-key batch must keep every row and stay metadata-only
-    for the other ~255 buckets."""
-    sink = ParquetMergeSink(spark, str(tmp_path / "t"), ["id"], num_buckets=256)
-    base = spark.createDataFrame([(i, f"v{i}") for i in range(600)], ROW_SCHEMA)
-    sink.overwrite(base)
-    batch = flatten_envelope(
-        _env_df(spark, [({"id": 5, "val": "v5"}, {"id": 5, "val": "NEW"}, "u", 10, 1)]),
-        key_cols=["id"],
-    )
-    t0 = time.monotonic()
-    sink.apply(batch)
-    link_wall = time.monotonic() - t0
-    assert sink.count() == 600
-    assert {r["val"] for r in sink.read().filter("id = 5").collect()} == {"NEW"}
-    # hard links, not copies: same inode in v0 and v1 for an untouched file
-    v0 = os.path.join(sink.path, "v=0")
-    v1 = os.path.join(sink.path, "v=1")
-    shared = 0
-    for d in os.listdir(v0):
-        if not d.startswith("__bucket="):
-            continue
-        for fn in os.listdir(os.path.join(v0, d)):
-            f0, f1 = os.path.join(v0, d, fn), os.path.join(v1, d, fn)
-            if os.path.isfile(f0) and os.path.isfile(f1):
-                if os.stat(f0).st_ino == os.stat(f1).st_ino:
-                    shared += 1
-    assert shared > 100, f"expected linked files across versions, got {shared}"
-    assert link_wall < 120, f"apply with 256-bucket link-forward took {link_wall:.1f}s"
-
-
-def test_link_forward_10k_buckets_wall_clock(spark, tmp_path):
-    """The threaded link loop must hold the O(1)-per-bucket claim at 10k+
-    buckets: pure-filesystem drive of the exact code path _apply_locked
-    runs (no Spark jobs), asserting seconds, not minutes."""
-    sink = ParquetMergeSink(spark, str(tmp_path / "t"), ["id"], num_buckets=10_000)
-    src_root = tmp_path / "t" / "v=0"
-    dst_root = tmp_path / "t" / "v=1"
-    for b in range(10_000):
-        d = src_root / f"__bucket={b}"
-        d.mkdir(parents=True)
-        (d / "part-0.parquet").write_bytes(b"x")
-    names = [f"__bucket={b}" for b in range(10_000)]
-    from concurrent.futures import ThreadPoolExecutor
-
-    t0 = time.monotonic()
-    with ThreadPoolExecutor(max_workers=32) as pool:
-        list(
-            pool.map(
-                lambda name: sink._link_forward(str(src_root / name), str(dst_root / name)),
-                names,
-            )
-        )
-    wall = time.monotonic() - t0
-    assert sum(1 for _ in os.listdir(dst_root)) == 10_000
-    assert os.stat(src_root / "__bucket=7" / "part-0.parquet").st_ino == os.stat(
-        dst_root / "__bucket=7" / "part-0.parquet"
-    ).st_ino
-    assert wall < 30, f"10k-bucket link-forward took {wall:.1f}s"
-
-
-def test_writer_lock_blocks_and_reclaims(spark, tmp_path):
-    sink = ParquetMergeSink(spark, str(tmp_path / "t"), ["id"], num_buckets=2)
-    df = spark.createDataFrame([(1, "a")], ROW_SCHEMA)
-    sink.overwrite(df)
-    lock = os.path.join(sink.path, "_LOCK")
-    assert not os.path.exists(lock)  # released after write
-
-    # a held (fresh) lock makes the next writer time out
-    with open(lock, "w") as f:
-        f.write("held")
-    import pytest as _pytest
-
-    batch = flatten_envelope(
-        _env_df(spark, [(None, {"id": 2, "val": "b"}, "c", 10, 1)]), key_cols=["id"]
-    )
-    with _pytest.raises(TimeoutError):
-        with sink._writer_lock(timeout_s=0.5):
-            pass
-
-    # a STALE lock is reclaimed and the write proceeds
-    old = time.time() - 7200
-    os.utime(lock, (old, old))
-    sink.apply(batch)
-    assert sink.count() == 2
-    assert not os.path.exists(lock)

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import types as T
 
 from cdc_connector_spark.changelog.envelope import envelope_schema
-from cdc_connector_spark.changelog.sink import ParquetMergeSink
+from cdc_connector_spark.changelog.txlog import TxLogMergeSink
 from cdc_connector_spark.streaming.metrics import (
     PROGRESS_SCHEMA,
     StreamingMetrics,
@@ -115,7 +115,7 @@ def test_metrics_over_real_changelog_stream(spark, tmp_path):
     and report() rolls it up per stream."""
     src = tmp_path / "in"
     src.mkdir()
-    sink = ParquetMergeSink(spark, str(tmp_path / "sink"), ["id"])
+    sink = TxLogMergeSink(spark, str(tmp_path / "sink"), ["id"])
     _env_df(
         spark,
         [

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cdc_connector_spark.changelog.envelope import envelope_schema
-from cdc_connector_spark.changelog.sink import ParquetMergeSink
+from cdc_connector_spark.changelog.txlog import TxLogMergeSink
 from cdc_connector_spark.snapshot.cli import main as migrate_main
 from cdc_connector_spark.streaming.pipeline import ChangelogStream
 from cdc_connector_spark.validation.drift_cli import main as drift_main
@@ -31,7 +31,7 @@ def test_full_cycle(spark, tmp_path):
     # 2) switch to streaming: bootstrap merge sink from the snapshot, apply
     #    a change stream (update + delete + insert)
     row_schema = T.StructType([f for f in migrated.schema.fields])
-    merge_sink = ParquetMergeSink(spark, str(tmp_path / "merged/orders"), ["o_orderkey"], num_buckets=8)
+    merge_sink = TxLogMergeSink(spark, str(tmp_path / "merged/orders"), ["o_orderkey"], num_buckets=8)
     merge_sink.overwrite(migrated)
 
     some = migrated.orderBy("o_orderkey").limit(2).collect()

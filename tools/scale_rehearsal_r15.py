@@ -185,7 +185,7 @@ def fam_changelog_apply(spark, sf_dir):
     import shutil
     import tempfile
 
-    from cdc_connector_spark.changelog.sink import ParquetMergeSink
+    from cdc_connector_spark.changelog.txlog import TxLogMergeSink
     from cdc_connector_spark.tables import load_table
 
     orders = load_table(spark, sf_dir, "orders")
@@ -206,7 +206,7 @@ def fam_changelog_apply(spark, sf_dir):
     n_events = changes.count()
     root = tempfile.mkdtemp(prefix="r15_apply_")
     try:
-        sink = ParquetMergeSink(spark, os.path.join(root, "orders"), ["o_orderkey"], num_buckets=64)
+        sink = TxLogMergeSink(spark, os.path.join(root, "orders"), ["o_orderkey"], num_buckets=64)
         sink.overwrite(orders)
         t0 = time.time()
         sink.apply(changes)
