@@ -1,6 +1,7 @@
-# Developer entry points. `make bootstrap` installs the opt-in pre-commit
-# tail-tripwire hook (.githooks/pre-commit — out-of-window oracle gate;
-# SKIP_TAIL_TRIPWIRE=1 to bypass per-commit).
+# Developer entry points. Only `make bootstrap` installs the opt-in
+# pre-commit tail-tripwire hook (.githooks/pre-commit — out-of-window oracle
+# gate; SKIP_TAIL_TRIPWIRE=1 to bypass per-commit); `make test` leaves git
+# config alone.
 
 .PHONY: bootstrap test oracle tripwire bench plans docs
 
@@ -8,7 +9,7 @@ bootstrap:
 	git config core.hooksPath .githooks
 	@echo "pre-commit tail tripwire installed (core.hooksPath=.githooks)"
 
-test: bootstrap
+test:
 	python -m pytest tests/ -q
 
 oracle:

@@ -21,12 +21,19 @@ implemented directly):
   "win the name" protocol Delta uses on HDFS/ABFS). Readers can never see a
   half-written commit; a crashed writer leaves only an invisible orphan
   data dir.
-- **Optimistic concurrency, no lock.** On losing a version race the writer
-  re-reads the log; if the winning commit touched a DISJOINT bucket set it
-  simply re-publishes the same files at the next version (its merge inputs
-  are untouched), otherwise it recomputes the merge from the new snapshot.
-  Writers on different key ranges therefore never serialize a Spark job
-  behind each other — the property a lock-based sink cannot offer.
+- **Optimistic concurrency, no lock.** Every write op runs the same commit
+  loop (``_commit``): snapshot the log, prepare the commit against it,
+  stage data files, publish put-if-absent. On losing a version race the
+  writer re-reads the log and prepares again, staging again only when the
+  race invalidated its staged files. Each op names what its files depend
+  on: ``overwrite``/``append``/``apply_delta`` only the column mapping,
+  ``apply`` its input files (the touched buckets') and the mapping,
+  ``compact`` any conflict; ``ddl``/``restore`` stage nothing. So an
+  ``apply`` whose winner touched a DISJOINT bucket set re-publishes the
+  same files at the next version, and writers on different key ranges
+  never serialize a Spark job behind each other — the property a
+  lock-based sink cannot offer. Staged files that are never published are
+  deleted; each commit records its ``attempts`` and ``stage_ms``.
 - **Snapshot isolation + time travel.** A reader resolves a version's file
   set once and is immune to concurrent commits; ``read(version=K)`` replays
   to any retained version. ``vacuum`` deletes files *removed* more than
@@ -52,6 +59,7 @@ import json
 import os
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -481,22 +489,25 @@ class TxLogMergeSink:
     @staticmethod
     def _extend_mapping(
         mapping: dict[str, str], tombstones: list[str], logical_cols: list[str]
-    ) -> tuple[dict[str, str], bool]:
+    ) -> dict[str, str]:
         """Assign stable physical names to never-seen logical columns. A
         fresh column reuses its own name unless that physical is taken by a
         live mapping entry or a tombstone (a re-added column after a drop
-        must NOT resurrect the dropped physical values)."""
+        must NOT resurrect the dropped physical values); then it takes the
+        first free ``<name>_<n>``. Deterministic, so every commit attempt
+        against the same snapshot derives the same physical names."""
         out = dict(mapping)
         used = set(out.values()) | set(tombstones)
-        changed = False
         for c in logical_cols:
             if c in out or c.startswith("__"):
                 continue
-            phys = c if c not in used else f"{c}_{uuid.uuid4().hex[:8]}"
+            phys, n = c, 0
+            while phys in used:
+                n += 1
+                phys = f"{c}_{n}"
             out[c] = phys
             used.add(phys)
-            changed = True
-        return out, changed
+        return out
 
     # -- public surface ------------------------------------------------------
     def exists(self) -> bool:
@@ -589,7 +600,8 @@ class TxLogMergeSink:
         return df
 
     def history(self) -> list[dict]:
-        """Commit audit trail (operation, touched buckets, files in/out)."""
+        """Commit audit trail (operation, touched buckets, files in/out,
+        commit attempts and staging wall time ``stage_ms``)."""
         out = []
         v = 0
         while (actions := self._read_commit(v)) is not None:
@@ -728,160 +740,106 @@ class TxLogMergeSink:
             .unionByName(_emit(o_ex & n_ex & changed, "n", "update_postimage"))
         )
 
-    def overwrite(self, df: DataFrame) -> None:
-        """Full snapshot load (S10 analogue): add the new file set, remove
-        every live file, in one atomic commit.
+    # -- the commit loop -----------------------------------------------------
+    # Every write op is a ``prepare(snap)`` run once per attempt against a
+    # fresh snapshot. It returns None when there is nothing to commit, else
+    # ``(key, stage, actions)``: ``stage()`` writes the op's data files and
+    # returns their add actions (``stage`` is None for metadata-only ops),
+    # ``key`` names everything those files depend on, and ``actions`` are
+    # the commit's other actions, its commitInfo last.
 
-        Conflict retry is STAGE-ONCE (r12, the r11 review's deferred
-        lead): the staged data files depend on the snapshot only through
-        the column MAPPING (physical column names), so on a lost commit
-        race the retry re-reads the log and re-derives only the ACTIONS
-        (fresh removes, fresh version) and re-commits the SAME staged
-        files — rewriting the O(table) data because a metadata race was
-        lost would double a full snapshot load at 100 TB. If the
-        conflicting commit changed the mapping (a concurrent DDL), the
-        staged physical schema is stale: discard and re-stage — the one
-        case that genuinely needs it."""
-        adds: list[dict] | None = None
-        staged_mapping: dict | None = None
+    def _commit(
+        self, op: str, prepare: Callable[[_Snapshot], tuple | None]
+    ) -> int | None:
+        """Optimistic concurrency for every write op: prepare against a
+        snapshot, stage unless the staged files are still valid, publish
+        put-if-absent, checkpoint. Returns the committed version, or None
+        when ``prepare`` found nothing to do.
+
+        A lost race re-prepares against the new snapshot and stages again
+        only when the staging key changed — a race that left the op's
+        inputs alone costs one log read, not a second Spark write. Every
+        exit without a commit discards the staged files. The commitInfo
+        records ``attempts`` and ``stage_ms`` (staging wall time summed
+        over attempts), so ``history()`` shows what each commit cost."""
+        adds: list[dict] | None = None  # staged, not yet published
+        key = None
+        stage_ms = 0.0
         try:
-            for _ in range(self.max_commit_retries):
+            for attempt in range(self.max_commit_retries):
                 snap = self._snapshot()
-                version = snap.version + 1
-                meta = {
-                    "key_cols": self.key_cols,
-                    "num_buckets": self.num_buckets,
-                    "columns": list(df.columns),
-                }
-                mapping = snap.mapping
-                if mapping is not None:
-                    # logical ids are stable across an overwrite; columns absent
-                    # from the new frame are dropped -> tombstone their physicals
-                    mapping, _ = self._extend_mapping(
-                        mapping, snap.tombstones, list(df.columns)
-                    )
-                    tombstones = list(snap.tombstones)
-                    tombstones += [p for l, p in mapping.items() if l not in df.columns]
-                    mapping = {l: p for l, p in mapping.items() if l in df.columns}
-                    meta["column_mapping"] = mapping
-                    meta["physical_tombstones"] = tombstones
-                if adds is None or staged_mapping != mapping:
-                    if adds is not None:
-                        self._discard(adds)
-                    adds = self._write_files(
-                        self._to_physical(df, mapping), n_shuffle=self._default_shuffle()
-                    )
-                    staged_mapping = mapping
-                actions = [
-                    {"metaData": meta},
-                    *adds,
-                    *(
-                        {"remove": {"path": p, "bucket": b}}
-                        for p, b in sorted({**snap.files, **snap.deltas}.items())
-                    ),
-                    {"commitInfo": {"operation": "OVERWRITE", "ts": time.time()}},
-                ]
+                plan = prepare(snap)
+                if plan is None:
+                    return None
+                new_key, stage, actions = plan
+                if adds is not None and new_key != key:
+                    self._discard(adds)
+                    adds = None
+                if adds is None and stage is not None:
+                    t0 = time.perf_counter()
+                    adds, key = stage(), new_key
+                    stage_ms += (time.perf_counter() - t0) * 1000
+                *body, info = actions
+                info["commitInfo"].update(
+                    ts=time.time(), attempts=attempt + 1, stage_ms=round(stage_ms, 1)
+                )
                 try:
-                    self._try_commit(version, actions)
+                    self._try_commit(snap.version + 1, [*body, *(adds or []), info])
                 except CommitConflict:
                     continue
-                adds = None  # committed: nothing left to clean up
-                self._maybe_checkpoint(version)
-                return
-            raise RuntimeError(f"overwrite lost {self.max_commit_retries} commit races")
+                adds = None  # published: the table owns them now
+                self._maybe_checkpoint(snap.version + 1)
+                return snap.version + 1
+            raise RuntimeError(f"{op} lost {self.max_commit_retries} commit races")
         finally:
             if adds is not None:
                 self._discard(adds)
 
-    def apply(self, changes: DataFrame) -> None:
-        """MERGE one micro-batch (ST2) under optimistic concurrency.
-
-        Conflict rule: a lost race is REBASED WITHOUT RECOMPUTE when the
-        winning commit's bucket set is disjoint from ours (our merge inputs
-        are byte-identical in the new snapshot), else the merge re-runs
-        against the new snapshot. Deletes+upserts stay idempotent either
-        way, so at-least-once delivery still yields exactly-once state."""
-        # empty table: nothing to prune or merge against, so commit version 0
-        # in one Spark job, without the touched-bucket discovery job below
-        if self._snapshot().version < 0 and self._bootstrap_commit(
-            apply_changes(None, changes, self.key_cols)
-        ):
-            return
-        # touched buckets from the raw batch: metadata-scale collect
-        touched = sorted(
-            r[0]
-            for r in changes.select(self._bucket_expr().alias("b")).distinct().collect()
+    def _staging(
+        self,
+        snap: _Snapshot,
+        cols: list[str],
+        frame: Callable[[], DataFrame],
+        n_shuffle: int,
+        delta: bool = False,
+    ) -> tuple[dict[str, str] | None, Callable[[], list[dict]]]:
+        """Stage ``frame()``, whose logical columns are ``cols``: extend the
+        column mapping with any new column, rename to physical names, write.
+        Returns the mapping the files are written under (None on an
+        unmapped table) — the op's staging key and the mapping its
+        metaData publishes — and the stage function."""
+        mapping = (
+            None
+            if snap.mapping is None
+            else self._extend_mapping(snap.mapping, snap.tombstones, cols)
         )
-        touched_set = set(touched)
 
-        adds: list[dict] | None = None
-        merged_cols: list[str] | None = None
-        staged_mapping: dict[str, str] | None = None
-        last_base: list[str] | None = None  # file set the staged merge was computed from
-        last_mapping: dict[str, str] | None = None
-        for _ in range(self.max_commit_retries):
-            snap = self._snapshot()
-            version = snap.version + 1
-            base_files = sorted(snap.bucket_files(touched_set)) if snap.version >= 0 else []
-            # MOR deltas on touched buckets must fold into this merge and be
-            # removed with it — leaving them would let an OLDER delta row
-            # overwrite the new base at read time (base rows carry no ts)
-            delta_files = sorted(snap.bucket_deltas(touched_set)) if snap.version >= 0 else []
-            all_inputs = base_files + delta_files
-            if adds is not None and (all_inputs != last_base or snap.mapping != last_mapping):
-                # a conflicting commit changed our inputs (files or column
-                # mapping — staged files carry the OLD physical names): invalid
-                self._discard(adds)
-                adds = None
-            if adds is None:
-                current = self._to_logical(self._read_files(base_files, snap.widened), snap)
-                if delta_files:
-                    current = apply_changes(
-                        current,
-                        self._to_logical(self._read_files(delta_files, snap.widened), snap),
-                        self.key_cols,
-                    )
-                if snap.version >= 0:
-                    self._guard_schema(changes, snap)
-                merged = apply_changes(current, changes, self.key_cols)
-                merged_cols = list(merged.columns)
-                staged_mapping = snap.mapping
-                if staged_mapping is not None:
-                    staged_mapping, _ = self._extend_mapping(
-                        staged_mapping, snap.tombstones, merged_cols
-                    )
-                adds = self._write_files(
-                    self._to_physical(merged, staged_mapping),
-                    n_shuffle=max(1, len(touched)),
-                )
-                last_base = all_inputs
-                last_mapping = snap.mapping
-            actions: list[dict] = []
-            new_cols = sorted(set(merged_cols) - set(snap.columns or []))
-            if snap.version < 0 or new_cols:
-                meta = {
-                    "key_cols": self.key_cols,
-                    "num_buckets": self.num_buckets,
-                    "columns": sorted(set(snap.columns or []) | set(merged_cols)),
-                }
-                if staged_mapping is not None:
-                    meta["column_mapping"] = staged_mapping
-                actions.append({"metaData": meta})
-            actions.extend(adds)
-            actions.extend(
-                {"remove": {"path": p, "bucket": snap.files.get(p, snap.deltas.get(p))}}
-                for p in all_inputs
-            )
-            actions.append(
-                {"commitInfo": {"operation": "MERGE", "ts": time.time(), "buckets": touched}}
-            )
-            try:
-                self._try_commit(version, actions)
-            except CommitConflict:
-                continue  # loop: snapshot reload decides rebase vs recompute
-            self._maybe_checkpoint(version)
-            return
-        raise RuntimeError(f"apply lost {self.max_commit_retries} commit races")
+        def stage() -> list[dict]:
+            adds = self._write_files(self._to_physical(frame(), mapping), n_shuffle)
+            if delta:
+                for a in adds:
+                    a["add"]["delta"] = True
+            return adds
+
+        return mapping, stage
+
+    def _widen_meta(
+        self, snap: _Snapshot, cols: list[str], mapping: dict[str, str] | None
+    ) -> list[dict]:
+        """The metaData action a batch with columns ``cols`` needs: none
+        unless it brings logical columns the table lacks, else the widened
+        (sorted) column list and the extended mapping."""
+        new = {c for c in cols if not c.startswith("__")} - set(snap.columns or [])
+        if not new:
+            return []
+        meta = {
+            "key_cols": self.key_cols,
+            "num_buckets": self.num_buckets,
+            "columns": sorted(set(snap.columns or []) | new),
+        }
+        if mapping is not None:
+            meta["column_mapping"] = mapping
+        return [{"metaData": meta}]
 
     def _default_shuffle(self) -> int:
         return min(
@@ -911,35 +869,111 @@ class TxLogMergeSink:
             except FileNotFoundError:
                 pass
 
-    def _bootstrap_commit(self, df: DataFrame) -> bool:
-        """SINGLE-attempt version-0 base commit for a fresh table. Returns
-        False on a lost race (staged files discarded) so the caller falls
-        through to its normal OCC loop against the winner's table.
+    def overwrite(self, df: DataFrame) -> None:
+        """Full snapshot load (S10 analogue): add the new file set, remove
+        every live file, in one atomic commit.
 
-        Bootstrap must NOT route through ``overwrite``: overwrite's
-        conflict retry removes ALL live files, so two concurrent
-        first-writers would have the loser's retry silently discard the
-        winner's committed batch (r11 review; pinned by
-        test_concurrent_bootstrap_append_keeps_both_batches)."""
-        adds = self._write_files(df, n_shuffle=self._default_shuffle())
-        actions = [
-            {
-                "metaData": {
-                    "key_cols": self.key_cols,
-                    "num_buckets": self.num_buckets,
-                    "columns": list(df.columns),
-                }
-            },
-            *adds,
-            {"commitInfo": {"operation": "OVERWRITE", "ts": time.time()}},
+        Stage-once (r12): the staged files depend on the snapshot only
+        through the column mapping, so a lost commit race re-derives the
+        actions (fresh removes, fresh version) and re-publishes the SAME
+        files — rewriting the O(table) data because a metadata race was
+        lost would double a full snapshot load at 100 TB. A concurrent DDL
+        that changes the mapping leaves the staged physical schema stale:
+        that, and only that, stages again."""
+        self._commit("overwrite", lambda snap: self._overwrite_plan(df, snap))
+
+    def _overwrite_plan(self, df: DataFrame, snap: _Snapshot):
+        cols = list(df.columns)
+        mapping, stage = self._staging(snap, cols, lambda: df, self._default_shuffle())
+        meta = {"key_cols": self.key_cols, "num_buckets": self.num_buckets, "columns": cols}
+        if mapping is not None:
+            # logical ids are stable across an overwrite; columns absent
+            # from the new frame are dropped -> tombstone their physicals
+            meta["column_mapping"] = {l: p for l, p in mapping.items() if l in cols}
+            meta["physical_tombstones"] = snap.tombstones + [
+                p for l, p in mapping.items() if l not in cols
+            ]
+        removes = [
+            {"remove": {"path": p, "bucket": b}}
+            for p, b in sorted({**snap.files, **snap.deltas}.items())
         ]
-        try:
-            self._try_commit(0, actions)
-        except CommitConflict:
-            self._discard(adds)
-            return False
-        self._maybe_checkpoint(0)
-        return True
+        return (
+            meta.get("column_mapping"),
+            stage,
+            [{"metaData": meta}, *removes, {"commitInfo": {"operation": "OVERWRITE"}}],
+        )
+
+    def _bootstrap_plan(self, df: DataFrame, snap: _Snapshot):
+        """Version 0 for ``append``/``apply``/``apply_delta`` on an empty
+        table: an overwrite with nothing to remove, in one Spark job.
+
+        Its staging key is its own, so a lost race (another writer created
+        the table first) stages again on the op's normal path against the
+        winner's table. Never overwrite's retry: that removes ALL live
+        files, so the loser would silently discard the winner's batch (r11
+        review; pinned by test_concurrent_bootstrap_append_keeps_both_batches)."""
+        _, stage, actions = self._overwrite_plan(df, snap)
+        return "bootstrap", stage, actions
+
+    def apply(self, changes: DataFrame) -> None:
+        """MERGE one micro-batch (ST2) under optimistic concurrency.
+
+        Restage rule: the staged merge is keyed by its input files (the
+        touched buckets' base and delta files) and the column mapping. A
+        lost race whose winner touched DISJOINT buckets leaves both
+        unchanged, so the same files are re-published without recompute;
+        otherwise the merge re-runs against the new snapshot.
+        Deletes+upserts stay idempotent either way, so at-least-once
+        delivery still yields exactly-once state."""
+        batch: DataFrame | None = None
+        touched: list[int] = []
+
+        def prepare(snap: _Snapshot):
+            nonlocal batch, touched
+            if snap.version < 0:
+                return self._bootstrap_plan(apply_changes(None, changes, self.key_cols), snap)
+            if batch is None:
+                # read the batch once: the touched-bucket collect and the
+                # merge's two reads of it would each re-run its source —
+                # inside foreachBatch, re-read the trigger's files and count
+                # its rows again in the query progress. Lazy, so the collect
+                # is the one job that reads the source and fills the
+                # checkpoint. localCheckpoint, not persist: the cache-leak
+                # rule (ops/graph.py).
+                batch = changes.localCheckpoint(eager=False)
+                touched = sorted(
+                    r[0]
+                    for r in batch.select(self._bucket_expr().alias("b")).distinct().collect()
+                )
+            self._guard_schema(batch, snap)
+            base_files = sorted(snap.bucket_files(set(touched)))
+            # MOR deltas on touched buckets must fold into this merge and be
+            # removed with it — leaving them would let an OLDER delta row
+            # overwrite the new base at read time (base rows carry no ts)
+            delta_files = sorted(snap.bucket_deltas(set(touched)))
+            inputs = base_files + delta_files
+
+            def merged() -> DataFrame:
+                current = self._to_logical(self._read_files(base_files, snap.widened), snap)
+                if delta_files:
+                    current = apply_changes(
+                        current,
+                        self._to_logical(self._read_files(delta_files, snap.widened), snap),
+                        self.key_cols,
+                    )
+                return apply_changes(current, batch, self.key_cols)
+
+            mapping, stage = self._staging(snap, batch.columns, merged, max(1, len(touched)))
+            return (inputs, mapping), stage, [
+                *self._widen_meta(snap, batch.columns, mapping),
+                *(
+                    {"remove": {"path": p, "bucket": snap.files.get(p, snap.deltas.get(p))}}
+                    for p in inputs
+                ),
+                {"commitInfo": {"operation": "MERGE", "buckets": touched}},
+            ]
+
+        self._commit("apply", prepare)
 
     def append(self, df: DataFrame) -> None:
         """Insert-only fast path: bucket and add the batch's files WITHOUT
@@ -948,54 +982,23 @@ class TxLogMergeSink:
         topics) where the caller guarantees key-uniqueness; duplicate keys
         are NOT merged (use ``apply`` for merge semantics). This is what
         fragments buckets over time — ``compact`` is its maintenance twin
-        (the merge-on-read half of the copy-on-write/append trade)."""
-        if self._snapshot().version < 0 and self._bootstrap_commit(df):
-            return
-        adds: list[dict] | None = None
-        staged_mapping: dict[str, str] | None = None
-        last_mapping: dict[str, str] | None = None
-        for _ in range(self.max_commit_retries):
-            snap = self._snapshot()
+        (the merge-on-read half of the copy-on-write/append trade).
+
+        An append's inputs are only its OWN new files, so a lost race
+        re-publishes them at the next version with zero recompute, unless a
+        concurrent DDL changed the column mapping."""
+
+        def prepare(snap: _Snapshot):
+            if snap.version < 0:
+                return self._bootstrap_plan(df, snap)
             self._guard_schema(df, snap)
-            if adds is not None and snap.mapping != last_mapping:
-                # a concurrent DDL changed the column mapping: staged files
-                # carry stale physical names
-                self._discard(adds)
-                adds = None
-            if adds is None:
-                staged_mapping = snap.mapping
-                if staged_mapping is not None:
-                    staged_mapping, _ = self._extend_mapping(
-                        staged_mapping, snap.tombstones, list(df.columns)
-                    )
-                adds = self._write_files(
-                    self._to_physical(df, staged_mapping),
-                    n_shuffle=self._default_shuffle(),
-                )
-                last_mapping = snap.mapping
-            new_cols = sorted(set(df.columns) - set(snap.columns or []))
-            actions: list[dict] = []
-            if new_cols:
-                meta = {
-                    "key_cols": self.key_cols,
-                    "num_buckets": self.num_buckets,
-                    "columns": sorted(set(snap.columns or []) | set(df.columns)),
-                }
-                if staged_mapping is not None:
-                    meta["column_mapping"] = staged_mapping
-                actions.append({"metaData": meta})
-            actions.extend(adds)
-            actions.append({"commitInfo": {"operation": "APPEND", "ts": time.time()}})
-            try:
-                self._try_commit(snap.version + 1, actions)
-            except CommitConflict:
-                # an append's inputs are only its OWN new files — nothing a
-                # concurrent commit can invalidate. Re-publish the same
-                # files at the next version: zero recompute.
-                continue
-            self._maybe_checkpoint(snap.version + 1)
-            return
-        raise RuntimeError(f"append lost {self.max_commit_retries} commit races")
+            mapping, stage = self._staging(snap, df.columns, lambda: df, self._default_shuffle())
+            return mapping, stage, [
+                *self._widen_meta(snap, df.columns, mapping),
+                {"commitInfo": {"operation": "APPEND"}},
+            ]
+
+        self._commit("append", prepare)
 
     def apply_delta(self, changes: DataFrame) -> None:
         """Merge-on-read apply (the Hudi-MOR half of the write-cost trade):
@@ -1011,60 +1014,22 @@ class TxLogMergeSink:
         freely: read() resolves base ⊕ deltas at any version, and the
         (ts, seq) ordering contract (ST3) holds across any number of delta
         layers. Commit-race handling is append's: delta files are this
-        writer's own, so a lost race re-publishes with zero recompute."""
-        if self._snapshot().version < 0:
-            # bootstrap: first batch becomes the base (no deltas to merge);
-            # SINGLE-attempt commit — a lost race falls through to the
-            # normal delta path against the winner's table (never
-            # overwrite's remove-all retry; see _bootstrap_commit)
-            bootstrapped = apply_changes(None, changes, self.key_cols)
-            if self._bootstrap_commit(bootstrapped):
-                return
-        adds: list[dict] | None = None
-        staged_mapping: dict[str, str] | None = None
-        last_mapping: dict[str, str] | None = None
-        for _ in range(self.max_commit_retries):
-            snap = self._snapshot()
+        writer's own, so a lost race re-publishes with zero recompute. On
+        an empty table the first batch becomes the base."""
+
+        def prepare(snap: _Snapshot):
+            if snap.version < 0:
+                return self._bootstrap_plan(apply_changes(None, changes, self.key_cols), snap)
             self._guard_schema(changes, snap)
-            if adds is not None and snap.mapping != last_mapping:
-                self._discard(adds)
-                adds = None
-            if adds is None:
-                staged_mapping = snap.mapping
-                if staged_mapping is not None:
-                    staged_mapping, _ = self._extend_mapping(
-                        staged_mapping, snap.tombstones, list(changes.columns)
-                    )
-                adds = self._write_files(
-                    self._to_physical(changes, staged_mapping),
-                    n_shuffle=self._default_shuffle(),
-                )
-                for a in adds:
-                    a["add"]["delta"] = True
-                last_mapping = snap.mapping
-            actions: list[dict] = []
-            new_cols = sorted(
-                set(c for c in changes.columns if not c.startswith("__"))
-                - set(snap.columns or [])
+            mapping, stage = self._staging(
+                snap, changes.columns, lambda: changes, self._default_shuffle(), delta=True
             )
-            if new_cols:
-                meta = {
-                    "key_cols": self.key_cols,
-                    "num_buckets": self.num_buckets,
-                    "columns": sorted(set(snap.columns or []) | set(new_cols)),
-                }
-                if staged_mapping is not None:
-                    meta["column_mapping"] = staged_mapping
-                actions.append({"metaData": meta})
-            actions.extend(adds)
-            actions.append({"commitInfo": {"operation": "MERGE_DELTA", "ts": time.time()}})
-            try:
-                self._try_commit(snap.version + 1, actions)
-            except CommitConflict:
-                continue
-            self._maybe_checkpoint(snap.version + 1)
-            return
-        raise RuntimeError(f"apply_delta lost {self.max_commit_retries} commit races")
+            return mapping, stage, [
+                *self._widen_meta(snap, changes.columns, mapping),
+                {"commitInfo": {"operation": "MERGE_DELTA"}},
+            ]
+
+        self._commit("apply_delta", prepare)
 
     def compact(
         self,
@@ -1092,11 +1057,16 @@ class TxLogMergeSink:
         data size matters. Run this on the maintenance cadence (the
         reference's scheduled-validation slot, O5). Only buckets over the
         threshold rewrite — cost is O(fragmented data), not O(table).
-        Returns the number of buckets compacted."""
-        for _ in range(self.max_commit_retries):
-            snap = self._snapshot()
+        Returns the number of buckets compacted.
+
+        Any lost race stages again: another writer may have rewritten the
+        compacted buckets."""
+        frag: set[int] = set()
+
+        def prepare(snap: _Snapshot):
+            nonlocal frag
             if snap.version < 0:
-                return 0
+                return None
             by_bucket: dict[int, list[str]] = {}
             for p, b in snap.files.items():
                 by_bucket.setdefault(b, []).append(p)
@@ -1107,51 +1077,42 @@ class TxLogMergeSink:
             frag = set(b for b, ps in by_bucket.items() if len(ps) >= frag_floor)
             frag |= set(snap.deltas.values())
             if not frag:
-                return 0
+                return None
             base_paths = sorted(snap.bucket_files(frag))
             delta_paths = sorted(snap.bucket_deltas(frag))
-            # widened read here means compaction MIGRATES narrow files to
-            # the widened type as a side effect — the gradual rewrite path
-            df = self._read_files(base_paths, snap.widened)
-            if delta_paths:
-                df = apply_changes(
-                    df, self._read_files(delta_paths, snap.widened), self.key_cols
-                )
             # one output file per compacted bucket (files_per_bucket
             # z-segments each when clustering); cluster cols are translated
             # logical -> physical since compact runs in physical space
-            cluster = None
-            if zorder_by:
-                cluster = [
-                    (snap.mapping or {}).get(c, c) for c in zorder_by
-                ]
-            adds = self._write_files(
-                df,
-                n_shuffle=len(frag) * (files_per_bucket if zorder_by else 1),
-                cluster_by=cluster,
-            )
-            actions = [
-                *adds,
+            cluster = [(snap.mapping or {}).get(c, c) for c in zorder_by] if zorder_by else None
+
+            def stage() -> list[dict]:
+                # widened read here means compaction MIGRATES narrow files to
+                # the widened type as a side effect — the gradual rewrite path
+                df = self._read_files(base_paths, snap.widened)
+                if delta_paths:
+                    df = apply_changes(
+                        df, self._read_files(delta_paths, snap.widened), self.key_cols
+                    )
+                return self._write_files(
+                    df,
+                    n_shuffle=len(frag) * (files_per_bucket if zorder_by else 1),
+                    cluster_by=cluster,
+                )
+
+            return snap.version, stage, [
                 *(
                     {"remove": {"path": p, "bucket": snap.files.get(p, snap.deltas.get(p))}}
                     for p in base_paths + delta_paths
                 ),
                 {"commitInfo": {
                     "operation": "COMPACT",
-                    "ts": time.time(),
                     "buckets": sorted(frag),
                     **({"zorder_by": list(zorder_by)} if zorder_by else {}),
                 }},
             ]
-            try:
-                self._try_commit(snap.version + 1, actions)
-            except CommitConflict:
-                # another writer may have rewritten our inputs: recompute
-                self._discard(adds)
-                continue
-            self._maybe_checkpoint(snap.version + 1)
-            return len(frag)
-        raise RuntimeError(f"compact lost {self.max_commit_retries} commit races")
+
+        self._commit("compact", prepare)
+        return len(frag)
 
     def ddl(self, ops) -> None:
         """Schema evolution on the table (ST8, non-additive). ALL of rename,
@@ -1166,28 +1127,24 @@ class TxLogMergeSink:
         gradually migrates files to the wide type.
 
         Ops validate against the EVOLVING logical schema (ddl.py guards: key
-        rename/drop/widen rejected, narrowing rejected, replay idempotent)."""
-        from cdc_connector_spark.changelog.ddl import _check_ops
-
-        cur = self.read()
-        if cur is None:
-            raise ValueError("cannot run DDL on an empty table")
-        _check_ops(cur.schema, ops, self.key_cols)
-        self._ddl_metadata(list(ops))
-
-    def _ddl_metadata(self, run) -> None:
-        """Commit a batch of rename/drop/widen ops as ONE metadata action:
-        no data file is added, removed, or rewritten. Time travel to a
+        rename/drop/widen rejected, narrowing rejected, replay idempotent).
+        The whole batch commits as ONE metadata action; time travel to a
         pre-DDL version replays the pre-DDL mapping/widening, so old reads
         keep old names and old types."""
         from cdc_connector_spark.changelog.ddl import (
             DropColumn,
             RenameColumn,
             WidenColumn,
+            _check_ops,
         )
 
-        for _ in range(self.max_commit_retries):
-            snap = self._snapshot()
+        cur = self.read()
+        if cur is None:
+            raise ValueError("cannot run DDL on an empty table")
+        _check_ops(cur.schema, ops, self.key_cols)
+        run = list(ops)
+
+        def prepare(snap: _Snapshot):
             columns = list(snap.columns or [])
             # first metadata DDL upgrades the table to an identity mapping
             mapping = dict(snap.mapping) if snap.mapping is not None else {
@@ -1233,8 +1190,8 @@ class TxLogMergeSink:
                 else:  # pragma: no cover - type guard
                     raise TypeError(f"not a metadata op: {op!r}")
             if not changed:
-                return
-            actions = [
+                return None
+            return None, None, [
                 {"metaData": {
                     "key_cols": self.key_cols,
                     "num_buckets": self.num_buckets,
@@ -1243,17 +1200,10 @@ class TxLogMergeSink:
                     "physical_tombstones": tombstones,
                     "widened_types": widened,
                 }},
-                {"commitInfo": {
-                    "operation": "DDL", "ts": time.time(), "ops": described,
-                }},
+                {"commitInfo": {"operation": "DDL", "ops": described}},
             ]
-            try:
-                self._try_commit(snap.version + 1, actions)
-            except CommitConflict:
-                continue
-            self._maybe_checkpoint(snap.version + 1)
-            return
-        raise RuntimeError(f"ddl lost {self.max_commit_retries} commit races")
+
+        self._commit("ddl", prepare)
 
     def restore(self, version: int) -> None:
         """Roll the table back to an earlier version with ONE metadata
@@ -1280,10 +1230,10 @@ class TxLogMergeSink:
                 f"cannot restore to version {version}: {len(missing)} of its "
                 f"files were vacuumed (first: {missing[0]!r})"
             )
-        for _ in range(self.max_commit_retries):
-            snap = self._snapshot()
+
+        def prepare(snap: _Snapshot):
             if snap.version == version:
-                return  # restoring to the current head is a no-op
+                return None  # restoring to the current head is a no-op
             current_all = {**snap.files, **snap.deltas}
             meta = {
                 "key_cols": target.key_cols,
@@ -1309,41 +1259,31 @@ class TxLogMergeSink:
                 actions.append({"add": add})
             for p in sorted(set(current_all) - set(target_all)):
                 actions.append({"remove": {"path": p, "bucket": current_all[p]}})
-            actions.append(
-                {
-                    "commitInfo": {
-                        "operation": "RESTORE",
-                        "restored_version": version,
-                        "ts": time.time(),
-                    }
-                }
-            )
-            try:
-                self._try_commit(snap.version + 1, actions)
-            except CommitConflict:
-                continue
-            # a vacuum running concurrently from a pre-restore snapshot may
-            # have unlinked a target file between our pre-check and the
-            # commit — verify AFTER publishing and fail LOUDLY with the
-            # recovery path rather than leaving a silently unreadable head
-            # (r11 review; vacuum's fresh-head re-check makes this window
-            # an instant, but an instant is not never)
-            gone = [
-                p
-                for p in target_all
-                if not os.path.exists(os.path.join(self.path, p))
-            ]
-            if gone:
-                raise RuntimeError(
-                    f"restore to version {version} committed as "
-                    f"v{snap.version + 1} but a concurrent vacuum deleted "
-                    f"{len(gone)} of its files (first: {gone[0]!r}); run "
-                    f"restore({snap.version}) to return to the previous "
-                    f"head, whose files are intact"
-                )
-            self._maybe_checkpoint(snap.version + 1)
+            actions.append({"commitInfo": {"operation": "RESTORE", "restored_version": version}})
+            return None, None, actions
+
+        committed = self._commit("restore", prepare)
+        if committed is None:
             return
-        raise RuntimeError(f"restore lost {self.max_commit_retries} commit races")
+        # a vacuum running concurrently from a pre-restore snapshot may
+        # have unlinked a target file between our pre-check and the
+        # commit — verify AFTER publishing and fail LOUDLY with the
+        # recovery path rather than leaving a silently unreadable head
+        # (r11 review; vacuum's fresh-head re-check makes this window
+        # an instant, but an instant is not never)
+        gone = [
+            p
+            for p in target_all
+            if not os.path.exists(os.path.join(self.path, p))
+        ]
+        if gone:
+            raise RuntimeError(
+                f"restore to version {version} committed as "
+                f"v{committed} but a concurrent vacuum deleted "
+                f"{len(gone)} of its files (first: {gone[0]!r}); run "
+                f"restore({committed - 1}) to return to the previous "
+                f"head, whose files are intact"
+            )
 
     def vacuum(self, retain_versions: int = 2) -> int:
         """Physically delete data files removed more than ``retain_versions``

@@ -113,9 +113,23 @@ def test_metrics_over_real_changelog_stream(spark, tmp_path):
     StreamingQuery feeds the collector; the snapshot is a queryable
     DataFrame whose row counts reconcile with what the stream applied,
     and report() rolls it up per stream."""
+    _check_metrics_over_stream(spark, tmp_path, prefilled=False)
+
+
+def test_metrics_over_real_changelog_stream_prefilled_sink(spark, tmp_path):
+    """Same, into a non-empty sink: the copy-on-write merge runs several
+    Spark jobs over the micro-batch (touched-bucket discovery, the merge
+    write), and each used to re-run the source and count its rows again
+    (9 for 3 events). Each event must be counted once."""
+    _check_metrics_over_stream(spark, tmp_path, prefilled=True)
+
+
+def _check_metrics_over_stream(spark, tmp_path, prefilled):
     src = tmp_path / "in"
     src.mkdir()
     sink = TxLogMergeSink(spark, str(tmp_path / "sink"), ["id"])
+    if prefilled:
+        sink.overwrite(spark.createDataFrame([(1, "old"), (9, "keep")], ROW_SCHEMA))
     _env_df(
         spark,
         [

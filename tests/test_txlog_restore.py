@@ -7,13 +7,14 @@ row-level effect, and a restore past the vacuum horizon fails loudly.
 """
 
 import glob
+import json
 import os
 
 import pytest
 from pyspark.sql import types as T
 
 from cdc_connector_spark.changelog.envelope import envelope_schema, flatten_envelope
-from cdc_connector_spark.changelog.txlog import TxLogMergeSink
+from cdc_connector_spark.changelog.txlog import CommitConflict, TxLogMergeSink
 
 ROW_SCHEMA = T.StructType(
     [T.StructField("id", T.LongType()), T.StructField("val", T.StringType())]
@@ -169,42 +170,10 @@ def test_vacuum_skips_files_resurrected_by_restore(spark, tmp_path):
     assert rows == {1: "a", 2: "a"}  # the restored head still reads
 
 
-def test_concurrent_bootstrap_append_keeps_both_batches(spark, tmp_path):
-    """Bootstrap race (r11 review): two first-writers race to create the
-    table. The loser previously routed through overwrite(), whose
-    conflict retry removes ALL live files — silently discarding the
-    winner's committed batch. The single-attempt bootstrap commit must
-    lose cleanly and fall through to a plain append."""
-    path = str(tmp_path / "t")
-    df_a = spark.createDataFrame([(1, "a"), (2, "a")], ROW_SCHEMA)
-    df_b = spark.createDataFrame([(3, "b"), (4, "b")], ROW_SCHEMA)
-    winner = TxLogMergeSink(spark, path, ["id"], num_buckets=4)
-    loser = TxLogMergeSink(spark, path, ["id"], num_buckets=4)
-    # both constructed against the EMPTY table; winner bootstraps first
-    winner.append(df_a)
-    # the loser's bootstrap attempt (what its append would try first)
-    # must lose the v0 race without removing anything...
-    assert loser._bootstrap_commit(df_b) is False
-    # ...and its append must land as a normal v1 append
-    loser.append(df_b)
-    rows = {r["id"]: r["val"] for r in TxLogMergeSink(spark, path).read().collect()}
-    assert rows == {1: "a", 2: "a", 3: "b", 4: "b"}  # NO lost batch
-
-
-def test_overwrite_conflict_retry_reuses_staged_files(spark, tmp_path, monkeypatch):
-    """Stage-once overwrite retry (r12, the r11 review's deferred lead):
-    losing a commit race must re-derive only the ACTIONS against the
-    fresh snapshot and re-publish the SAME staged data files — the old
-    retry rewrote the O(table) snapshot because a metadata race was
-    lost. Pinned: exactly ONE _write_files call across the race, the
-    loser's content wins (overwrite semantics), and the winner's files
-    are removed at the loser's version."""
-    path = str(tmp_path / "t")
-    base = TxLogMergeSink(spark, path, ["id"], num_buckets=4)
-    base.overwrite(spark.createDataFrame([(1, "base")], ROW_SCHEMA))
-
-    winner = TxLogMergeSink(spark, path, ["id"], num_buckets=4)
-    loser = TxLogMergeSink(spark, path, ["id"], num_buckets=4)
+def _race(monkeypatch, loser, winner_commit):
+    """Make ``loser`` lose one commit race: ``winner_commit`` runs between
+    the loser's first snapshot and its first publish. Returns a dict whose
+    ``writes`` counts the loser's ``_write_files`` calls across the race."""
     calls = {"writes": 0}
     orig_write = loser._write_files
 
@@ -219,16 +188,166 @@ def test_overwrite_conflict_retry_reuses_staged_files(spark, tmp_path, monkeypat
     def racing_try(version, actions):
         if not state["raced"]:
             state["raced"] = True
-            # the winner commits between the loser's snapshot and publish
-            winner.overwrite(spark.createDataFrame([(2, "winner")], ROW_SCHEMA))
+            winner_commit()
         return orig_try(version, actions)
 
     monkeypatch.setattr(loser, "_try_commit", racing_try)
-    loser.overwrite(spark.createDataFrame([(3, "loser")], ROW_SCHEMA))
+    return calls
 
-    assert calls["writes"] == 1  # staged ONCE; the retry reused the files
+
+def test_concurrent_bootstrap_append_keeps_both_batches(spark, tmp_path, monkeypatch):
+    """Bootstrap race (r11 review): two first-writers race to create the
+    table. The loser previously routed through overwrite(), whose
+    conflict retry removes ALL live files — silently discarding the
+    winner's committed batch. The loser's version-0 attempt must lose
+    cleanly and land as a plain append on the winner's table."""
+    path = str(tmp_path / "t")
+    df_a = spark.createDataFrame([(1, "a"), (2, "a")], ROW_SCHEMA)
+    df_b = spark.createDataFrame([(3, "b"), (4, "b")], ROW_SCHEMA)
+    winner = TxLogMergeSink(spark, path, ["id"], num_buckets=4)
+    loser = TxLogMergeSink(spark, path, ["id"], num_buckets=4)
+    # both constructed against the EMPTY table; the winner's version 0
+    # lands between the loser's snapshot and its publish
+    _race(monkeypatch, loser, lambda: winner.append(df_a))
+    loser.append(df_b)
     rows = {r["id"]: r["val"] for r in TxLogMergeSink(spark, path).read().collect()}
-    assert rows == {3: "loser"}  # last overwrite wins, winner's files removed
+    assert rows == {1: "a", 2: "a", 3: "b", 4: "b"}  # NO lost batch
+
+
+def _keys_by_bucket(spark, sink, n=64):
+    """ids 1..n grouped by the sink's bucket."""
+    out: dict[int, list[int]] = {}
+    for r in spark.range(1, n + 1).select("id", sink._bucket_expr().alias("b")).collect():
+        out.setdefault(r["b"], []).append(r["id"])
+    return out
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "overwrite",
+        "append",
+        "apply_delta",
+        "apply_disjoint",
+        "apply_overlap",
+        "compact",
+        "append_after_rename",
+    ],
+)
+def test_conflict_retry_restages_only_when_inputs_change(spark, tmp_path, monkeypatch, case):
+    """A lost commit race re-derives only the ACTIONS against the fresh
+    snapshot; data files are staged again only when the race invalidated
+    them. Stage-once (r12, the r11 review's deferred lead): an overwrite
+    that loses a metadata race must not rewrite its O(table) snapshot.
+
+    - ``overwrite``/``append``/``apply_delta``: the files depend on the
+      snapshot only through the column mapping, so one write;
+    - ``apply`` whose buckets are disjoint from the winner's: its merge
+      inputs are unchanged, so one write; overlapping buckets: the merge
+      re-runs (two writes) and neither update is lost;
+    - ``compact``: any conflict may have rewritten its inputs, two writes;
+    - a concurrent rename changes the column mapping, so the staged files
+      carry stale physical names: ``append`` writes twice."""
+    from cdc_connector_spark.changelog.ddl import RenameColumn
+
+    path = str(tmp_path / "t")
+    base = TxLogMergeSink(spark, path, ["id"], num_buckets=4)
+    groups = _keys_by_bucket(spark, base)
+    b0, b1 = sorted(groups)[:2]
+    a, a2, b = groups[b0][0], groups[b0][1], groups[b1][0]  # a, a2 share a bucket
+    base.overwrite(spark.createDataFrame([(a, "base"), (a2, "base"), (b, "base")], ROW_SCHEMA))
+    seed = {a: "base", a2: "base", b: "base"}
+
+    winner = TxLogMergeSink(spark, path)
+    loser = TxLogMergeSink(spark, path, merge_schema=case == "append_after_rename")
+
+    def rows(*r, schema=ROW_SCHEMA):
+        return spark.createDataFrame(list(r), schema)
+
+    def upsert(sink, i, val, ts):
+        return lambda: sink.apply(_batch(spark, [(None, {"id": i, "val": val}, "u", ts, ts)]))
+
+    # case -> (winner's commit, loser's op, loser's writes, rows after both)
+    cases = {
+        "overwrite": (
+            lambda: winner.overwrite(rows((2, "winner"))),
+            lambda: loser.overwrite(rows((3, "loser"))),
+            1, {3: "loser"},  # last overwrite wins, winner's files removed
+        ),
+        "append": (
+            lambda: winner.append(rows((1001, "w"))),
+            lambda: loser.append(rows((1002, "l"))),
+            1, {**seed, 1001: "w", 1002: "l"},
+        ),
+        "apply_delta": (
+            lambda: winner.apply_delta(_batch(spark, [(None, {"id": a, "val": "w"}, "u", 5, 5)])),
+            lambda: loser.apply_delta(_batch(spark, [(None, {"id": b, "val": "l"}, "u", 6, 6)])),
+            1, {**seed, a: "w", b: "l"},
+        ),
+        "apply_disjoint": (
+            upsert(winner, a, "w", 5), upsert(loser, b, "l", 6), 1, {**seed, a: "w", b: "l"},
+        ),
+        "apply_overlap": (
+            upsert(winner, a, "w", 5), upsert(loser, a2, "l", 6), 2, {**seed, a: "w", a2: "l"},
+        ),
+        "compact": (
+            lambda: winner.append(rows((1001, "w"))),
+            lambda: loser.compact(min_files=1),
+            2, {**seed, 1001: "w"},
+        ),
+        # the loser already writes the post-rename name
+        "append_after_rename": (
+            lambda: winner.ddl([RenameColumn("val", "note")]),
+            lambda: loser.append(rows((1002, "l"), schema="id long, note string")),
+            2, {**seed, 1002: "l"},
+        ),
+    }
+    win, lose, writes, expected = cases[case]
+    calls = _race(monkeypatch, loser, win)
+    lose()
+    assert calls["writes"] == writes
+    out = TxLogMergeSink(spark, path).read()
+    val = "note" if case == "append_after_rename" else "val"
+    assert {r["id"]: r[val] for r in out.collect()} == expected
+    assert out.columns == ["id", val]
+    hist = TxLogMergeSink(spark, path).history()
+    assert len(hist) == 3  # base, winner, loser: one commit each
+
+
+def _committed_files(path):
+    """Every data file any commit of the log added."""
+    adds = set()
+    for commit in glob.glob(os.path.join(path, "_log", "[0-9]*.json")):
+        with open(commit) as f:
+            adds |= {a["add"]["path"] for a in map(json.loads, f) if "add" in a}
+    return sorted(os.path.join(path, p) for p in adds)
+
+
+@pytest.mark.parametrize("op", ["overwrite", "apply", "append", "apply_delta", "compact"])
+def test_lost_commit_races_leave_no_staged_files(spark, tmp_path, monkeypatch, op):
+    """A write op that runs out of commit retries raises, and discards
+    every data file it staged: the parquet files on disk are exactly the
+    ones the log added."""
+    path = str(tmp_path / "t")
+    sink = TxLogMergeSink(spark, path, ["id"], num_buckets=4, max_commit_retries=2)
+    sink.overwrite(spark.createDataFrame([(1, "a"), (2, "b")], ROW_SCHEMA))
+    sink.append(spark.createDataFrame([(3, "c")], ROW_SCHEMA))  # work for compact
+
+    def always_lose(version, actions):
+        raise CommitConflict(version)
+
+    monkeypatch.setattr(sink, "_try_commit", always_lose)
+    batch = _batch(spark, [(None, {"id": 1, "val": "a2"}, "u", 5, 5)])
+    ops = {
+        "overwrite": lambda: sink.overwrite(spark.createDataFrame([(9, "z")], ROW_SCHEMA)),
+        "apply": lambda: sink.apply(batch),
+        "append": lambda: sink.append(spark.createDataFrame([(9, "z")], ROW_SCHEMA)),
+        "apply_delta": lambda: sink.apply_delta(batch),
+        "compact": lambda: sink.compact(min_files=1),
+    }
+    with pytest.raises(RuntimeError, match="lost 2 commit races"):
+        ops[op]()
+    assert _data_files(path) == _committed_files(path)
 
 
 def test_vacuum_detects_restore_committed_mid_unlink(spark, tmp_path, monkeypatch):

@@ -125,6 +125,8 @@ def test_time_travel_and_history(spark, tmp_path):
     assert [h["version"] for h in hist] == [0, 1, 2]
     assert hist[0]["operation"] == "OVERWRITE"
     assert hist[1]["operation"] == "MERGE"
+    # the commit loop records its attempts and staging time on every commit
+    assert all(h["attempts"] == 1 and h["stage_ms"] > 0 for h in hist)
 
 
 def test_concurrent_writers_converge_without_lock(spark, tmp_path):
