@@ -3,14 +3,21 @@
 # gate; SKIP_TAIL_TRIPWIRE=1 to bypass per-commit); `make test` leaves git
 # config alone.
 
-.PHONY: bootstrap test oracle tripwire bench plans docs
+.PHONY: bootstrap test perfbench-test oracle tripwire bench plans docs
 
 bootstrap:
 	git config core.hooksPath .githooks
 	@echo "pre-commit tail tripwire installed (core.hooksPath=.githooks)"
 
+# The Tier-1 command (ROADMAP.md): one Spark core budget per host, local
+# dirs under /tmp, no pytest cache written into the repo.
 test:
-	python -m pytest tests/ -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+
+# perfbench's own unit tests (reducers, model); Tier-1 does not collect them.
+perfbench-test:
+	python3 -m pytest perfbench/tests
 
 oracle:
 	python tools/check_oracle.py /root/testdata/sf0.01

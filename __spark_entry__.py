@@ -3607,9 +3607,10 @@ def kmv_stream_merge_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     |groups| × k rows and estimation never re-keys the corpus. KMV
     mergeability makes the incremental result EXACTLY equal the one-shot
     sketch, so the oracle replays the one-shot sketch over all orders and
-    a hash-match proves the merge chain end-to-end. Streaming twin with
-    marker-commit exactly-once: streaming/kmv.StreamingKMV
-    (tests/test_streaming_kmv.py pins stream == batch)."""
+    a hash-match proves the merge chain end-to-end. Streaming twin,
+    exactly-once through streaming/commit.BatchCommitter:
+    streaming/kmv.StreamingKMV (tests/test_streaming_kmv.py pins stream ==
+    batch)."""
     from cdc_connector_spark.ops.sketch import kmv_estimate, kmv_merge, kmv_sketch
 
     orders = _t(spark, sf_dir, "orders")

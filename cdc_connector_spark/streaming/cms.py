@@ -11,10 +11,9 @@ that makes a heavy-hitter monitor viable where a per-key exact count
 table (the ``StreamingGapMonitor``'s islands analogue) would grow with
 distinct keys.
 
-Exactly-once by the house marker-commit protocol: batch N's merged
-counters write to their own directory, the marker lands last, a replayed
-batch short-circuits on the marker; the previous snapshot is kept as the
-crash cushion and older ones are pruned.
+Exactly-once by the marker commit of ``streaming/commit.py``: batch N's
+merged counters write to ``counters_batch=N`` and ``BatchCommitter``
+marks, replay-skips and prunes them.
 
 Estimates never under-count (cells only add), and because the hashes are
 the portable salted md5 fold the persisted table is auditable by ANY
@@ -27,14 +26,12 @@ set (e.g. this batch's keys, an allowlist, a complaint queue).
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from cdc_connector_spark.ops.sketch import cms_counters, portable_hash60
+from cdc_connector_spark.streaming.commit import BatchCommitter, foreach_batch
 
 
 class StreamingCMS:
@@ -52,35 +49,18 @@ class StreamingCMS:
         self.key_col = key_col
         self.depth = depth
         self.width = width
-
-    # -- commit bookkeeping --------------------------------------------------
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.state_dir, "_committed", str(batch_id))
+        self.committer = BatchCommitter(state_dir, ("counters",))
 
     def committed_batch_ids(self) -> list[int]:
-        d = os.path.join(self.state_dir, "_committed")
-        if not os.path.isdir(d):
-            return []
-        return sorted(int(n) for n in os.listdir(d) if n.isdigit())
-
-    def _counters_dir(self, batch_id: int) -> str:
-        return os.path.join(self.state_dir, f"counters_batch={batch_id}")
-
-    def _latest_counters(self, spark) -> DataFrame | None:
-        done = self.committed_batch_ids()
-        if not done:
-            return None
-        return spark.read.parquet(self._counters_dir(done[-1]))
+        return self.committer.committed()
 
     # -- the applier -----------------------------------------------------------
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if os.path.exists(self._marker(batch_id)):
+        if self.committer.done(batch_id):
             return  # replayed batch — already committed
-        spark = batch_df.sparkSession
         add = cms_counters(batch_df, self.key_col, self.depth, self.width)
-        prev = self._latest_counters(spark)
+        prev = self.committer.read_latest(batch_df.sparkSession, "counters")
         merged = (
             add.unionByName(prev).groupBy("row_idx", "pos").agg(
                 F.sum("cnt").alias("cnt")
@@ -88,13 +68,8 @@ class StreamingCMS:
             if prev is not None
             else add
         )
-        merged.write.mode("overwrite").parquet(self._counters_dir(batch_id))
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        with open(self._marker(batch_id), "w") as fh:
-            fh.write("")
-        for old in self.committed_batch_ids():
-            if old < batch_id - 1:
-                shutil.rmtree(self._counters_dir(old), ignore_errors=True)
+        merged.write.mode("overwrite").parquet(self.committer.dir("counters", batch_id))
+        self.committer.commit(batch_id)
 
     # -- lifecycle ---------------------------------------------------------------
 
@@ -104,19 +79,12 @@ class StreamingCMS:
         checkpoint_dir: str,
         available_now: bool = True,
     ) -> StreamingQuery:
-        writer = (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return foreach_batch(stream, self.process_batch, checkpoint_dir, available_now)
 
     # -- queries over the state ----------------------------------------------
 
     def counters(self, spark) -> DataFrame:
-        out = self._latest_counters(spark)
+        out = self.committer.read_latest(spark, "counters")
         if out is None:
             raise ValueError(f"no committed batches under {self.state_dir}")
         return out

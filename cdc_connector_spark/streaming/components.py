@@ -24,24 +24,25 @@ merges into the alias, append only the genuinely-new nodes. Canonical
 labels stay "minimum reachable node id" by induction (merging components
 whose canons are min-ids picks the min of the canons).
 
-Exactly-once by the house marker-commit protocol: batch N's label delta
-and alias snapshot land in their own directories, the marker last;
-replays short-circuit; superseded alias snapshots are pruned (previous
-kept as the crash cushion), label deltas accumulate by design (each holds
-distinct nodes — compact with an ordinary parquet rewrite if dir count
-ever matters).
+Exactly-once by the marker commit of ``streaming/commit.py``: batch N's
+label delta and alias snapshot land in ``labels_batch=N`` and
+``alias_batch=N``, then ``BatchCommitter`` marks the batch; replays
+short-circuit; superseded alias snapshots are pruned (previous kept as the
+crash cushion), label deltas accumulate by design (each holds distinct
+nodes — compact with an ordinary parquet rewrite if dir count ever
+matters).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from cdc_connector_spark.ops.components import connected_components
+from cdc_connector_spark.streaming.commit import BatchCommitter, foreach_batch
 
 _LABEL_SCHEMA = "id long, comp long"
 _ALIAS_SCHEMA = "comp long, canon long"
@@ -55,40 +56,27 @@ class IncrementalComponents:
         self.state_dir = state_dir
         self.id_a = id_a
         self.id_b = id_b
-
-    # -- commit bookkeeping --------------------------------------------------
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.state_dir, "_committed", str(batch_id))
+        self.committer = BatchCommitter(state_dir, ("alias",))
 
     def committed_batch_ids(self) -> list[int]:
-        d = os.path.join(self.state_dir, "_committed")
-        if not os.path.isdir(d):
-            return []
-        return sorted(int(n) for n in os.listdir(d) if n.isdigit())
-
-    def _labels_dir(self, batch_id: int) -> str:
-        return os.path.join(self.state_dir, f"labels_batch={batch_id}")
-
-    def _alias_dir(self, batch_id: int) -> str:
-        return os.path.join(self.state_dir, f"alias_batch={batch_id}")
+        return self.committer.committed()
 
     def _labels(self, spark, upto: list[int]) -> DataFrame:
-        dirs = [self._labels_dir(b) for b in upto if os.path.isdir(self._labels_dir(b))]
+        dirs = [d for b in upto if os.path.isdir(d := self.committer.dir("labels", b))]
         if not dirs:
             return spark.createDataFrame([], _LABEL_SCHEMA)
         return spark.read.parquet(*dirs)
 
     def _alias(self, spark, upto: list[int]) -> DataFrame:
         for b in reversed(upto):
-            if os.path.isdir(self._alias_dir(b)):
-                return spark.read.parquet(self._alias_dir(b))
+            if os.path.isdir(d := self.committer.dir("alias", b)):
+                return spark.read.parquet(d)
         return spark.createDataFrame([], _ALIAS_SCHEMA)
 
     # -- the applier -----------------------------------------------------------
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if os.path.exists(self._marker(batch_id)):
+        if self.committer.done(batch_id):
             return  # replayed batch — already committed
         spark = batch_df.sparkSession
         done = self.committed_batch_ids()
@@ -157,14 +145,9 @@ class IncrementalComponents:
             .join(merges.withColumnRenamed("old", "c"), "c", "left")
             .select("id", F.coalesce(F.col("new"), F.col("c")).alias("comp"))
         )
-        new_nodes.write.mode("overwrite").parquet(self._labels_dir(batch_id))
-        new_alias.write.mode("overwrite").parquet(self._alias_dir(batch_id))
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        with open(self._marker(batch_id), "w") as fh:
-            fh.write("")
-        for old in self.committed_batch_ids():
-            if old < batch_id - 1:
-                shutil.rmtree(self._alias_dir(old), ignore_errors=True)
+        new_nodes.write.mode("overwrite").parquet(self.committer.dir("labels", batch_id))
+        new_alias.write.mode("overwrite").parquet(self.committer.dir("alias", batch_id))
+        self.committer.commit(batch_id)
 
     # -- lifecycle ---------------------------------------------------------------
 
@@ -174,14 +157,7 @@ class IncrementalComponents:
         checkpoint_dir: str,
         available_now: bool = True,
     ) -> StreamingQuery:
-        writer = (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return foreach_batch(stream, self.process_batch, checkpoint_dir, available_now)
 
     # -- queries over the state ----------------------------------------------
 

@@ -21,10 +21,12 @@ Two entry points:
   in the persisted index on shared storage, not in Spark state — restart
   cheap, corpus unbounded.
 
-Effective exactly-once (ST1 analogue): each batch commits a marker file
-AFTER its output + index append land; a replayed batch (restart mid-batch)
-is skipped if the marker exists. A crash between the index append and the
-marker can leave duplicate index rows for one batch; ``minhash_index_lookup``
+Effective exactly-once (ST1 analogue): each batch commits a marker
+(``streaming/commit.py``'s ``BatchCommitter``) AFTER its output + index
+append land; a replayed batch (restart mid-batch) is skipped if the marker
+exists. Outputs (``batch=<id>``) and index appends are never pruned. A
+crash between the index append and the marker can leave duplicate index
+rows for one batch; ``minhash_index_lookup``
 collapses duplicate candidate pairs, and the post-verify output is
 ``dropDuplicates`` on (new_id, corpus_id), so replay never changes query
 results — at-least-once append + dedup-on-read = exactly-once effect.
@@ -46,6 +48,7 @@ from cdc_connector_spark.ops.dedup import (
     minhash_verified_pairs,
 )
 from cdc_connector_spark.ops.textstats import fingerprint
+from cdc_connector_spark.streaming.commit import BatchCommitter, foreach_batch
 
 
 def exact_dedup_stream(
@@ -72,7 +75,54 @@ def exact_dedup_stream(
     )
 
 
-class StreamingCorpusDedup:
+class _DedupLoop:
+    """What both dedup loops share: per-batch outputs ``<out_dir>/batch=<id>``,
+    the ``_stats`` journal, the marker commit and the stream wiring."""
+
+    def __init__(self, index_path: str, out_dir: str) -> None:
+        self.index_path = index_path
+        self.out_dir = out_dir
+        self.stats: list[dict] = []  # in-session journal, mirrors _stats files
+        self.committer = BatchCommitter(out_dir)
+
+    def committed_batch_ids(self) -> list[int]:
+        return self.committer.committed()
+
+    def _out(self, batch_id: int) -> str:
+        return os.path.join(self.out_dir, f"batch={batch_id}")
+
+    def _journal_and_commit(self, stat: dict) -> None:
+        os.makedirs(os.path.join(self.out_dir, "_stats"), exist_ok=True)
+        with open(os.path.join(self.out_dir, "_stats", f"{stat['batch_id']}.json"), "w") as fh:
+            json.dump(stat, fh)
+        self.stats.append(stat)
+        self.committer.commit(stat["batch_id"])
+
+    def start(
+        self,
+        stream: DataFrame,
+        checkpoint_dir: str,
+        available_now: bool = True,
+    ) -> StreamingQuery:
+        return foreach_batch(stream, self.process_batch, checkpoint_dir, available_now)
+
+    def accepted(self, spark) -> DataFrame:
+        """All documents accepted so far (union of committed batch outputs).
+        Dirs with no parquet footers (an empty trigger, or a batch that
+        kept zero docs) are skipped — schema inference needs at least one
+        footer, and an all-empty read should say so explicitly."""
+        dirs = [
+            d
+            for b in self.committed_batch_ids()
+            if os.path.isdir(d := self._out(b))
+            and any(n.endswith(".parquet") for n in os.listdir(d))
+        ]
+        if not dirs:
+            raise ValueError(f"no non-empty committed batches under {self.out_dir}")
+        return spark.read.parquet(*dirs)
+
+
+class StreamingCorpusDedup(_DedupLoop):
     """foreachBatch applier: exact + near-dup dedup of a document stream
     against itself and the persisted corpus index.
 
@@ -106,8 +156,7 @@ class StreamingCorpusDedup:
         shingle_n: int = 3,
         max_bucket: int = 4000,
     ) -> None:
-        self.index_path = index_path
-        self.out_dir = out_dir
+        super().__init__(index_path, out_dir)
         self.text_col = text_col
         self.id_col = id_col
         self.jaccard_threshold = jaccard_threshold
@@ -115,23 +164,9 @@ class StreamingCorpusDedup:
         self.bands = bands
         self.shingle_n = shingle_n
         self.max_bucket = max_bucket
-        self.stats: list[dict] = []  # in-session journal, mirrors _stats files
-
-    # -- commit bookkeeping -------------------------------------------------
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.out_dir, "_committed", str(batch_id))
-
-    def committed_batch_ids(self) -> list[int]:
-        d = os.path.join(self.out_dir, "_committed")
-        if not os.path.isdir(d):
-            return []
-        return sorted(int(n) for n in os.listdir(d) if n.isdigit())
-
-    # -- the applier --------------------------------------------------------
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if os.path.exists(self._marker(batch_id)):
+        if self.committer.done(batch_id):
             return  # replay after restart — batch already fully committed
         t0 = time.monotonic()
         tc, ic = self.text_col, self.id_col
@@ -145,9 +180,7 @@ class StreamingCorpusDedup:
                 # aggregates the ENTIRE stored bands table even for zero
                 # input rows (r11 review; the semantic twin already
                 # short-circuits)
-                os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-                with open(self._marker(batch_id), "w") as fh:
-                    fh.write("")
+                self.committer.commit(batch_id)
                 return
 
             # 1. exact in-batch: min id per fingerprint
@@ -195,9 +228,7 @@ class StreamingCorpusDedup:
             n_kept = survivors.count()
 
             # 4. commit: output (idempotent overwrite), index append, marker
-            survivors.write.mode("overwrite").parquet(
-                os.path.join(self.out_dir, f"batch={batch_id}")
-            )
+            survivors.write.mode("overwrite").parquet(self._out(batch_id))
             if n_kept:
                 minhash_index_write(
                     survivors, self.index_path, tc, ic,
@@ -205,60 +236,24 @@ class StreamingCorpusDedup:
                     shingle_n=self.shingle_n,
                     mode="append" if have_index else "overwrite",
                 )
-            stat = {
-                "batch_id": batch_id,
-                "n_in": n_in,
-                "dropped_exact": n_in - n_uniq,
-                "dropped_neardup_in_batch": n_uniq - n_novel_in_batch,
-                "dropped_vs_corpus": n_novel_in_batch - n_kept,
-                "kept": n_kept,
-                "seconds": round(time.monotonic() - t0, 3),
-            }
-            os.makedirs(os.path.join(self.out_dir, "_stats"), exist_ok=True)
-            with open(os.path.join(self.out_dir, "_stats", f"{batch_id}.json"), "w") as fh:
-                json.dump(stat, fh)
-            self.stats.append(stat)
-            os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-            with open(self._marker(batch_id), "w") as fh:
-                fh.write("")
+            self._journal_and_commit(
+                {
+                    "batch_id": batch_id,
+                    "n_in": n_in,
+                    "dropped_exact": n_in - n_uniq,
+                    "dropped_neardup_in_batch": n_uniq - n_novel_in_batch,
+                    "dropped_vs_corpus": n_novel_in_batch - n_kept,
+                    "kept": n_kept,
+                    "seconds": round(time.monotonic() - t0, 3),
+                }
+            )
         finally:
             batch.unpersist()
             for df in extra_persisted:
                 df.unpersist()
 
-    # -- lifecycle ----------------------------------------------------------
 
-    def start(
-        self,
-        stream: DataFrame,
-        checkpoint_dir: str,
-        available_now: bool = True,
-    ) -> StreamingQuery:
-        writer = (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-
-    def accepted(self, spark) -> DataFrame:
-        """All documents accepted so far (union of committed batch outputs).
-        Dirs with no parquet footers (a batch that kept zero docs) are
-        skipped — schema inference needs at least one footer."""
-        dirs = [
-            d
-            for b in self.committed_batch_ids()
-            if os.path.isdir(d := os.path.join(self.out_dir, f"batch={b}"))
-            and any(n.endswith(".parquet") for n in os.listdir(d))
-        ]
-        if not dirs:
-            raise ValueError(f"no non-empty committed batches under {self.out_dir}")
-        return spark.read.parquet(*dirs)
-
-
-class StreamingSemanticDedup:
+class StreamingSemanticDedup(_DedupLoop):
     """foreachBatch applier: SEMANTIC (embedding-cosine) dedup of a vector
     stream against itself and the persisted SemDedup index — the embedding
     twin of ``StreamingCorpusDedup``, with the k-means cluster layout
@@ -295,24 +290,13 @@ class StreamingSemanticDedup:
         threshold: float = 0.95,
         max_cluster: int = 100_000,
     ) -> None:
-        self.index_path = index_path
-        self.out_dir = out_dir
+        super().__init__(index_path, out_dir)
         self.id_col = id_col
         self.vec_col = vec_col
         self.k = k
         self.iters = iters
         self.threshold = threshold
         self.max_cluster = max_cluster
-        self.stats: list[dict] = []
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.out_dir, "_committed", str(batch_id))
-
-    def committed_batch_ids(self) -> list[int]:
-        d = os.path.join(self.out_dir, "_committed")
-        if not os.path.isdir(d):
-            return []
-        return sorted(int(n) for n in os.listdir(d) if n.isdigit())
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         import json as _json
@@ -327,7 +311,7 @@ class StreamingSemanticDedup:
             semdedup_index_write,
         )
 
-        if os.path.exists(self._marker(batch_id)):
+        if self.committer.done(batch_id):
             return
         t0 = time.monotonic()
         ic, vc = self.id_col, self.vec_col
@@ -339,11 +323,8 @@ class StreamingSemanticDedup:
                 # marker implies output dir exists — keep that invariant for
                 # empty triggers too (accepted() additionally skips dirs
                 # with no parquet footers)
-                batch.write.mode("overwrite").parquet(
-                    os.path.join(self.out_dir, f"batch={batch_id}")
-                )
-                os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-                open(self._marker(batch_id), "w").close()
+                batch.write.mode("overwrite").parquet(self._out(batch_id))
+                self.committer.commit(batch_id)
                 return
             have_index = os.path.exists(os.path.join(self.index_path, "_META"))
             if have_index:
@@ -391,59 +372,24 @@ class StreamingSemanticDedup:
             extra_persisted.append(survivors)
             n_kept = survivors.count()
 
-            survivors.write.mode("overwrite").parquet(
-                os.path.join(self.out_dir, f"batch={batch_id}")
-            )
+            survivors.write.mode("overwrite").parquet(self._out(batch_id))
             if n_kept:
                 semdedup_index_write(
                     survivors, self.index_path, idx_k, idx_iters, ic, vc,
                     mode="append" if have_index else "overwrite",
                     centroids=None if have_index else C,
                 )
-            stat = {
-                "batch_id": batch_id,
-                "n_in": n_in,
-                "dropped_in_batch": n_in - n_novel,
-                "dropped_vs_corpus": n_novel - n_kept,
-                "kept": n_kept,
-                "seconds": round(time.monotonic() - t0, 3),
-            }
-            os.makedirs(os.path.join(self.out_dir, "_stats"), exist_ok=True)
-            with open(os.path.join(self.out_dir, "_stats", f"{batch_id}.json"), "w") as fh:
-                json.dump(stat, fh)
-            self.stats.append(stat)
-            os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-            open(self._marker(batch_id), "w").close()
+            self._journal_and_commit(
+                {
+                    "batch_id": batch_id,
+                    "n_in": n_in,
+                    "dropped_in_batch": n_in - n_novel,
+                    "dropped_vs_corpus": n_novel - n_kept,
+                    "kept": n_kept,
+                    "seconds": round(time.monotonic() - t0, 3),
+                }
+            )
         finally:
             batch.unpersist()
             for df in extra_persisted:
                 df.unpersist()
-
-    def start(
-        self,
-        stream: DataFrame,
-        checkpoint_dir: str,
-        available_now: bool = True,
-    ) -> StreamingQuery:
-        writer = (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-
-    def accepted(self, spark) -> DataFrame:
-        # skip dirs with no parquet footers (empty trigger / zero survivors):
-        # schema inference needs at least one footer, and an all-empty read
-        # should say so explicitly
-        dirs = [
-            d
-            for b in self.committed_batch_ids()
-            if os.path.isdir(d := os.path.join(self.out_dir, f"batch={b}"))
-            and any(n.endswith(".parquet") for n in os.listdir(d))
-        ]
-        if not dirs:
-            raise ValueError(f"no non-empty committed batches under {self.out_dir}")
-        return spark.read.parquet(*dirs)

@@ -14,18 +14,20 @@ readout reuses ``population_stability``'s exact arithmetic — Laplace
 smoothing, round-12 terms, DECIMAL accumulation — so an alert threshold
 compares the SAME number the batch op would compute.
 
-Exactly-once by the house marker-commit protocol (counter snapshots per
-batch, marker last, replay short-circuit, crash-cushion pruning).
+Exactly-once by the marker commit of ``streaming/commit.py``
+(``BatchCommitter``: a counter snapshot per batch, marker last, replay
+short-circuit, crash-cushion pruning).
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from cdc_connector_spark.streaming.commit import BatchCommitter, foreach_batch
 
 
 class StreamingDriftMonitor:
@@ -51,6 +53,7 @@ class StreamingDriftMonitor:
         self.hi = hi
         self.bins = bins
         self.width = (hi - lo) / bins
+        self.committer = BatchCommitter(state_dir, ("hist",))
 
     # -- binning (the histogram_numeric / PSI expression) ---------------------
 
@@ -81,46 +84,23 @@ class StreamingDriftMonitor:
             )
         self._counts(df).write.parquet(self._ref_dir())
 
-    # -- commit bookkeeping --------------------------------------------------
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.state_dir, "_committed", str(batch_id))
-
     def committed_batch_ids(self) -> list[int]:
-        d = os.path.join(self.state_dir, "_committed")
-        if not os.path.isdir(d):
-            return []
-        return sorted(int(n) for n in os.listdir(d) if n.isdigit())
-
-    def _hist_dir(self, batch_id: int) -> str:
-        return os.path.join(self.state_dir, f"hist_batch={batch_id}")
-
-    def _latest_hist(self, spark) -> DataFrame | None:
-        done = self.committed_batch_ids()
-        if not done:
-            return None
-        return spark.read.parquet(self._hist_dir(done[-1]))
+        return self.committer.committed()
 
     # -- the applier -----------------------------------------------------------
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if os.path.exists(self._marker(batch_id)):
+        if self.committer.done(batch_id):
             return  # replayed batch — already committed
-        spark = batch_df.sparkSession
         add = self._counts(batch_df)
-        prev = self._latest_hist(spark)
+        prev = self.committer.read_latest(batch_df.sparkSession, "hist")
         merged = (
             add.unionByName(prev).groupBy("bin").agg(F.sum("cnt").alias("cnt"))
             if prev is not None
             else add
         )
-        merged.write.mode("overwrite").parquet(self._hist_dir(batch_id))
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        with open(self._marker(batch_id), "w") as fh:
-            fh.write("")
-        for old in self.committed_batch_ids():
-            if old < batch_id - 1:
-                shutil.rmtree(self._hist_dir(old), ignore_errors=True)
+        merged.write.mode("overwrite").parquet(self.committer.dir("hist", batch_id))
+        self.committer.commit(batch_id)
 
     # -- lifecycle ---------------------------------------------------------------
 
@@ -130,19 +110,12 @@ class StreamingDriftMonitor:
         checkpoint_dir: str,
         available_now: bool = True,
     ) -> StreamingQuery:
-        writer = (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return foreach_batch(stream, self.process_batch, checkpoint_dir, available_now)
 
     # -- queries over the state ----------------------------------------------
 
     def histogram(self, spark) -> DataFrame:
-        out = self._latest_hist(spark)
+        out = self.committer.read_latest(spark, "hist")
         if out is None:
             raise ValueError(f"no committed batches under {self.state_dir}")
         return out

@@ -8,11 +8,12 @@ vocab-id sequences in shard-partitioned parquet — without a batch rebuild:
     deterministic shard assignment (``corpus.shard_plan``) → per-batch
     shard-partitioned append → marker commit
 
-Exactly-once (the ST1 pattern shared with streaming/dedup.py): each batch
+Exactly-once by the marker commit of ``streaming/commit.py``: each batch
 writes its output under ``data/batch=<id>/`` with mode=overwrite, then
-commits a marker file; a replayed batch short-circuits on the marker, and
-a crash between write and marker re-overwrites the same directory —
-readers see only marker-committed batches (``exported``).
+``BatchCommitter`` commits its marker; a replayed batch short-circuits on
+the marker, and a crash between write and marker re-overwrites the same
+directory — readers see only marker-committed batches (``exported``).
+The ``data/batch=*`` outputs are append-only and never pruned.
 
 The vocabulary is a BUILD ARTIFACT, pinned at ``_vocab`` on first start
 (the tokenizer-pinning rule: re-deriving it per batch would silently
@@ -35,6 +36,8 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cdc_connector_spark.streaming.commit import BatchCommitter, foreach_batch
+
 
 class StreamingTrainingExport:
     def __init__(
@@ -54,6 +57,7 @@ class StreamingTrainingExport:
         self.id_col = id_col
         self.min_tokens = min_tokens
         self.stats: list[dict] = []
+        self.committer = BatchCommitter(out_dir)
         vocab_path = os.path.join(out_dir, "_vocab")
         if os.path.exists(vocab_path):
             self.vocab = spark.read.parquet(vocab_path)
@@ -67,17 +71,11 @@ class StreamingTrainingExport:
             vocab.write.mode("overwrite").parquet(vocab_path)
             self.vocab = spark.read.parquet(vocab_path)
 
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.out_dir, "_committed", str(batch_id))
-
     def committed_batch_ids(self) -> list[int]:
-        d = os.path.join(self.out_dir, "_committed")
-        if not os.path.isdir(d):
-            return []
-        return sorted(int(x) for x in os.listdir(d))
+        return self.committer.committed()
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if os.path.exists(self._marker(batch_id)):
+        if self.committer.done(batch_id):
             return  # replay after restart: batch already committed
         from cdc_connector_spark.ops.corpus import shard_plan
         from cdc_connector_spark.ops.textstats import encode_with_vocab
@@ -108,17 +106,10 @@ class StreamingTrainingExport:
         with open(os.path.join(self.out_dir, "_stats", f"{batch_id}.json"), "w") as fh:
             json.dump(stat, fh)
         self.stats.append(stat)
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        with open(self._marker(batch_id), "w") as fh:
-            fh.write("")
+        self.committer.commit(batch_id)
 
     def start(self, stream_df: DataFrame, checkpoint_dir: str, trigger_once: bool = True):
-        writer = stream_df.writeStream.foreachBatch(self.process_batch).option(
-            "checkpointLocation", checkpoint_dir
-        )
-        if trigger_once:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return foreach_batch(stream_df, self.process_batch, checkpoint_dir, trigger_once)
 
     def exported(self) -> DataFrame:
         """All marker-committed exported docs: (id, n_tokens, token_ids,

@@ -15,10 +15,10 @@ through; state growth itself is a health signal).
 Per batch: new ids fold into the islands via the classic gaps-and-islands
 merge (per-group sort, running-max-hi window, island boundaries where
 lo > running_hi + 1) — cost is O(batch + islands), never O(history).
-Marker-committed exactly-once (the house rule): islands for batch N write
-to their own directory, the marker lands last, a replayed batch short-
-circuits on the marker; ``holes()`` reads only the latest committed
-islands.
+Exactly-once by the marker commit of ``streaming/commit.py``: islands for
+batch N write to ``islands_batch=N`` and ``BatchCommitter`` marks,
+replay-skips and prunes them; ``holes()`` reads only the latest
+committed islands.
 
 Out-of-order arrival is handled by construction: a hole REPORTED now and
 FILLED by a later batch disappears from the next ``holes()`` — the
@@ -28,11 +28,11 @@ monitor reports "missing as of the data seen", and the alert policy
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from cdc_connector_spark.streaming.commit import BatchCommitter, foreach_batch
 
 
 def _fold_islands(ranges: DataFrame, keys: list[str]) -> DataFrame:
@@ -103,33 +103,16 @@ class StreamingGapMonitor:
         self.state_dir = state_dir
         self.id_col = id_col
         self.group_col = group_col
-
-    # -- commit bookkeeping ------------------------------------------------
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.state_dir, "_committed", str(batch_id))
+        self.committer = BatchCommitter(state_dir, ("islands",))
 
     def committed_batch_ids(self) -> list[int]:
-        d = os.path.join(self.state_dir, "_committed")
-        if not os.path.isdir(d):
-            return []
-        return sorted(int(n) for n in os.listdir(d) if n.isdigit())
-
-    def _islands_dir(self, batch_id: int) -> str:
-        return os.path.join(self.state_dir, f"islands_batch={batch_id}")
-
-    def _latest_islands(self, spark) -> DataFrame | None:
-        done = self.committed_batch_ids()
-        if not done:
-            return None
-        return spark.read.parquet(self._islands_dir(done[-1]))
+        return self.committer.committed()
 
     # -- the applier ---------------------------------------------------------
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if os.path.exists(self._marker(batch_id)):
+        if self.committer.done(batch_id):
             return  # replayed batch — already committed
-        spark = batch_df.sparkSession
         keys = [self.group_col] if self.group_col else []
         new = (
             batch_df.filter(F.col(self.id_col).isNotNull())
@@ -140,26 +123,11 @@ class StreamingGapMonitor:
             )
             .distinct()
         )
-        prev = self._latest_islands(spark)
+        prev = self.committer.read_latest(batch_df.sparkSession, "islands")
         ranges = new.unionByName(prev) if prev is not None else new
         merged = merge_islands(ranges, self.group_col)
-        # islands for THIS batch land in their own dir (idempotent
-        # overwrite), the marker last — the dedup-loop commit protocol
-        merged.write.mode("overwrite").parquet(self._islands_dir(batch_id))
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        with open(self._marker(batch_id), "w") as fh:
-            fh.write("")
-        # prune superseded snapshots — without this, storage grows
-        # linearly with batch count even though only the latest islands
-        # dir is ever read. The IMMEDIATELY-previous snapshot is kept as
-        # the crash cushion (an uncommitted-replay recovery reads it);
-        # markers stay for every batch (replay short-circuiting needs
-        # them, and they are empty files)
-        import shutil
-
-        for old in self.committed_batch_ids():
-            if old < batch_id - 1:
-                shutil.rmtree(self._islands_dir(old), ignore_errors=True)
+        merged.write.mode("overwrite").parquet(self.committer.dir("islands", batch_id))
+        self.committer.commit(batch_id)
 
     # -- lifecycle -----------------------------------------------------------
 
@@ -169,19 +137,12 @@ class StreamingGapMonitor:
         checkpoint_dir: str,
         available_now: bool = True,
     ) -> StreamingQuery:
-        writer = (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return foreach_batch(stream, self.process_batch, checkpoint_dir, available_now)
 
     # -- queries over the state ----------------------------------------------
 
     def islands(self, spark) -> DataFrame:
-        out = self._latest_islands(spark)
+        out = self.committer.read_latest(spark, "islands")
         if out is None:
             raise ValueError(f"no committed batches under {self.state_dir}")
         return out

@@ -11,8 +11,8 @@ merges into the persisted state exactly (``ops/sketch.py::hll_merge``);
 after any number of batches the state equals the one-shot sketch
 register-for-register (pinned by ``tests/test_streaming_hll.py``).
 
-State is |groups| × 2^p rows FOREVER. Exactly-once by the house
-marker-commit protocol (see ``StreamingCMS``). Hashes are the portable
+State is |groups| × 2^p rows FOREVER. Exactly-once by the marker
+commit of ``streaming/commit.py`` (``BatchCommitter``). Hashes are the portable
 60-bit md5 fold, so the persisted registers — and estimates — audit in
 any engine (``hll_stream_merge_orders`` value-verifies the batch merge
 chain against DuckDB).
@@ -20,13 +20,11 @@ chain against DuckDB).
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from cdc_connector_spark.ops.sketch import hll_estimate, hll_merge, hll_registers
+from cdc_connector_spark.streaming.commit import BatchCommitter, foreach_batch
 
 
 class StreamingHLL:
@@ -44,45 +42,23 @@ class StreamingHLL:
         self.key_col = key_col
         self.group_col = group_col
         self.p = p
-
-    # -- commit bookkeeping ---------------------------------------------------
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.state_dir, "_committed", str(batch_id))
+        self.committer = BatchCommitter(state_dir, ("registers",))
 
     def committed_batch_ids(self) -> list[int]:
-        d = os.path.join(self.state_dir, "_committed")
-        if not os.path.isdir(d):
-            return []
-        return sorted(int(n) for n in os.listdir(d) if n.isdigit())
-
-    def _regs_dir(self, batch_id: int) -> str:
-        return os.path.join(self.state_dir, f"registers_batch={batch_id}")
-
-    def _latest_regs(self, spark) -> DataFrame | None:
-        done = self.committed_batch_ids()
-        if not done:
-            return None
-        return spark.read.parquet(self._regs_dir(done[-1]))
+        return self.committer.committed()
 
     # -- the applier ------------------------------------------------------------
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if os.path.exists(self._marker(batch_id)):
+        if self.committer.done(batch_id):
             return  # replayed batch — already committed
-        spark = batch_df.sparkSession
         add = hll_registers(batch_df, self.key_col, self.group_col, p=self.p)
-        prev = self._latest_regs(spark)
+        prev = self.committer.read_latest(batch_df.sparkSession, "registers")
         merged = hll_merge([add, prev]) if prev is not None else add
         merged.select("grp", "bucket", "mreg").write.mode("overwrite").parquet(
-            self._regs_dir(batch_id)
+            self.committer.dir("registers", batch_id)
         )
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        with open(self._marker(batch_id), "w") as fh:
-            fh.write("")
-        for old in self.committed_batch_ids():
-            if old < batch_id - 1:
-                shutil.rmtree(self._regs_dir(old), ignore_errors=True)
+        self.committer.commit(batch_id)
 
     # -- lifecycle ----------------------------------------------------------------
 
@@ -92,19 +68,12 @@ class StreamingHLL:
         checkpoint_dir: str,
         available_now: bool = True,
     ) -> StreamingQuery:
-        writer = (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return foreach_batch(stream, self.process_batch, checkpoint_dir, available_now)
 
     # -- queries over the state -------------------------------------------------
 
     def registers(self, spark) -> DataFrame:
-        out = self._latest_regs(spark)
+        out = self.committer.read_latest(spark, "registers")
         if out is None:
             raise ValueError(f"no committed HLL state under {self.state_dir}")
         return out

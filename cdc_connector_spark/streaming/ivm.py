@@ -8,7 +8,8 @@ so a trigger's cost is O(batch · match fan-out), never a re-join of the
 full tables. Queries read the view sink directly (snapshot isolation,
 time travel, CDF — everything the table format gives every sink).
 
-Per-batch protocol (side = "a" or "b"):
+Per-batch protocol (side = "a" or "b"; each side has its own
+``streaming/commit.py`` ``BatchCommitter`` under ``<marker_dir>/<side>``):
 
 1. replay guard — skip if this side's batch marker exists;
 2. touched keys from the raw delta (upserts AND delete before-keys);
@@ -40,13 +41,15 @@ import threading
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cdc_connector_spark.streaming.commit import BatchCommitter, foreach_batch
+
 
 class StreamingJoinView:
     """foreachBatch appliers maintaining ``view = A ⋈ B`` (inner, equi).
 
-    ``a_sink`` / ``b_sink`` / ``view_sink`` are merge sinks (TxLog or
-    Parquet — duck-typed: ``apply``/``read``); the view sink's key_cols
-    must be ``a_pk + b_pk``. Join keys may differ from PKs."""
+    ``a_sink`` / ``b_sink`` / ``view_sink`` are merge sinks (duck-typed:
+    ``apply``/``read``); the view sink's key_cols must be ``a_pk + b_pk``.
+    Join keys may differ from PKs."""
 
     def __init__(
         self,
@@ -75,14 +78,9 @@ class StreamingJoinView:
         # deployments need an external serializer (one union stream, or a
         # storage-level lock); single-driver is the supported shape.
         self._lock = threading.Lock()
-
-    def _marker(self, side: str, batch_id: int) -> str:
-        return os.path.join(self.marker_dir, f"{side}-{batch_id}")
-
-    def _commit(self, side: str, batch_id: int) -> None:
-        os.makedirs(self.marker_dir, exist_ok=True)
-        with open(self._marker(side, batch_id), "w") as f:
-            f.write("")
+        self.committers = {
+            side: BatchCommitter(os.path.join(marker_dir, side)) for side in ("a", "b")
+        }
 
     # -- view-delta synthesis ----------------------------------------------
 
@@ -111,41 +109,32 @@ class StreamingJoinView:
 
     # -- appliers (pass to foreachBatch of each side's stream) -------------
 
-    def process_a_batch(self, delta: DataFrame, batch_id: int) -> None:
+    def _process(self, side: str, delta: DataFrame, batch_id: int) -> None:
+        sink, pk, other = (
+            (self.a_sink, self.a_pk, self.b_sink)
+            if side == "a"
+            else (self.b_sink, self.b_pk, self.a_sink)
+        )
+        committer = self.committers[side]
         with self._lock:
-            if os.path.exists(self._marker("a", batch_id)):
+            if committer.done(batch_id):
                 return
             delta = delta.persist()
-            touched = delta.select(*self.a_pk).distinct().persist()
+            touched = delta.select(*pk).distinct().persist()
             try:
-                self.a_sink.apply(delta)
-                a_new = self.a_sink.read()
-                regen = a_new.join(touched, self.a_pk, "left_semi").join(
-                    self.b_sink.read(), self.on
-                )
-                self.view_sink.apply(self._view_changelog(touched, self.a_pk, regen))
-                self._commit("a", batch_id)
+                sink.apply(delta)
+                regen = sink.read().join(touched, pk, "left_semi").join(other.read(), self.on)
+                self.view_sink.apply(self._view_changelog(touched, pk, regen))
+                committer.commit(batch_id)
             finally:
                 touched.unpersist()
                 delta.unpersist()
 
+    def process_a_batch(self, delta: DataFrame, batch_id: int) -> None:
+        self._process("a", delta, batch_id)
+
     def process_b_batch(self, delta: DataFrame, batch_id: int) -> None:
-        with self._lock:
-            if os.path.exists(self._marker("b", batch_id)):
-                return
-            delta = delta.persist()
-            touched = delta.select(*self.b_pk).distinct().persist()
-            try:
-                self.b_sink.apply(delta)
-                b_new = self.b_sink.read()
-                regen = self.a_sink.read().join(
-                    b_new.join(touched, self.b_pk, "left_semi"), self.on
-                )
-                self.view_sink.apply(self._view_changelog(touched, self.b_pk, regen))
-                self._commit("b", batch_id)
-            finally:
-                touched.unpersist()
-                delta.unpersist()
+        self._process("b", delta, batch_id)
 
     def view(self) -> DataFrame:
         return self.view_sink.read()
@@ -157,21 +146,7 @@ class StreamingJoinView:
         Each side runs as its OWN streaming query with its own checkpoint;
         the shared instance lock serializes whole batches across the two
         queries (see __init__) so every regen reads post-commit state."""
-        writer = (
-            stream.writeStream.foreachBatch(self.process_a_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return foreach_batch(stream, self.process_a_batch, checkpoint_dir, available_now)
 
     def start_b(self, stream: DataFrame, checkpoint_dir: str, available_now: bool = True):
-        writer = (
-            stream.writeStream.foreachBatch(self.process_b_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return foreach_batch(stream, self.process_b_batch, checkpoint_dir, available_now)

@@ -16,10 +16,9 @@ monitor viable where an exact per-key table grows without bound. Each
 batch's work is O(batch) to hash + one bounded merge; no corpus-keyed
 shuffle ever happens because the corpus is never re-read.
 
-Exactly-once by the house marker-commit protocol (see ``StreamingCMS``):
-batch N's merged sketch writes to its own directory, the marker lands
-last, a replayed batch short-circuits on the marker; the previous
-snapshot is the crash cushion and older ones are pruned.
+Exactly-once by the marker commit of ``streaming/commit.py``: batch N's
+merged sketch writes to ``sketch_batch=N`` and ``BatchCommitter`` marks,
+replay-skips and prunes it.
 
 Hashes are the portable 60-bit md5 fold, so the persisted sketch — and
 the estimates derived from it — are auditable by ANY engine; the
@@ -32,13 +31,11 @@ This is the repo's PRODUCTION-shaped sketch entry (judge r9 ask #3):
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from cdc_connector_spark.ops.sketch import kmv_estimate, kmv_merge, kmv_sketch
+from cdc_connector_spark.streaming.commit import BatchCommitter, foreach_batch
 
 
 class StreamingKMV:
@@ -56,45 +53,23 @@ class StreamingKMV:
         self.key_col = key_col
         self.group_col = group_col
         self.k = k
-
-    # -- commit bookkeeping ---------------------------------------------------
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.state_dir, "_committed", str(batch_id))
+        self.committer = BatchCommitter(state_dir, ("sketch",))
 
     def committed_batch_ids(self) -> list[int]:
-        d = os.path.join(self.state_dir, "_committed")
-        if not os.path.isdir(d):
-            return []
-        return sorted(int(n) for n in os.listdir(d) if n.isdigit())
-
-    def _sketch_dir(self, batch_id: int) -> str:
-        return os.path.join(self.state_dir, f"sketch_batch={batch_id}")
-
-    def _latest_sketch(self, spark) -> DataFrame | None:
-        done = self.committed_batch_ids()
-        if not done:
-            return None
-        return spark.read.parquet(self._sketch_dir(done[-1]))
+        return self.committer.committed()
 
     # -- the applier ------------------------------------------------------------
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if os.path.exists(self._marker(batch_id)):
+        if self.committer.done(batch_id):
             return  # replayed batch — already committed
-        spark = batch_df.sparkSession
         add = kmv_sketch(batch_df, self.key_col, self.group_col, k=self.k)
-        prev = self._latest_sketch(spark)
+        prev = self.committer.read_latest(batch_df.sparkSession, "sketch")
         merged = kmv_merge([add, prev], k=self.k) if prev is not None else add
         merged.select("grp", "h", "rk").write.mode("overwrite").parquet(
-            self._sketch_dir(batch_id)
+            self.committer.dir("sketch", batch_id)
         )
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        with open(self._marker(batch_id), "w") as fh:
-            fh.write("")
-        for old in self.committed_batch_ids():
-            if old < batch_id - 1:
-                shutil.rmtree(self._sketch_dir(old), ignore_errors=True)
+        self.committer.commit(batch_id)
 
     # -- lifecycle ----------------------------------------------------------------
 
@@ -104,19 +79,12 @@ class StreamingKMV:
         checkpoint_dir: str,
         available_now: bool = True,
     ) -> StreamingQuery:
-        writer = (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return foreach_batch(stream, self.process_batch, checkpoint_dir, available_now)
 
     # -- queries over the state -------------------------------------------------
 
     def sketch(self, spark) -> DataFrame:
-        out = self._latest_sketch(spark)
+        out = self.committer.read_latest(spark, "sketch")
         if out is None:
             raise ValueError(f"no committed KMV state under {self.state_dir}")
         return out

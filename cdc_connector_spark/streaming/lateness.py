@@ -21,19 +21,18 @@ and the r11 watermark-loop test (test_streaming_windows.py) pins that
 the chosen bound's predicted drops equal a real stream's measured
 numRowsDroppedByWatermark.
 
-Exactly-once by the house marker-commit protocol (see ``StreamingCMS``).
+Exactly-once by the marker commit of ``streaming/commit.py``
+(``BatchCommitter``).
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from cdc_connector_spark.ops.timeseries import watermark_sizing
+from cdc_connector_spark.streaming.commit import BatchCommitter, foreach_batch
 
 
 class StreamingLateness:
@@ -53,33 +52,16 @@ class StreamingLateness:
         self.ts_col = ts_col
         self.ingest_ts_col = ingest_ts_col
         self.type_col = type_col
-
-    # -- commit bookkeeping ---------------------------------------------------
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.state_dir, "_committed", str(batch_id))
+        self.committer = BatchCommitter(state_dir, ("late",))
 
     def committed_batch_ids(self) -> list[int]:
-        d = os.path.join(self.state_dir, "_committed")
-        if not os.path.isdir(d):
-            return []
-        return sorted(int(n) for n in os.listdir(d) if n.isdigit())
-
-    def _dir(self, batch_id: int) -> str:
-        return os.path.join(self.state_dir, f"late_batch={batch_id}")
-
-    def _latest(self, spark) -> DataFrame | None:
-        done = self.committed_batch_ids()
-        if not done:
-            return None
-        return spark.read.parquet(self._dir(done[-1]))
+        return self.committer.committed()
 
     # -- the applier ------------------------------------------------------------
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if os.path.exists(self._marker(batch_id)):
+        if self.committer.done(batch_id):
             return  # replayed batch — already committed
-        spark = batch_df.sparkSession
         # one scan of the batch; drop the share — it does not merge,
         # and report() recomputes it from the merged exact counters
         cur = watermark_sizing(
@@ -89,20 +71,15 @@ class StreamingLateness:
             ingest_ts_col=self.ingest_ts_col,
             type_col=self.type_col,
         ).select("event_type", "watermark_minutes", "total", "late")
-        prev = self._latest(spark)
+        prev = self.committer.read_latest(batch_df.sparkSession, "late")
         if prev is not None:
             cur = (
                 cur.unionByName(prev)
                 .groupBy("event_type", "watermark_minutes")
                 .agg(F.sum("total").alias("total"), F.sum("late").alias("late"))
             )
-        cur.write.mode("overwrite").parquet(self._dir(batch_id))
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        with open(self._marker(batch_id), "w") as fh:
-            fh.write("")
-        for old in self.committed_batch_ids():
-            if old < batch_id - 1:
-                shutil.rmtree(self._dir(old), ignore_errors=True)
+        cur.write.mode("overwrite").parquet(self.committer.dir("late", batch_id))
+        self.committer.commit(batch_id)
 
     # -- lifecycle ----------------------------------------------------------------
 
@@ -112,14 +89,7 @@ class StreamingLateness:
         checkpoint_dir: str,
         available_now: bool = True,
     ) -> StreamingQuery:
-        writer = (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return foreach_batch(stream, self.process_batch, checkpoint_dir, available_now)
 
     # -- queries over the state -------------------------------------------------
 
@@ -127,7 +97,7 @@ class StreamingLateness:
         """Current sizing report — (event_type, watermark_minutes, total,
         late, late_share), the exact ``watermark_sizing`` shape from the
         merged exact counters. Reads ONLY the bounded state table."""
-        state = self._latest(spark)
+        state = self.committer.read_latest(spark, "late")
         if state is None:
             raise ValueError(f"no committed lateness state under {self.state_dir}")
         return state.select(

@@ -23,6 +23,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from cdc_connector_spark.changelog.envelope import apply_casts, apply_renames, envelope_schema, flatten_envelope
 from cdc_connector_spark.changelog.txlog import TxLogMergeSink
+from cdc_connector_spark.streaming.commit import foreach_batch
 
 
 class ChangelogStream:
@@ -105,14 +106,7 @@ class ChangelogStream:
             .option("maxFilesPerTrigger", str(self.max_files_per_trigger))
             .parquet(self.source_dir)
         )
-        writer = (
-            env.writeStream.foreachBatch(self._apply_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .outputMode("update")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return foreach_batch(env, self._apply_batch, self.checkpoint_dir, available_now)
 
     def run_until_caught_up(self, timeout_s: int = 300) -> None:
         """Process everything currently in the source dir, then stop (the

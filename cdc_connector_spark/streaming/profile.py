@@ -19,19 +19,18 @@ micros), so stream-side fingerprints are directly comparable against a
 batch-side source profile — the source-vs-sink check becomes "diff two
 bounded state tables", no table scan at compare time.
 
-Exactly-once by the house marker-commit protocol (see ``StreamingCMS``).
+Exactly-once by the marker commit of ``streaming/commit.py``
+(``BatchCommitter``).
 """
 
 from __future__ import annotations
-
-import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from cdc_connector_spark.ops.sketch import hll_estimate, hll_merge
+from cdc_connector_spark.streaming.commit import BatchCommitter, foreach_batch
 from cdc_connector_spark.validation.checks import column_profile_state
 
 
@@ -48,36 +47,20 @@ class StreamingColumnProfile:
         self.state_dir = state_dir
         self.cols = cols
         self.p = p
-
-    # -- commit bookkeeping ---------------------------------------------------
-
-    def _marker(self, batch_id: int) -> str:
-        return os.path.join(self.state_dir, "_committed", str(batch_id))
+        self.committer = BatchCommitter(state_dir, ("counts", "registers"))
 
     def committed_batch_ids(self) -> list[int]:
-        d = os.path.join(self.state_dir, "_committed")
-        if not os.path.isdir(d):
-            return []
-        return sorted(int(n) for n in os.listdir(d) if n.isdigit())
-
-    def _dir(self, kind: str, batch_id: int) -> str:
-        return os.path.join(self.state_dir, f"{kind}_batch={batch_id}")
-
-    def _latest(self, spark, kind: str) -> DataFrame | None:
-        done = self.committed_batch_ids()
-        if not done:
-            return None
-        return spark.read.parquet(self._dir(kind, done[-1]))
+        return self.committer.committed()
 
     # -- the applier ------------------------------------------------------------
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if os.path.exists(self._marker(batch_id)):
+        if self.committer.done(batch_id):
             return  # replayed batch — already committed
         spark = batch_df.sparkSession
         counts, regs = column_profile_state(batch_df, self.cols, p=self.p)
-        prev_counts = self._latest(spark, "counts")
-        prev_regs = self._latest(spark, "registers")
+        prev_counts = self.committer.read_latest(spark, "counts")
+        prev_regs = self.committer.read_latest(spark, "registers")
         if prev_counts is not None:
             counts = (
                 counts.unionByName(prev_counts)
@@ -89,17 +72,11 @@ class StreamingColumnProfile:
                 )
             )
             regs = hll_merge([regs, prev_regs])
-        counts.write.mode("overwrite").parquet(self._dir("counts", batch_id))
+        counts.write.mode("overwrite").parquet(self.committer.dir("counts", batch_id))
         regs.select("grp", "bucket", "mreg").write.mode("overwrite").parquet(
-            self._dir("registers", batch_id)
+            self.committer.dir("registers", batch_id)
         )
-        os.makedirs(os.path.dirname(self._marker(batch_id)), exist_ok=True)
-        with open(self._marker(batch_id), "w") as fh:
-            fh.write("")
-        for old in self.committed_batch_ids():
-            if old < batch_id - 1:
-                shutil.rmtree(self._dir("counts", old), ignore_errors=True)
-                shutil.rmtree(self._dir("registers", old), ignore_errors=True)
+        self.committer.commit(batch_id)
 
     # -- lifecycle ----------------------------------------------------------------
 
@@ -109,14 +86,7 @@ class StreamingColumnProfile:
         checkpoint_dir: str,
         available_now: bool = True,
     ) -> StreamingQuery:
-        writer = (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update")
-        )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return foreach_batch(stream, self.process_batch, checkpoint_dir, available_now)
 
     # -- queries over the state -------------------------------------------------
 
@@ -124,8 +94,8 @@ class StreamingColumnProfile:
         """Current per-column profile: (column, rows, nulls, fp,
         distinct_est) — counts exact, distinct from the register state.
         Reads ONLY the bounded state tables."""
-        counts = self._latest(spark, "counts")
-        regs = self._latest(spark, "registers")
+        counts = self.committer.read_latest(spark, "counts")
+        regs = self.committer.read_latest(spark, "registers")
         if counts is None or regs is None:
             raise ValueError(f"no committed profile state under {self.state_dir}")
         est = hll_estimate(regs, p=self.p).select(

@@ -3,6 +3,8 @@ Levenshtein verify)."""
 
 from __future__ import annotations
 
+import itertools
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -745,8 +747,15 @@ def test_positional_prefix_banding_equals_brute_force(spark):
     brute = _brute_pairs(rows_c, 2)
     assert set(got_c) <= set(brute)
     assert all(brute[k] == v for k, v in got_c.items())
-    # the 1-token-shift twins must be found (they share every base token at
-    # |Δpos| = 1 <= d): each (2i, 2i+1) twin pair is within 2 edits only if
-    # the suffix edit kept it close; check at least the exact-dup families
-    dup_pairs = {k for k in brute if brute[k] <= 2}
-    assert set(got_c) == dup_pairs
+    # the expected pairs, from the construction: two families — the base
+    # rows (even ids) and the shifted twins (odd ids). Within a family two
+    # rows differ only in the counter token, one edit apart, and share
+    # every other token at the same position, so token blocking must pair
+    # them; a base and a twin are 4 edits apart ("zz " + the last char)
+    bases = sorted(i for i, _ in rows_c if i % 2 == 0)
+    twins = sorted(i for i, _ in rows_c if i % 2 == 1)
+    family = {
+        pair for ids in (bases, twins) for pair in itertools.combinations(ids, 2)
+    }
+    assert family <= set(brute)
+    assert set(got_c) == family

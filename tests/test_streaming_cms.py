@@ -86,7 +86,7 @@ def test_uncommitted_rerun_converges(spark, tmp_path):
     b1 = spark.createDataFrame([("a", 1), ("b", 1)], SCHEMA)
     mon.process_batch(b1, 1)
     # simulate crash-after-write-before-marker on batch 1, then replay
-    os.remove(mon._marker(1))
+    os.remove(mon.committer.marker(1))
     mon.process_batch(b1, 1)
     est = {
         r["key"]: r["est"]

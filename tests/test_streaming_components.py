@@ -67,7 +67,7 @@ def test_replay_and_crash_window(spark, tmp_path):
     mon.process_batch(_edges(spark, BATCHES[2]), 2)
     assert _got(spark, mon) == before
     # crash window: marker lost after write -> rerun converges
-    os.remove(mon._marker(2))
+    os.remove(mon.committer.marker(2))
     mon.process_batch(_edges(spark, BATCHES[2]), 2)
     assert _got(spark, mon) == before
 
@@ -80,7 +80,7 @@ def test_label_deltas_are_append_only(spark, tmp_path):
         mon.process_batch(_edges(spark, b), i)
     per_batch = {}
     for i in range(len(BATCHES)):
-        d = mon._labels_dir(i)
+        d = mon.committer.dir("labels", i)
         rows = spark.read.parquet(d).collect() if os.path.isdir(d) else []
         per_batch[i] = {r["id"] for r in rows}
     # batch 3 introduced no new nodes

@@ -118,7 +118,7 @@ def test_streaming_dedup_uncommitted_replay_recovers(spark, tmp_path):
     ded.process_batch(b0, 0)
     ded.process_batch(b1, 1)
     # crash window: index append landed but the marker didn't
-    os.remove(ded._marker(1))
+    os.remove(ded.committer.marker(1))
     ded.process_batch(b1, 1)  # recovery replay re-runs the whole batch
     assert sorted(r["doc_id"] for r in ded.accepted(spark).collect()) == [1, 2, 12]
     # the replayed batch observed its own earlier append in the index: doc

@@ -111,7 +111,7 @@ def test_streaming_gaps_uncommitted_replay_recovers(spark, tmp_path):
     mon.process_batch(b0, 0)
     mon.process_batch(b1, 1)
     want = {(r["part"], r["lo"], r["hi"]) for r in mon.islands(spark).collect()}
-    os.remove(mon._marker(1))  # simulate crash-before-marker
+    os.remove(mon.committer.marker(1))  # simulate crash-before-marker
     mon.process_batch(b1, 1)
     got = {(r["part"], r["lo"], r["hi"]) for r in mon.islands(spark).collect()}
     assert got == want
@@ -131,8 +131,9 @@ def test_streaming_gaps_healthy_stream_single_island(spark, tmp_path):
     assert mon.holes(spark).count() == 0
     # superseded snapshots are pruned (latest + one crash cushion stay);
     # markers remain for every batch
-    assert not os.path.isdir(mon._islands_dir(0))
-    assert os.path.isdir(mon._islands_dir(1)) and os.path.isdir(mon._islands_dir(2))
+    assert not os.path.isdir(mon.committer.dir("islands", 0))
+    assert os.path.isdir(mon.committer.dir("islands", 1))
+    assert os.path.isdir(mon.committer.dir("islands", 2))
     assert mon.committed_batch_ids() == [0, 1, 2]
 
 

@@ -103,9 +103,7 @@ def test_streaming_join_view_real_stream(spark, tmp_path):
     q.awaitTermination(300)
     _assert_view_matches(jv)
     assert {r["o_id"] for r in jv.view().collect()} == {2, 3, 6}
-    assert sorted(
-        n for n in os.listdir(jv.marker_dir) if n.startswith("a-")
-    ) == ["a-0", "a-1"]
+    assert jv.committers["a"].committed() == [0, 1]
 
 
 def test_streaming_join_view_replay_and_crash_window(spark, tmp_path):
@@ -118,7 +116,7 @@ def test_streaming_join_view_replay_and_crash_window(spark, tmp_path):
     assert sorted(tuple(r) for r in jv.view().collect()) == snap
     # crash window: marker lost after commit of state+view — replay must
     # converge to the same view (idempotent MERGE + recompute from state)
-    os.remove(jv._marker("a", 0))
+    os.remove(jv.committers["a"].marker(0))
     jv.process_a_batch(a0, 0)
     assert sorted(tuple(r) for r in jv.view().collect()) == snap
     _assert_view_matches(jv)

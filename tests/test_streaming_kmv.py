@@ -93,7 +93,7 @@ def test_uncommitted_rerun_converges(spark, tmp_path):
     mon.process_batch(b0, 0)
     b1 = spark.createDataFrame([("a", i) for i in range(4, 10)], SCHEMA)
     mon.process_batch(b1, 1)
-    os.remove(mon._marker(1))
+    os.remove(mon.committer.marker(1))
     mon.process_batch(b1, 1)
     rows = {r["grp"]: r for r in mon.estimates(spark).collect()}
     # 9 distinct keys, k=8: sketch saturated at 8 — a double-merge bug

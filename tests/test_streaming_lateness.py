@@ -112,13 +112,13 @@ def test_crash_window_converges(spark, tmp_path):
     cur = watermark_sizing(b1, candidate_minutes=(5,)).select(
         "event_type", "watermark_minutes", "total", "late"
     )
-    prev = spark.read.parquet(mon._dir(0))
+    prev = spark.read.parquet(mon.committer.dir("late", 0))
     merged = (
         cur.unionByName(prev)
         .groupBy("event_type", "watermark_minutes")
         .agg(F.sum("total").alias("total"), F.sum("late").alias("late"))
     )
-    merged.write.mode("overwrite").parquet(mon._dir(1))
+    merged.write.mode("overwrite").parquet(mon.committer.dir("late", 1))
     assert mon.committed_batch_ids() == [0]  # marker never landed
     # replay of batch 1 re-applies over the last COMMITTED state
     mon.process_batch(b1, 1)

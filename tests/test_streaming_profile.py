@@ -55,7 +55,7 @@ def test_streaming_equals_one_shot_state(spark, prof_run):
     exp_counts, exp_regs = column_profile_state(union, COLS, p=8)
     got_counts = {
         (r["column"], r["rows"], r["nulls"], r["fp"])
-        for r in mon._latest(spark, "counts").collect()
+        for r in mon.committer.read_latest(spark, "counts").collect()
     }
     exp = {
         (r["column"], r["rows"], r["nulls"], r["fp"]) for r in exp_counts.collect()
@@ -63,7 +63,7 @@ def test_streaming_equals_one_shot_state(spark, prof_run):
     assert got_counts == exp
     got_regs = {
         (r["grp"], r["bucket"], r["mreg"])
-        for r in mon._latest(spark, "registers").collect()
+        for r in mon.committer.read_latest(spark, "registers").collect()
     }
     assert got_regs == {
         (r["grp"], r["bucket"], r["mreg"]) for r in exp_regs.collect()
@@ -90,11 +90,17 @@ def test_profile_report_and_fingerprint_matches_batch_diff(spark, prof_run):
 
 def test_replay_is_idempotent(spark, prof_run):
     mon, src = prof_run
-    before = {(r["column"], r["rows"], r["fp"]) for r in mon._latest(spark, "counts").collect()}
+    before = {
+        (r["column"], r["rows"], r["fp"])
+        for r in mon.committer.read_latest(spark, "counts").collect()
+    }
     last = mon.committed_batch_ids()[-1]
     batch = spark.read.option("recursiveFileLookup", "true").parquet(src)
     mon.process_batch(batch, last)
-    after = {(r["column"], r["rows"], r["fp"]) for r in mon._latest(spark, "counts").collect()}
+    after = {
+        (r["column"], r["rows"], r["fp"])
+        for r in mon.committer.read_latest(spark, "counts").collect()
+    }
     assert after == before
 
 
@@ -104,8 +110,8 @@ def test_state_bounded_and_pruned(spark, tmp_path):
         mon.process_batch(
             spark.createDataFrame(_rows(1000 * i, 1000 * i + 400), SCHEMA), i
         )
-    assert mon._latest(spark, "counts").count() == 3  # one row per column
-    assert mon._latest(spark, "registers").count() <= 3 * 256
+    assert mon.committer.read_latest(spark, "counts").count() == 3  # one row per column
+    assert mon.committer.read_latest(spark, "registers").count() <= 3 * 256
     dirs = [d for d in os.listdir(mon.state_dir) if "_batch=" in d]
     assert sorted(dirs) == [
         "counts_batch=1",

@@ -120,7 +120,7 @@ def test_crash_window_replay_does_not_self_match(spark, sem_run, tmp_path):
     ded = sem_run
     # simulate the crash: delete batch 1's marker (its index rows and
     # output dir are already on disk — exactly the torn state)
-    os.remove(ded._marker(1))
+    os.remove(ded.committer.marker(1))
     batch1 = spark.read.parquet(os.path.join(str(tmp_path / "src"), "f1"))
     ded.process_batch(batch1, 1)  # re-applies for real this time
     kept = sorted(r["vec_id"] for r in ded.accepted(spark).collect())
