@@ -225,6 +225,49 @@ def bench_changelog_apply(
     )
 
 
+def bench_mor_backlog(spark, sf_dir: str) -> tuple[float, float, int, int, float]:
+    """Merge-on-read apply of a BACKLOG batch (an availableNow restart
+    over many source files): every orders key updated once, staged as 16
+    parquet files and read back, so the batch arrives as several input
+    partitions. ``apply_delta`` writes one file per batch partition — the
+    multi-partition side of the layout whose one-partition side is
+    ``bench_changelog_apply(method="mor")``. Returns (median s, events/s,
+    input partitions, runs, spread)."""
+    import shutil
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from cdc_connector_spark.changelog.txlog import TxLogMergeSink
+    from cdc_connector_spark.tables import load_table
+
+    orders = load_table(spark, sf_dir, "orders")
+    root = tempfile.mkdtemp(prefix="bench_backlog_")
+    try:
+        orders.select(
+            "o_orderkey",
+            "o_custkey",
+            "o_orderstatus",
+            (F.col("o_totalprice") * 1.1).alias("o_totalprice"),
+            "o_orderdate",
+            "o_orderpriority",
+            F.lit("u").alias("__op"),
+            F.lit(1).cast("bigint").alias("__ts_ms"),
+            F.col("o_orderkey").alias("__seq"),
+        ).repartition(16).write.parquet(os.path.join(root, "backlog"))
+        batch = spark.read.parquet(os.path.join(root, "backlog"))
+        n_events = batch.count()
+        n_parts = batch.rdd.getNumPartitions()
+        sink = TxLogMergeSink(spark, os.path.join(root, "orders"), ["o_orderkey"], num_buckets=64)
+        sink.overwrite(orders)
+        sink.apply_delta(batch)  # warm-up
+        runs = _stable_runs(lambda: sink.apply_delta(batch), n=3, label="apply_backlog[mor]")
+        dt = statistics.median(runs)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+    return dt, n_events / dt, n_parts, len(runs), _spread(runs)
+
+
 def bench_live_plane(spark, sf_dir: str):
     """LIVE database plane wall-clock (runs only when server binaries exist):
 
@@ -471,6 +514,14 @@ def main() -> None:
     total += mor_dt + mor_small_dt
     print(f"# changelog_apply_mor: {mor_dt:.2f}s ({mor_eps:,.0f} events/s, write-side only)", file=sys.stderr)
     print(f"# changelog_apply_mor_small_batch: {mor_small_dt:.2f}s", file=sys.stderr)
+    bl_dt, bl_eps, bl_parts, bl_runs, bl_sp = bench_mor_backlog(spark, sf_dir)
+    timings["changelog_apply_mor_backlog"] = round(bl_dt, 3)
+    query_stats["changelog_apply_mor_backlog"] = {"median": round(bl_dt, 3), "runs": bl_runs, "spread": bl_sp}
+    total += bl_dt
+    print(
+        f"# changelog_apply_mor_backlog: {bl_dt:.2f}s ({bl_eps:,.0f} events/s, {bl_parts} input partitions)",
+        file=sys.stderr,
+    )
 
     canary_pre_live = _await_quiet(spark, canary_base, "pre_live")
 

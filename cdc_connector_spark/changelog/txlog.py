@@ -9,8 +9,13 @@ Delta/Iceberg jars exist in this environment, so the log protocol is
 implemented directly):
 
 - **Data files are immutable and never move.** Each commit writes its new
-  files under ``data/<commit-uuid>/__bucket=<b>/`` and leaves every other
-  file in place.
+  base files under ``data/<commit-uuid>/__bucket=<b>/`` and leaves every
+  other file in place. A merge-on-read delta commit writes one file per
+  partition of its batch (one for a small trigger),
+  ``data/<commit-uuid>/<file>``, rows sorted by bucket; each ``add``
+  records its file's bucket set (``"buckets": [...]``) where a base file
+  records its one ``"bucket"``. Deltas of the older one-file-per-bucket
+  layout (an int ``bucket``) load as one-bucket sets.
 - **The table state is the log, not the directory tree.** ``_log/<v>.json``
   holds newline-JSON actions (``metaData`` / ``add`` / ``remove`` /
   ``commitInfo``). A snapshot is "replay the log": the set of added-but-not-
@@ -27,13 +32,14 @@ implemented directly):
   writer re-reads the log and prepares again, staging again only when the
   race invalidated its staged files. Each op names what its files depend
   on: ``overwrite``/``append``/``apply_delta`` only the column mapping,
-  ``apply`` its input files (the touched buckets') and the mapping,
-  ``compact`` any conflict; ``ddl``/``restore`` stage nothing. So an
-  ``apply`` whose winner touched a DISJOINT bucket set re-publishes the
-  same files at the next version, and writers on different key ranges
-  never serialize a Spark job behind each other — the property a
-  lock-based sink cannot offer. Staged files that are never published are
-  deleted; each commit records its ``attempts`` and ``stage_ms``.
+  ``apply`` its input files (the rewritten buckets' and any folded deltas)
+  and the mapping, ``compact`` any conflict; ``ddl``/``restore`` stage
+  nothing. So an ``apply`` whose winner touched a DISJOINT bucket set
+  re-publishes the same files at the next version, and writers on
+  different key ranges never serialize a Spark job behind each other —
+  the property a lock-based sink cannot offer. Staged files that are
+  never published are deleted; each commit records its ``attempts`` and
+  ``stage_ms``.
 - **Snapshot isolation + time travel.** A reader resolves a version's file
   set once and is immune to concurrent commits; ``read(version=K)`` replays
   to any retained version. ``vacuum`` deletes files *removed* more than
@@ -75,6 +81,17 @@ class CommitConflict(Exception):
     """Another writer won this version; caller rebases and retries."""
 
 
+def _bucket_set(b: int | list[int]) -> frozenset[int]:
+    """A delta file's buckets as the log records them: a list, or the one
+    int of the older one-file-per-bucket delta layout."""
+    return frozenset(b) if isinstance(b, list) else frozenset([int(b)])
+
+
+def _action_buckets(action: dict) -> frozenset[int]:
+    """The buckets an ``add``/``remove`` action covers."""
+    return _bucket_set(action["buckets"] if "buckets" in action else action["bucket"])
+
+
 class _Snapshot:
     __slots__ = (
         "version", "files", "deltas", "columns", "num_buckets", "key_cols",
@@ -84,7 +101,7 @@ class _Snapshot:
     def __init__(self):
         self.version: int = -1
         self.files: dict[str, int] = {}  # base file rel path -> bucket
-        self.deltas: dict[str, int] = {}  # merge-on-read delta file -> bucket
+        self.deltas: dict[str, frozenset[int]] = {}  # MOR delta file -> its buckets
         self.removed: dict[str, int] = {}  # rel path -> version removed at
         self.stats: dict[str, dict] = {}  # rel path -> {"min": {...}, "max": {...}}
         self.columns: list[str] | None = None
@@ -108,7 +125,13 @@ class _Snapshot:
         return [p for p, b in self.files.items() if b in buckets]
 
     def bucket_deltas(self, buckets: set[int]) -> list[str]:
-        return [p for p, b in self.deltas.items() if b in buckets]
+        return [p for p, bs in self.deltas.items() if bs & buckets]
+
+    def remove_action(self, path: str) -> dict:
+        """The remove action for a live file, naming the buckets it held."""
+        if path in self.deltas:
+            return {"remove": {"path": path, "buckets": sorted(self.deltas[path])}}
+        return {"remove": {"path": path, "bucket": self.files[path]}}
 
 
 class TxLogMergeSink:
@@ -207,7 +230,7 @@ class TxLogMergeSink:
                     state = json.load(f)
                 snap.version = cp
                 snap.files = {p: int(b) for p, b in state["files"].items()}
-                snap.deltas = {p: int(b) for p, b in state.get("deltas", {}).items()}
+                snap.deltas = {p: _bucket_set(b) for p, b in state.get("deltas", {}).items()}
                 snap.removed = {p: int(v) for p, v in state.get("removed", {}).items()}
                 snap.stats = state.get("stats", {})
                 snap.columns = state.get("columns")
@@ -237,8 +260,10 @@ class TxLogMergeSink:
                     if "widened_types" in md:
                         snap.widened = md["widened_types"]
                 elif "add" in a:
-                    target = snap.deltas if a["add"].get("delta") else snap.files
-                    target[a["add"]["path"]] = a["add"]["bucket"]
+                    if a["add"].get("delta"):
+                        snap.deltas[a["add"]["path"]] = _action_buckets(a["add"])
+                    else:
+                        snap.files[a["add"]["path"]] = a["add"]["bucket"]
                     if "stats" in a["add"]:
                         snap.stats[a["add"]["path"]] = a["add"]["stats"]
                     snap.removed.pop(a["add"]["path"], None)
@@ -268,7 +293,7 @@ class TxLogMergeSink:
         }
         state = {
             "files": snap.files,
-            "deltas": snap.deltas,
+            "deltas": {p: sorted(bs) for p, bs in snap.deltas.items()},
             "removed": snap.removed,
             "stats": snap.stats,
             "columns": snap.columns,
@@ -295,7 +320,11 @@ class TxLogMergeSink:
         ).cast("int")
 
     def _write_files(
-        self, df: DataFrame, n_shuffle: int, cluster_by: list[str] | None = None
+        self,
+        df: DataFrame,
+        n_shuffle: int,
+        cluster_by: list[str] | None = None,
+        delta: bool = False,
     ) -> list[dict]:
         """Write one commit's parquet under a unique dir; return add actions.
         Only the just-written dir is listed — O(new files), the exact listing
@@ -307,10 +336,28 @@ class TxLogMergeSink:
         hyper-rectangles of the cluster columns — the footer stats recorded
         on every add action then let ``pruned_files`` skip most of a bucket
         for range predicates (OPTIMIZE ZORDER semantics; the key-hash
-        bucket dirs are preserved, so merge routing is unchanged)."""
+        bucket dirs are preserved, so merge routing is unchanged).
+
+        ``delta`` writes a merge-on-read delta instead: no shuffle and no
+        bucket dirs (``n_shuffle`` is unused), so each of the batch's own
+        partitions writes ONE file, rows sorted by bucket — a small trigger
+        read from one source file is one file from one task, a multi-file
+        backlog keeps the parallelism Spark planned for its scan. Each file
+        keeps the bucket as a ``__bucket`` column, so its add action's
+        bucket set is that column of that file, read back on the driver
+        without a Spark job; ``_read_files`` drops it. Empty partitions
+        leave no file."""
         commit_id = uuid.uuid4().hex
         out_dir = os.path.join(self.data_dir, commit_id)
         w = df.withColumn(_BUCKET, self._bucket_expr())
+        if delta:
+            w.sortWithinPartitions(_BUCKET).write.mode("overwrite").parquet(out_dir)
+            adds = [
+                self._add_action(os.path.join("data", commit_id, name), None)
+                for name in os.listdir(out_dir)
+                if name.endswith(".parquet")
+            ]
+            return [a for a in adds if a is not None]
         if cluster_by:
             from cdc_connector_spark.ops.zorder import zvalue
 
@@ -334,14 +381,32 @@ class TxLogMergeSink:
             b = int(bdir.split("=", 1)[1])
             for name in os.listdir(os.path.join(out_dir, bdir)):
                 if name.endswith(".parquet"):
-                    rel = os.path.join("data", commit_id, bdir, name)
-                    full = os.path.join(self.path, rel)
-                    add = {"add": {"path": rel, "bucket": b, "size": os.path.getsize(full)}}
-                    stats = self._file_stats(full)
-                    if stats:
-                        add["add"]["stats"] = stats
-                    adds.append(add)
+                    adds.append(self._add_action(os.path.join("data", commit_id, bdir, name), b))
         return adds
+
+    def _add_action(self, rel: str, bucket: int | None) -> dict | None:
+        """The add action for a just-written file: a base file of
+        ``bucket``, or (``bucket`` None) a delta, whose bucket set is the
+        distinct values of its ``__bucket`` column. An empty delta file is
+        deleted and yields None."""
+        full = os.path.join(self.path, rel)
+        add: dict = {"path": rel}
+        if bucket is None:
+            import pyarrow.compute as pc
+            import pyarrow.parquet as pq
+
+            buckets = pc.unique(pq.read_table(full, columns=[_BUCKET]).column(0))
+            if len(buckets) == 0:
+                os.unlink(full)
+                return None
+            add.update(buckets=sorted(buckets.to_pylist()), delta=True)
+        else:
+            add["bucket"] = bucket
+        add["size"] = os.path.getsize(full)
+        stats = self._file_stats(full)
+        if stats:
+            add["stats"] = stats
+        return {"add": add}
 
     @staticmethod
     def _file_stats(path: str) -> dict | None:
@@ -392,12 +457,15 @@ class TxLogMergeSink:
             # reader's widening promotions (SPARK-40876) upcast files still
             # carrying the narrow physical type — mergeSchema cannot unify
             # int/bigint footers, an explicit schema can.
-            return self.spark.read.schema(
+            df = self.spark.read.schema(
                 self._resolve_read_schema(rel_paths, widened)
             ).parquet(*full)
-        return self.spark.read.option(
-            "mergeSchema", str(self.merge_schema).lower()
-        ).parquet(*full)
+        else:
+            df = self.spark.read.option(
+                "mergeSchema", str(self.merge_schema).lower()
+            ).parquet(*full)
+        # a delta file's stored bucket column is layout, never table data
+        return df.drop(_BUCKET)
 
     def _resolve_read_schema(
         self, rel_paths: list[str], widened: dict[str, str]
@@ -628,8 +696,12 @@ class TxLogMergeSink:
         )
         delta_files = sorted(snap.bucket_deltas(buckets))
         if delta_files:
+            # a delta file also holds rows of other buckets; its bucket is
+            # recomputed from the keys (deltas of the older per-bucket
+            # layout store no bucket column)
+            deltas = self._to_logical(self._read_files(delta_files, snap.widened), snap)
             base = apply_changes(
-                base, self._to_logical(self._read_files(delta_files, snap.widened), snap), self.key_cols
+                base, deltas.filter(self._bucket_expr().isin(sorted(buckets))), self.key_cols
             )
         return base
 
@@ -672,8 +744,12 @@ class TxLogMergeSink:
             if info.get("operation") in ("COMPACT", "DDL"):
                 continue
             buckets = {
-                a["add"]["bucket"] for a in actions if "add" in a
-            } | {a["remove"]["bucket"] for a in actions if "remove" in a}
+                b
+                for a in actions
+                for kind in ("add", "remove")
+                if kind in a
+                for b in _action_buckets(a[kind])
+            }
             if not buckets:
                 continue
             new = self._bucket_rows(v, buckets)
@@ -815,11 +891,7 @@ class TxLogMergeSink:
         )
 
         def stage() -> list[dict]:
-            adds = self._write_files(self._to_physical(frame(), mapping), n_shuffle)
-            if delta:
-                for a in adds:
-                    a["add"]["delta"] = True
-            return adds
+            return self._write_files(self._to_physical(frame(), mapping), n_shuffle, delta=delta)
 
         return mapping, stage
 
@@ -893,10 +965,7 @@ class TxLogMergeSink:
             meta["physical_tombstones"] = snap.tombstones + [
                 p for l, p in mapping.items() if l not in cols
             ]
-        removes = [
-            {"remove": {"path": p, "bucket": b}}
-            for p, b in sorted({**snap.files, **snap.deltas}.items())
-        ]
+        removes = [snap.remove_action(p) for p in sorted({**snap.files, **snap.deltas})]
         return (
             meta.get("column_mapping"),
             stage,
@@ -919,14 +988,14 @@ class TxLogMergeSink:
         """MERGE one micro-batch (ST2) under optimistic concurrency.
 
         Restage rule: the staged merge is keyed by its input files (the
-        touched buckets' base and delta files) and the column mapping. A
-        lost race whose winner touched DISJOINT buckets leaves both
-        unchanged, so the same files are re-published without recompute;
+        rewritten buckets' base files and the folded deltas) and the column
+        mapping. A lost race whose winner touched DISJOINT buckets leaves
+        both unchanged, so the same files are re-published without recompute;
         otherwise the merge re-runs against the new snapshot.
         Deletes+upserts stay idempotent either way, so at-least-once
         delivery still yields exactly-once state."""
         batch: DataFrame | None = None
-        touched: list[int] = []
+        touched: set[int] = set()
 
         def prepare(snap: _Snapshot):
             nonlocal batch, touched
@@ -941,16 +1010,20 @@ class TxLogMergeSink:
                 # checkpoint. localCheckpoint, not persist: the cache-leak
                 # rule (ops/graph.py).
                 batch = changes.localCheckpoint(eager=False)
-                touched = sorted(
+                touched = {
                     r[0]
                     for r in batch.select(self._bucket_expr().alias("b")).distinct().collect()
-                )
+                }
             self._guard_schema(batch, snap)
-            base_files = sorted(snap.bucket_files(set(touched)))
             # MOR deltas on touched buckets must fold into this merge and be
             # removed with it — leaving them would let an OLDER delta row
-            # overwrite the new base at read time (base rows carry no ts)
-            delta_files = sorted(snap.bucket_deltas(set(touched)))
+            # overwrite the new base at read time (base rows carry no ts).
+            # A delta is folded whole, so the rewrite spans every bucket it
+            # holds, and any other delta on those buckets must fold too:
+            # once one delta meets the batch, fold them all (they are small)
+            delta_files = sorted(snap.deltas) if snap.bucket_deltas(touched) else []
+            rewrite = touched.union(*(snap.deltas[p] for p in delta_files))
+            base_files = sorted(snap.bucket_files(rewrite))
             inputs = base_files + delta_files
 
             def merged() -> DataFrame:
@@ -963,14 +1036,11 @@ class TxLogMergeSink:
                     )
                 return apply_changes(current, batch, self.key_cols)
 
-            mapping, stage = self._staging(snap, batch.columns, merged, max(1, len(touched)))
+            mapping, stage = self._staging(snap, batch.columns, merged, max(1, len(rewrite)))
             return (inputs, mapping), stage, [
                 *self._widen_meta(snap, batch.columns, mapping),
-                *(
-                    {"remove": {"path": p, "bucket": snap.files.get(p, snap.deltas.get(p))}}
-                    for p in inputs
-                ),
-                {"commitInfo": {"operation": "MERGE", "buckets": touched}},
+                *(snap.remove_action(p) for p in inputs),
+                {"commitInfo": {"operation": "MERGE", "buckets": sorted(rewrite)}},
             ]
 
         self._commit("apply", prepare)
@@ -1002,11 +1072,14 @@ class TxLogMergeSink:
 
     def apply_delta(self, changes: DataFrame) -> None:
         """Merge-on-read apply (the Hudi-MOR half of the write-cost trade):
-        the flattened change batch lands as bucketed DELTA files — keeping
-        its ``__op``/``__ts_ms``/``__seq`` columns — with NO read or rewrite
-        of existing data. Write cost is O(batch) no matter how many buckets
-        the keys touch; readers pay the latest-per-key merge until
-        ``compact()`` materializes base files.
+        the flattened change batch lands as delta files, one per partition
+        of the batch — rows sorted by bucket, keeping their ``__op``/
+        ``__ts_ms``/``__seq`` columns, each add action naming the buckets
+        its file holds — with NO shuffle, read or rewrite of existing data.
+        A trigger read from one source file is one file from one task no
+        matter how many buckets the keys touch; readers pay the
+        latest-per-key merge until ``compact()`` (or a copy-on-write
+        ``apply`` that meets a delta) materializes base files.
 
         Use when trigger latency matters more than read latency (high-
         frequency CDC into a table read on a slower cadence); ``apply`` is
@@ -1021,9 +1094,7 @@ class TxLogMergeSink:
             if snap.version < 0:
                 return self._bootstrap_plan(apply_changes(None, changes, self.key_cols), snap)
             self._guard_schema(changes, snap)
-            mapping, stage = self._staging(
-                snap, changes.columns, lambda: changes, self._default_shuffle(), delta=True
-            )
+            mapping, stage = self._staging(snap, changes.columns, lambda: changes, 1, delta=True)
             return mapping, stage, [
                 *self._widen_meta(snap, changes.columns, mapping),
                 {"commitInfo": {"operation": "MERGE_DELTA"}},
@@ -1051,13 +1122,16 @@ class TxLogMergeSink:
         each bucket (``scan``/``pruned_files``) — the engine's secondary-
         index analogue applied to the live table, not just a one-shot write.
 
-        Streaming CDC accrues one file per touched bucket per micro-batch;
-        without compaction a year of 10-second triggers is ~3M files per hot
-        bucket and scan planning dies on file-listing overhead long before
-        data size matters. Run this on the maintenance cadence (the
-        reference's scheduled-validation slot, O5). Only buckets over the
-        threshold rewrite — cost is O(fragmented data), not O(table).
-        Returns the number of buckets compacted.
+        Streaming CDC accrues delta files on every merge-on-read
+        micro-batch (one per batch partition, each holding rows of most
+        buckets) and one file per touched bucket per ``append``; without
+        compaction a year of 10-second triggers is ~3M files and scan
+        planning dies on file-listing overhead long before data size
+        matters. Run this on the maintenance cadence (the
+        reference's scheduled-validation slot, O5). Every delta folds, with
+        every bucket it holds; otherwise only buckets over the threshold
+        rewrite — cost is O(fragmented data), not O(table). Returns the
+        number of buckets compacted.
 
         Any lost race stages again: another writer may have rewritten the
         compacted buckets."""
@@ -1075,11 +1149,11 @@ class TxLogMergeSink:
             # EVERY live bucket (re-layout is the point of OPTIMIZE ZORDER)
             frag_floor = 1 if zorder_by else min_files
             frag = set(b for b, ps in by_bucket.items() if len(ps) >= frag_floor)
-            frag |= set(snap.deltas.values())
+            frag = frag.union(*snap.deltas.values())
             if not frag:
                 return None
             base_paths = sorted(snap.bucket_files(frag))
-            delta_paths = sorted(snap.bucket_deltas(frag))
+            delta_paths = sorted(snap.deltas)
             # one output file per compacted bucket (files_per_bucket
             # z-segments each when clustering); cluster cols are translated
             # logical -> physical since compact runs in physical space
@@ -1100,10 +1174,7 @@ class TxLogMergeSink:
                 )
 
             return snap.version, stage, [
-                *(
-                    {"remove": {"path": p, "bucket": snap.files.get(p, snap.deltas.get(p))}}
-                    for p in base_paths + delta_paths
-                ),
+                *(snap.remove_action(p) for p in base_paths + delta_paths),
                 {"commitInfo": {
                     "operation": "COMPACT",
                     "buckets": sorted(frag),
@@ -1247,18 +1318,16 @@ class TxLogMergeSink:
             }
             actions: list[dict] = [{"metaData": meta}]
             for p in sorted(set(target_all) - set(current_all)):
-                add = {
-                    "path": p,
-                    "bucket": target_all[p],
-                    "size": os.path.getsize(os.path.join(self.path, p)),
-                }
+                add = {"path": p, "size": os.path.getsize(os.path.join(self.path, p))}
                 if p in target.deltas:
-                    add["delta"] = True
+                    add.update(buckets=sorted(target.deltas[p]), delta=True)
+                else:
+                    add["bucket"] = target.files[p]
                 if p in target.stats:
                     add["stats"] = target.stats[p]
                 actions.append({"add": add})
             for p in sorted(set(current_all) - set(target_all)):
-                actions.append({"remove": {"path": p, "bucket": current_all[p]}})
+                actions.append(snap.remove_action(p))
             actions.append({"commitInfo": {"operation": "RESTORE", "restored_version": version}})
             return None, None, actions
 

@@ -228,6 +228,13 @@ def cms_heavy_hitters(
     )
 
 
+def check_precision(p: int) -> None:
+    """Reject an HLL register precision the estimator cannot read: the
+    alpha_m constant used by ``hll_estimate`` holds for m = 2**p >= 128."""
+    if p < 7:
+        raise ValueError(f"HLL precision p must be >= 7 (alpha constant), got {p}")
+
+
 def hll_registers(
     df: DataFrame, key_col: str, group_col: str, p: int = 8
 ) -> DataFrame:
@@ -298,8 +305,7 @@ def hll_distinct(
 
     alpha_m uses the standard constants for m >= 128; p < 7 is rejected
     rather than silently mis-estimated."""
-    if p < 7:
-        raise ValueError("hll_distinct requires p >= 7 (alpha constant)")
+    check_precision(p)
     regs = hll_registers(df, key_col, group_col, p=p)
     exact = (
         df.filter(F.col(key_col).isNotNull())
@@ -335,8 +341,7 @@ def hll_estimate(registers: DataFrame, p: int = 8) -> DataFrame:
     expression, linear-counting correction in its standard range. Input
     is the bounded register state, so no corpus-keyed shuffle happens
     here."""
-    if p < 7:
-        raise ValueError("hll_estimate requires p >= 7 (alpha constant)")
+    check_precision(p)
     m = 1 << p
     alpha = 0.7213 / (1.0 + 1.079 / m)
     width = 61 - p

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from cdc_connector_spark.ops.sketch import hll_estimate, hll_merge, hll_registers
+from cdc_connector_spark.ops.sketch import check_precision, hll_estimate, hll_merge, hll_registers
 from cdc_connector_spark.streaming.commit import BatchCommitter, foreach_batch
 
 
@@ -38,6 +38,9 @@ class StreamingHLL:
         group_col: str,
         p: int = 8,
     ) -> None:
+        # fail here, not after every batch has committed state that
+        # hll_estimate can never read
+        check_precision(p)
         self.state_dir = state_dir
         self.key_col = key_col
         self.group_col = group_col

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from cdc_connector_spark.ops.sketch import hll_estimate, hll_merge
+from cdc_connector_spark.ops.sketch import check_precision, hll_estimate, hll_merge
 from cdc_connector_spark.streaming.commit import BatchCommitter, foreach_batch
 from cdc_connector_spark.validation.checks import column_profile_state
 
@@ -44,6 +44,9 @@ class StreamingColumnProfile:
         cols: list[str],
         p: int = 8,
     ) -> None:
+        # fail here, not after every batch has committed state that
+        # hll_estimate can never read
+        check_precision(p)
         self.state_dir = state_dir
         self.cols = cols
         self.p = p

@@ -77,7 +77,7 @@ def _cms(spark, d):
 
 
 def _hll(spark, d):
-    m = StreamingHLL(d, key_col="k", group_col="g", p=4)
+    m = StreamingHLL(d, key_col="k", group_col="g", p=7)
     return Applier(m.process_batch, d, lambda: _rows(m.registers(spark)), _committed_marker(d))
 
 

@@ -70,3 +70,10 @@ def test_replay_is_idempotent_and_state_pruned(spark, hll_run):
     assert mon.registers(spark).count() <= 2 * 256
     dirs = [d for d in os.listdir(mon.state_dir) if d.startswith("registers_batch=")]
     assert sorted(dirs) == ["registers_batch=0", "registers_batch=1"]
+
+
+def test_precision_below_seven_rejected_at_construction(tmp_path):
+    """hll_estimate needs p >= 7, so a smaller p fails before any batch
+    commits state that estimates() could never read."""
+    with pytest.raises(ValueError, match="p must be >= 7"):
+        StreamingHLL(str(tmp_path / "state"), key_col="key", group_col="grp_col", p=6)

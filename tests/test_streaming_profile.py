@@ -119,3 +119,10 @@ def test_state_bounded_and_pruned(spark, tmp_path):
         "registers_batch=1",
         "registers_batch=2",
     ]
+
+
+def test_precision_below_seven_rejected_at_construction(tmp_path):
+    """The distinct column rides hll_estimate, which needs p >= 7: a
+    smaller p fails here, not at the first profile() after batches commit."""
+    with pytest.raises(ValueError, match="p must be >= 7"):
+        StreamingColumnProfile(state_dir=str(tmp_path / "state"), cols=COLS, p=4)
