@@ -1,13 +1,8 @@
-# Developer entry points. Only `make bootstrap` installs the opt-in
-# pre-commit tail-tripwire hook (.githooks/pre-commit — out-of-window oracle
-# gate; SKIP_TAIL_TRIPWIRE=1 to bypass per-commit); `make test` leaves git
-# config alone.
+# Developer entry points. `make test` is the Tier-1 command and includes the
+# oracle gate at sf0.001 (tests/test_oracles.py); `make oracle` runs the same
+# check at another scale.
 
-.PHONY: bootstrap test perfbench-test oracle tripwire bench plans docs
-
-bootstrap:
-	git config core.hooksPath .githooks
-	@echo "pre-commit tail tripwire installed (core.hooksPath=.githooks)"
+.PHONY: test perfbench-test oracle bench plans
 
 # The Tier-1 command (ROADMAP.md): one Spark core budget per host, local
 # dirs under /tmp, no pytest cache written into the repo.
@@ -20,20 +15,10 @@ perfbench-test:
 	python3 -m pytest perfbench/tests
 
 oracle:
-	python tools/check_oracle.py /root/testdata/sf0.01
-
-tripwire:
-	sh tools/tail_tripwire.sh
+	SPARK_GRAFT_TEST_SF_DIR=/root/testdata/sf0.01 python -m pytest tests/test_oracles.py -q -p no:cacheprovider
 
 bench:
 	SPARK_GRAFT_SF_DIR=$${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1} python bench.py
 
 plans:
 	python tools/plan_report.py
-
-# Evidence docs MUST be regenerated after any queries() surface change
-# (judge r9 "what's wrong" #1: a new entry absent from STALENESS.md can
-# silently never rotate in). The tripwire hook runs the same count guard.
-docs:
-	python tools/plan_report.py
-	python tools/staleness.py

@@ -403,15 +403,12 @@ def main() -> None:
     query_stats: dict[str, dict] = {}
     total = 0.0
     # full surface: historical headline entries first, then every other
-    # registered query (round-5 "bench the full query surface") in
-    # ALPHABETICAL order — queries() lists the driver window first, so
-    # following its order made an entry's bench POSITION change whenever
-    # the window rotated, and position matters even after the per-entry
-    # warm-up (cumulative JVM JIT over the session: the r12 rotation
-    # moved 20+ untouched sub-second entries earlier/later and their
-    # single-shot timings swung 0.7×–4× with zero code change — incl.
-    # q18, pure unchanged SQL, at 1.56×). A fixed order makes
-    # round-over-round diffs track the engine again.
+    # registered query in ALPHABETICAL order. Bench POSITION matters even
+    # after the per-entry warm-up (cumulative JVM JIT over the session:
+    # moving 20+ untouched sub-second entries earlier/later swung their
+    # single-shot timings 0.7×–4× with zero code change — incl. q18, pure
+    # unchanged SQL, at 1.56×), so a fixed order independent of queries()
+    # keeps run-over-run diffs tracking the engine.
     bench_order = HEADLINE + sorted(n for n in qs if n not in HEADLINE)
     # host variance floor (judge r6 #8): ±25% run-to-run swings dominate
     # sub-second comparisons; entries slower than this get a median-of-3

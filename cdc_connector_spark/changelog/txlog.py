@@ -43,8 +43,8 @@ implemented directly):
 - **Snapshot isolation + time travel.** A reader resolves a version's file
   set once and is immune to concurrent commits; ``read(version=K)`` replays
   to any retained version. ``vacuum`` deletes files *removed* more than
-  ``retain_versions`` ago, bounding reader staleness exactly like Delta's
-  ``VACUUM`` retention window.
+  ``retain_versions`` ago, bounding how far behind a reader may lag exactly
+  like Delta's ``VACUUM`` retention window.
 - **Checkpoints.** Every ``checkpoint_interval`` commits the full live-file
   set is written to ``_log/_checkpoint.<v>.json`` and pointed to by
   ``_last_checkpoint``, so snapshot resolution reads O(interval) small

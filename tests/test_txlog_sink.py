@@ -895,8 +895,8 @@ def test_metadata_widen_full_lattice_scan_promotable(spark, tmp_path):
     Spark parquet reader's scan-time promotions on the metadata-only path
     (probed on Spark 4.1: int ladder, float->double, int->double, decimal
     precision AND scale growth, int->decimal). If a future Spark narrows
-    this, the metadata-only widen must grow a gate — this test is the
-    tripwire."""
+    this, the metadata-only widen must grow a gate, and this test fails
+    first."""
     from decimal import Decimal
 
     from cdc_connector_spark.changelog.ddl import WidenColumn

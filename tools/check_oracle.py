@@ -1,33 +1,19 @@
-#!/usr/bin/env python
-"""Local stand-in for the driver's correctness gate.
+"""The DuckDB oracle comparison behind the correctness gate.
 
-Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
-DuckDB over the same parquet tables, then compares row count, column names,
-and an order-insensitive value hash. Flags float columns whose values differ
-so precision hazards surface before the driver sees them.
-
-Usage: python tools/check_oracle.py [--json OUT.json] [--tail] [sf_dir] [query ...]
-
-``--tail`` restricts the run to every ``queries()`` entry BEYOND the
-driver's 50-entry correctness window — the entries the per-round
-CORRECTNESS gate does NOT see. tools/tail_tripwire.sh wires this as the
-enforced regression gate for out-of-window queries (judge r6 #2).
+``tests/test_oracles.py`` runs every ``queries()`` entry on Spark and its
+``oracle_sql()`` twin on DuckDB over the same parquet tables, then compares
+them with ``problems``: row count, column names, and an order-insensitive
+value hash, with the differing columns' first values on a mismatch so
+precision hazards show. The test runs at sf0.001 by default; another scale
+goes through ``SPARK_GRAFT_TEST_SF_DIR`` (``make oracle``: sf0.01).
 """
 
 from __future__ import annotations
 
 import hashlib
-import json
-import sys
-import time
 
 import duckdb
 import pandas as pd
-
-sys.path.insert(0, ".")
-
-import __spark_entry__ as entry_mod  # noqa: E402
-from cdc_connector_spark.session import get_spark  # noqa: E402
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders", "lineitem", "events", "documents", "embeddings"]
 
@@ -62,95 +48,35 @@ def value_hash(df: pd.DataFrame) -> str:
     return h.hexdigest()
 
 
-DRIVER_WINDOW = 50  # the driver's correctness gate reads the first N entries
+def problems(sdf: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
+    """How a Spark result differs from its oracle's: row count, column
+    names (case-insensitive), order-insensitive value hash, and for a hash
+    mismatch the differing columns with up to 3 example value pairs for the
+    first two. Empty when they agree."""
+    out = []
+    if len(sdf) != len(odf):
+        out.append(f"rowcount {len(sdf)} vs {len(odf)}")
+    if sorted(map(str.lower, sdf.columns)) != sorted(map(str.lower, odf.columns)):
+        out.append(f"columns {sorted(sdf.columns)} vs {sorted(odf.columns)}")
+    if out:
+        return out
+    sdf = sdf.rename(columns=str.lower)
+    odf = odf.rename(columns=str.lower)
+    if value_hash(sdf) != value_hash(odf):
+        out.append("value-hash mismatch")
+        cs, co = canon(sdf), canon(odf)
+        diff_cols = [c for c in cs.columns if not cs[c].equals(co[c])]
+        out.append(f"differing columns: {diff_cols}")
+        for c in diff_cols[:2]:
+            mask = cs[c] != co[c]
+            out.append(f"  {c}: {list(zip(cs[c][mask].head(3), co[c][mask].head(3)))}")
+    return out
 
 
-def main() -> int:
-    argv = sys.argv[1:]
-    json_out = None
-    tail_only = False
-    while argv and argv[0].startswith("--"):
-        if argv[0] == "--json":
-            json_out = argv[1]
-            argv = argv[2:]
-        elif argv[0] == "--tail":
-            tail_only = True
-            argv = argv[1:]
-        else:
-            raise SystemExit(f"unknown flag {argv[0]}")
-    sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
-    only = set(argv[1:])
-    if tail_only:
-        tail = list(entry_mod.queries())[DRIVER_WINDOW:]
-        only = set(tail) & only if only else set(tail)
-        print(f"tail tripwire: {len(only)} out-of-window queries at {sf_dir}")
-
-    spark = get_spark("oracle-check")
-    # the driver's harness runs on a DEFAULT session where Spark 4's
-    # ANSI mode is ON — mirror that here or overflow bugs hide locally
-    # (round-1 lesson: ngram_jaccard_pairs_subset failed only at the driver)
-    spark.conf.set("spark.sql.ansi.enabled", "true")
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per fixture table of ``sf_dir``."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
 
-    qs = entry_mod.queries()
-    oracles = entry_mod.oracle_sql()
-    failures = 0
-    records: dict[str, dict] = {}
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
-        t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir).toPandas()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name}: spark error: {e}")
-            records[name] = {"status": "FAIL", "err": f"spark error: {e}"}
-            failures += 1
-            continue
-        if name not in oracles:
-            print(f"rows  {name}: {len(sdf)} rows (no oracle — rows-only) [{time.time()-t0:.1f}s]")
-            records[name] = {"status": "rows_only", "spark_rows": len(sdf), "sec": round(time.time() - t0, 2)}
-            continue
-        try:
-            odf = con.execute(oracles[name]).fetchdf()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL  {name}: duckdb error: {e}")
-            records[name] = {"status": "FAIL", "err": f"duckdb error: {e}"}
-            failures += 1
-            continue
-        problems = []
-        if len(sdf) != len(odf):
-            problems.append(f"rowcount {len(sdf)} vs {len(odf)}")
-        if sorted(map(str.lower, sdf.columns)) != sorted(map(str.lower, odf.columns)):
-            problems.append(f"columns {sorted(sdf.columns)} vs {sorted(odf.columns)}")
-        if not problems:
-            sdf.columns = [c.lower() for c in sdf.columns]
-            odf.columns = [c.lower() for c in odf.columns]
-            if value_hash(sdf) != value_hash(odf):
-                problems.append("value-hash mismatch")
-                cs, co = canon(sdf), canon(odf)
-                diff_cols = [c for c in cs.columns if not cs[c].equals(co[c])]
-                problems.append(f"differing columns: {diff_cols}")
-                for c in diff_cols[:2]:
-                    mask = cs[c] != co[c]
-                    ex = list(zip(cs[c][mask].head(3), co[c][mask].head(3)))
-                    problems.append(f"  {c}: {ex}")
-        if problems:
-            print(f"FAIL  {name}: " + "; ".join(problems))
-            records[name] = {"status": "FAIL", "err": "; ".join(problems)}
-            failures += 1
-        else:
-            print(f"OK    {name}: {len(sdf)} rows [{time.time()-t0:.1f}s]")
-            records[name] = {"status": "OK", "spark_rows": len(sdf), "oracle_rows": len(odf), "sec": round(time.time() - t0, 2)}
-    print(f"\n{'ALL OK' if failures == 0 else f'{failures} FAILURES'}")
-    if json_out:
-        with open(json_out, "w") as fh:
-            json.dump({"sf_dir": sf_dir, "failures": failures, "results": records}, fh, indent=1)
-        print(f"wrote {json_out}")
-    return 1 if failures else 0
-
-
-if __name__ == "__main__":
-    sys.exit(main())
