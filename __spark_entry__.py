@@ -4507,6 +4507,63 @@ def _kmeans_cte(
     return "WITH " + ",".join(parts)
 
 
+def _neardup_cte() -> str:
+    """Recursive CTE chain (DuckDB dialect) shared by the near-duplicate
+    group oracles: word 3-gram shingle sets ``sh`` (a doc under 3 tokens
+    is one shingle, an empty doc is ``['']``), the exact-Jaccard ≥ 0.5
+    pair set, and its transitive closure. Ends with ``lab`` = (id,
+    rep_id = min member id) for every doc in some pair; ``t`` also carries
+    ``txt``/``n_chars``/``toks`` for the quality score.
+
+    Pairs come from an inverted index: each doc's shingles unnested and
+    self-joined on the shingle, so |A∩B| is the match count and only
+    pairs sharing a shingle are built (a pair with Jaccard ≥ 0.5 shares
+    one). DuckDB re-evaluates ``pairs`` at each recursion step, so an
+    all-pairs cross join here costs O(docs²) per step."""
+    return """
+            WITH RECURSIVE t AS (
+                SELECT doc_id,
+                       coalesce(text, '') AS txt,
+                       length(coalesce(text, '')) AS n_chars,
+                       CASE WHEN trim(coalesce(text,'')) = '' THEN CAST([] AS VARCHAR[])
+                            ELSE regexp_split_to_array(trim(text), '\\s+') END AS toks
+                FROM documents
+            ), sh AS (
+                SELECT doc_id,
+                       CASE WHEN len(toks) >= 3
+                            THEN list_distinct(list_transform(range(1, len(toks) - 1),
+                                 i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))
+                            ELSE [array_to_string(toks, ' ')] END AS sh
+                FROM t
+            ), post AS (
+                SELECT doc_id, unnest(sh) AS g FROM sh
+            ), pairs AS (
+                SELECT id_a, id_b FROM (
+                    SELECT p.id_a, p.id_b,
+                           round(CAST(p.inter AS DOUBLE) /
+                                 (len(a.sh) + len(b.sh) - p.inter), 6) AS jaccard
+                    FROM (
+                        SELECT x.doc_id AS id_a, y.doc_id AS id_b, count(*) AS inter
+                        FROM post x JOIN post y ON x.g = y.g AND x.doc_id < y.doc_id
+                        GROUP BY x.doc_id, y.doc_id
+                    ) p
+                    JOIN sh a ON a.doc_id = p.id_a
+                    JOIN sh b ON b.doc_id = p.id_b
+                )
+                WHERE jaccard >= 0.5
+            ), edges AS (
+                SELECT id_a AS src, id_b AS dst FROM pairs
+                UNION
+                SELECT id_b AS src, id_a AS dst FROM pairs
+            ), cc(id, comp) AS (
+                SELECT src, src FROM edges
+                UNION
+                SELECT e.src, cc.comp FROM edges e JOIN cc ON e.dst = cc.id
+            ), lab AS (
+                SELECT id, MIN(comp) AS rep_id FROM cc GROUP BY id
+            )"""
+
+
 def oracle_sql() -> dict[str, str]:
     rowcount_union = " UNION ALL ".join(
         f"SELECT '{name}' AS table_name, COUNT(*) AS row_count FROM {name}" for name in _T
@@ -6385,38 +6442,8 @@ def oracle_sql() -> dict[str, str]:
         # Transitive closure of the same MinHash-exact pair set, closed by a
         # recursive CTE — verifies the distributed hash-min label propagation
         # (ops/components.py) reaches the exact connected components.
-        "neardup_groups_documents": """
-            WITH RECURSIVE t AS (
-                SELECT doc_id,
-                       CASE WHEN trim(coalesce(text,'')) = '' THEN CAST([] AS VARCHAR[])
-                            ELSE regexp_split_to_array(trim(text), '\\s+') END AS toks
-                FROM documents
-            ), sh AS (
-                SELECT doc_id,
-                       CASE WHEN len(toks) >= 3
-                            THEN list_distinct(list_transform(range(1, len(toks) - 1),
-                                 i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))
-                            ELSE [array_to_string(toks, ' ')] END AS sh
-                FROM t
-            ), pairs AS (
-                SELECT id_a, id_b FROM (
-                    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                           round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-                                 (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS jaccard
-                    FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-                )
-                WHERE jaccard >= 0.5
-            ), edges AS (
-                SELECT id_a AS src, id_b AS dst FROM pairs
-                UNION
-                SELECT id_b AS src, id_a AS dst FROM pairs
-            ), cc(id, comp) AS (
-                SELECT src, src FROM edges
-                UNION
-                SELECT e.src, cc.comp FROM edges e JOIN cc ON e.dst = cc.id
-            ), lab AS (
-                SELECT id, MIN(comp) AS rep_id FROM cc GROUP BY id
-            ), sizes AS (
+        "neardup_groups_documents": _neardup_cte() + """,
+            sizes AS (
                 SELECT rep_id, COUNT(*) AS group_size FROM lab GROUP BY rep_id
             )
             SELECT lab.id, lab.rep_id, sizes.group_size
@@ -6427,38 +6454,8 @@ def oracle_sql() -> dict[str, str]:
         # recursive-CTE transitive closure, min-id representative, and
         # the identical Knuth bucket arithmetic on the representative
         # (docs in no pair bucket on their own id).
-        "leakage_safe_split_documents": """
-            WITH RECURSIVE t AS (
-                SELECT doc_id,
-                       CASE WHEN trim(coalesce(text,'')) = '' THEN CAST([] AS VARCHAR[])
-                            ELSE regexp_split_to_array(trim(text), '\\s+') END AS toks
-                FROM documents
-            ), sh AS (
-                SELECT doc_id,
-                       CASE WHEN len(toks) >= 3
-                            THEN list_distinct(list_transform(range(1, len(toks) - 1),
-                                 i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))
-                            ELSE [array_to_string(toks, ' ')] END AS sh
-                FROM t
-            ), prs AS (
-                SELECT id_a, id_b FROM (
-                    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                           round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-                                 (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS jaccard
-                    FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-                )
-                WHERE jaccard >= 0.5
-            ), edges AS (
-                SELECT id_a AS src, id_b AS dst FROM prs
-                UNION
-                SELECT id_b AS src, id_a AS dst FROM prs
-            ), cc(id, comp) AS (
-                SELECT src, src FROM edges
-                UNION
-                SELECT e.src, cc.comp FROM edges e JOIN cc ON e.dst = cc.id
-            ), lab AS (
-                SELECT id, MIN(comp) AS rep_id FROM cc GROUP BY id
-            ), rep AS (
+        "leakage_safe_split_documents": _neardup_cte() + """,
+            rep AS (
                 SELECT d.doc_id, coalesce(lab.rep_id, d.doc_id) AS rep_id
                 FROM documents d LEFT JOIN lab ON d.doc_id = lab.id
             )
@@ -8242,22 +8239,8 @@ def oracle_sql() -> dict[str, str]:
         # Canonical docs: exact pair set + recursive-CTE closure (the
         # neardup_groups oracle) + quality survivorship window + the
         # singleton union.
-        "canonical_docs_documents": """
-            WITH RECURSIVE t AS (
-                SELECT doc_id,
-                       coalesce(text, '') AS txt,
-                       length(coalesce(text, '')) AS n_chars,
-                       CASE WHEN trim(coalesce(text,'')) = '' THEN CAST([] AS VARCHAR[])
-                            ELSE regexp_split_to_array(trim(text), '\\s+') END AS toks
-                FROM documents
-            ), sh AS (
-                SELECT doc_id,
-                       CASE WHEN len(toks) >= 3
-                            THEN list_distinct(list_transform(range(1, len(toks) - 1),
-                                 i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))
-                            ELSE [array_to_string(toks, ' ')] END AS sh
-                FROM t
-            ), q AS (
+        "canonical_docs_documents": _neardup_cte() + """,
+            q AS (
                 SELECT doc_id,
                        round(
                          least(n_chars / 200.0, 1.0) * 0.3
@@ -8273,24 +8256,6 @@ def oracle_sql() -> dict[str, str]:
                           ELSE 0.0 END) * 0.3,
                        6) AS quality
                 FROM t
-            ), pairs AS (
-                SELECT id_a, id_b FROM (
-                    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                           round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-                                 (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS jaccard
-                    FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-                )
-                WHERE jaccard >= 0.5
-            ), edges AS (
-                SELECT id_a AS src, id_b AS dst FROM pairs
-                UNION
-                SELECT id_b AS src, id_a AS dst FROM pairs
-            ), cc(id, comp) AS (
-                SELECT src, src FROM edges
-                UNION
-                SELECT e.src, cc.comp FROM edges e JOIN cc ON e.dst = cc.id
-            ), lab AS (
-                SELECT id, MIN(comp) AS rep_id FROM cc GROUP BY id
             ), sizes AS (
                 SELECT rep_id, COUNT(*) AS group_size FROM lab GROUP BY rep_id
             ), winners AS (

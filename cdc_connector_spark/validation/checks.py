@@ -6,11 +6,13 @@ Source: tests/validation.py of the reference —
 6 freshness (:640-717); thresholds :73-75 (WARN ≥0.1%, FAIL ≥1.0%) and
 :271 (15-min freshness SLO); verdict logic :735-788.
 
-Every check is a small DataFrame job: aggregates are computed in one pass
-where the reference issues separate SQL statements, the anti-join is a real
-distributed ``left_anti`` (no 10M-row driver-memory guard needed — the
-reference's guard at tests/validation.py:570-576 existed only because it
-built a Python set on one node).
+Each verdict rule is a function of numbers (``_rowcount``,
+``_distinct_pk``, ``_duplication``, ``_orphans``, ``_freshness``).
+``run_all_checks`` feeds all of them from one group-by-key aggregate over
+both sides; the standalone ``check_*`` functions run their own small jobs
+(the anti-join is a real distributed ``left_anti``, so the reference's
+10M-row driver-memory guard at tests/validation.py:570-576 is not needed)
+and are the reference the fused path is tested against.
 """
 
 from __future__ import annotations
@@ -58,12 +60,76 @@ class TableReport:
         return self.verdict == PASS
 
 
-def _status_from_pct(pct: float, warn: float = ROWCOUNT_WARN_PCT, fail: float = ROWCOUNT_FAIL_PCT) -> str:
-    if pct >= fail:
-        return FAIL
-    if pct >= warn:
-        return WARN
-    return PASS
+def _drift(src_n: int, sink_n: int, warn: float = ROWCOUNT_WARN_PCT, fail: float = ROWCOUNT_FAIL_PCT):
+    """(status, diff_pct) of ``sink_n`` against ``src_n``; an empty source
+    drifts 100% unless the sink is empty too."""
+    pct = (abs(sink_n - src_n) / src_n * 100.0) if src_n else (100.0 if sink_n else 0.0)
+    return (FAIL if pct >= fail else WARN if pct >= warn else PASS), pct
+
+
+def _rowcount(src_n: int, sink_n: int) -> CheckResult:
+    status, pct = _drift(src_n, sink_n)
+    return CheckResult(
+        "rowcount",
+        status,
+        {"source_count": src_n, "sink_count": sink_n, "diff": abs(src_n - sink_n), "diff_pct": pct},
+    )
+
+
+def _distinct_pk(src_d: int, sink_d: int, approx: bool = False, rsd: float = 0.01) -> CheckResult:
+    """HLL estimates widen the thresholds to at least rsd / 2·rsd."""
+    warn, fail = ROWCOUNT_WARN_PCT, ROWCOUNT_FAIL_PCT
+    if approx:
+        warn, fail = max(warn, rsd * 100), max(fail, 2 * rsd * 100)
+    status, pct = _drift(src_d, sink_d, warn, fail)
+    return CheckResult(
+        "distinct_pk",
+        status,
+        {"source_distinct": src_d, "sink_distinct": sink_d, "diff": sink_d - src_d, "diff_pct": pct, "approx": approx},
+    )
+
+
+def _duplication(total: int, distinct: int, null_pk: int) -> CheckResult:
+    """``distinct`` counts non-NULL keys only, so NULL-keyed rows are taken
+    out of the dupe math; any dupe or NULL key fails an upsert sink."""
+    dupes = (total - null_pk) - distinct
+    return CheckResult(
+        "duplication",
+        FAIL if (dupes > 0 or null_pk > 0) else PASS,
+        {"total": total, "distinct": distinct, "duplicates": dupes, "null_pk_rows": null_pk},
+    )
+
+
+def _orphans(n: int, examples: list[tuple]) -> CheckResult:
+    return CheckResult("orphans", FAIL if n > 0 else PASS, {"orphan_count": n, "examples": examples[:10]})
+
+
+def _freshness(src_max, sink_max, ts_col: str | None, fail_minutes: float = FRESHNESS_FAIL_MINUTES) -> CheckResult:
+    """Lag = source max − sink max against the SLO, WARN at 80% of it. A
+    timestamp/date difference is a timedelta; a numeric epoch column is
+    read as milliseconds when its magnitude says so (≥ 1e12 ≈ dates past
+    2001-09-09), else seconds."""
+    if ts_col is None:
+        return CheckResult("freshness", SKIP, {}, "no timestamp column")
+    if src_max is None or sink_max is None:
+        return CheckResult("freshness", SKIP, {"source_max": str(src_max), "sink_max": str(sink_max)})
+    diff = src_max - sink_max
+    if hasattr(diff, "total_seconds"):
+        lag_min = diff.total_seconds() / 60.0
+    else:
+        divisor = 1000.0 if abs(float(src_max)) >= 1e12 else 1.0
+        lag_min = float(diff) / divisor / 60.0
+    if lag_min > fail_minutes:
+        status = FAIL
+    elif lag_min > fail_minutes * FRESHNESS_WARN_RATIO:
+        status = WARN
+    else:
+        status = PASS
+    return CheckResult(
+        "freshness",
+        status,
+        {"source_max": str(src_max), "sink_max": str(sink_max), "lag_minutes": lag_min},
+    )
 
 
 def check_exists(sink: DataFrame | None) -> CheckResult:
@@ -75,14 +141,7 @@ def check_exists(sink: DataFrame | None) -> CheckResult:
 
 def check_rowcount(source: DataFrame, sink: DataFrame) -> CheckResult:
     """Check 2: COUNT(*) drift with 0.1% WARN / 1.0% FAIL thresholds."""
-    src_n, sink_n = source.count(), sink.count()
-    diff = abs(src_n - sink_n)
-    pct = (diff / src_n * 100.0) if src_n else (100.0 if sink_n else 0.0)
-    return CheckResult(
-        "rowcount",
-        _status_from_pct(pct),
-        {"source_count": src_n, "sink_count": sink_n, "diff": diff, "diff_pct": pct},
-    )
+    return _rowcount(source.count(), sink.count())
 
 
 def check_distinct_pk(
@@ -102,16 +161,7 @@ def check_distinct_pk(
     else:
         src_d = source.select(*pk_cols).distinct().count()
         sink_d = sink.select(*pk_cols).distinct().count()
-    diff = sink_d - src_d
-    pct = (abs(diff) / src_d * 100.0) if src_d else (100.0 if sink_d else 0.0)
-    warn, fail = (max(ROWCOUNT_WARN_PCT, rsd * 100), max(ROWCOUNT_FAIL_PCT, 2 * rsd * 100)) if approx else (
-        ROWCOUNT_WARN_PCT, ROWCOUNT_FAIL_PCT
-    )
-    return CheckResult(
-        "distinct_pk",
-        _status_from_pct(pct, warn, fail),
-        {"source_distinct": src_d, "sink_distinct": sink_d, "diff": diff, "diff_pct": pct, "approx": approx},
-    )
+    return _distinct_pk(src_d, sink_d, approx, rsd)
 
 
 def check_duplication(sink: DataFrame, pk_cols: list[str]) -> CheckResult:
@@ -126,15 +176,7 @@ def check_duplication(sink: DataFrame, pk_cols: list[str]) -> CheckResult:
         F.count_distinct(*[F.col(c) for c in pk_cols]).alias("distinct"),
         F.sum(F.when(any_null, 1).otherwise(0)).alias("null_pk"),
     ).collect()[0]
-    null_pk = row["null_pk"] or 0
-    # count_distinct ignores NULL-keyed rows; exclude them from the dupe math
-    dupes = (row["total"] - null_pk) - row["distinct"]
-    status = FAIL if (dupes > 0 or null_pk > 0) else PASS
-    return CheckResult(
-        "duplication",
-        status,
-        {"total": row["total"], "distinct": row["distinct"], "duplicates": dupes, "null_pk_rows": null_pk},
-    )
+    return _duplication(row["total"], row["distinct"], row["null_pk"] or 0)
 
 
 def check_orphans(source: DataFrame, sink: DataFrame, pk_cols: list[str], sample: int = 100) -> CheckResult:
@@ -147,11 +189,7 @@ def check_orphans(source: DataFrame, sink: DataFrame, pk_cols: list[str], sample
     orphans = sink.select(*pk_cols).join(source.select(*pk_cols), on=pk_cols, how="left_anti")
     n = orphans.count()
     examples = [tuple(r) for r in orphans.limit(sample).collect()] if n else []
-    return CheckResult(
-        "orphans",
-        FAIL if n > 0 else PASS,
-        {"orphan_count": n, "examples": examples[:10]},
-    )
+    return _orphans(n, examples)
 
 
 def check_freshness(
@@ -164,85 +202,13 @@ def check_freshness(
     (WARN at 80% of the threshold).
 
     ``ts_col`` may be a timestamp/date column OR a numeric epoch column —
-    the envelope's own ``__ts_ms`` convention is a bigint of epoch millis.
-    Numeric columns are interpreted as epoch milliseconds when their
-    magnitude says so (≥ 1e12 ≈ dates past 2001-09-09), else epoch seconds,
-    matching the reference's freshness check behavior."""
+    the envelope's own ``__ts_ms`` convention is a bigint of epoch millis
+    (see ``_freshness`` for the unit rule)."""
     if ts_col is None:
-        return CheckResult("freshness", SKIP, {}, "no timestamp column")
+        return _freshness(None, None, None, fail_minutes)
     src_max = source.agg(F.max(ts_col).alias("m")).collect()[0]["m"]
     sink_max = sink.agg(F.max(ts_col).alias("m")).collect()[0]["m"]
-    if src_max is None or sink_max is None:
-        return CheckResult("freshness", SKIP, {"source_max": str(src_max), "sink_max": str(sink_max)})
-    diff = src_max - sink_max
-    if hasattr(diff, "total_seconds"):  # timestamp/date column → timedelta
-        lag_min = diff.total_seconds() / 60.0
-    else:  # numeric epoch column
-        divisor = 1000.0 if abs(float(src_max)) >= 1e12 else 1.0
-        lag_min = float(diff) / divisor / 60.0
-    if lag_min > fail_minutes:
-        status = FAIL
-    elif lag_min > fail_minutes * FRESHNESS_WARN_RATIO:
-        status = WARN
-    else:
-        status = PASS
-    return CheckResult(
-        "freshness",
-        status,
-        {"source_max": str(src_max), "sink_max": str(sink_max), "lag_minutes": lag_min},
-    )
-
-
-def _side_stats(
-    df: DataFrame, pk_cols: list[str], ts_col: str | None, approx: bool, rsd: float
-) -> dict:
-    """ONE aggregate pass per side for checks 2/3/4/6 (r13 review): the
-    sequential check functions each launched their own job — four full
-    scans per side at 100 TB for numbers one aggregation computes
-    together. Distinct semantics match the standalone checks exactly:
-    ``struct``-wrapped distinct counts NULL-keyed tuples (the
-    ``distinct().count()`` behavior check 3 had), bare ``count_distinct``
-    excludes them (check 4's dupe math).
-
-    EXACT mode runs as a two-stage groupBy-PK aggregate (r14, verdict
-    #6 rehearsal): the r13 single-agg form put two exact distincts in
-    one aggregate, and Spark plans multi-distinct via Expand — every
-    input row shuffles ×3 (measured 134 → 269 MB at 10× lineitem,
-    wall-REGRESSING the fuse on a page-cached box). Grouping by the PK
-    first gets every statistic from ONE narrow map-side-combined
-    shuffle (key + count + ts_max): total = Σ counts, struct-distinct =
-    group count (groupBy, like struct-distinct, treats NULL keys as
-    equal), bare-distinct = groups with no NULL key, null_pk = Σ counts
-    over NULL-keyed groups. Approx mode keeps the single-pass sketch
-    aggregate — its point is to avoid shuffling keys at all."""
-    any_null = reduce(or_, [F.col(c).isNull() for c in pk_cols])
-    if approx:
-        aggs = [
-            F.count(F.lit(1)).alias("total"),
-            F.approx_count_distinct(F.struct(*pk_cols), rsd=rsd).alias("dist_all"),
-            F.count_distinct(*[F.col(c) for c in pk_cols]).alias("dist_nonnull"),
-            F.sum(F.when(any_null, 1).otherwise(0)).alias("null_pk"),
-        ]
-        if ts_col is not None:
-            aggs.append(F.max(ts_col).alias("ts_max"))
-        row = df.agg(*aggs).collect()[0]
-        return dict(row.asDict())
-    g = df.groupBy(*[F.col(c) for c in pk_cols]).agg(
-        F.count(F.lit(1)).alias("__n"),
-        *([F.max(ts_col).alias("__ts")] if ts_col is not None else []),
-    )
-    aggs = [
-        F.coalesce(F.sum("__n"), F.lit(0)).alias("total"),
-        F.count(F.lit(1)).alias("dist_all"),
-        F.count(F.when(~any_null, 1)).alias("dist_nonnull"),
-        F.coalesce(
-            F.sum(F.when(any_null, F.col("__n")).otherwise(0)), F.lit(0)
-        ).alias("null_pk"),
-    ]
-    if ts_col is not None:
-        aggs.append(F.max("__ts").alias("ts_max"))
-    row = g.agg(*aggs).collect()[0]
-    return dict(row.asDict())
+    return _freshness(src_max, sink_max, ts_col, fail_minutes)
 
 
 def run_all_checks(
@@ -251,103 +217,75 @@ def run_all_checks(
     sink: DataFrame | None,
     pk_cols: list[str],
     ts_col: str | None = None,
-    approx: bool = False,
-    rsd: float = 0.01,
 ) -> TableReport:
     """Checks 1→6; verdict FAIL > WARN > PASS (tests/validation.py:747-768).
-    ``approx`` switches the distinct-PK check to the HLL scale mode.
 
-    Fused execution (r13): the scalar statistics behind rowcount /
-    distinct-PK / duplication / freshness come from ONE aggregate job per
-    side (``_side_stats``) instead of a job per check — the orphan
-    anti-join stays its own (necessarily two-sided) job. Check results
-    are value-identical to the standalone check functions."""
+    Checks 2-6 come from ONE aggregate: (pk…, side, ts) rows of both sides
+    are unioned and grouped by the PK into (src_n, sink_n, src_ts,
+    sink_ts) per key, and one global aggregate over those groups gives
+    every number. Each side is read once and the keys shuffle once; the
+    aggregate has no distinct aggregates, so Spark plans no Expand.
+
+    - totals = Σ n; struct-distinct (NULL tuples count, like
+      ``distinct().count()``) = groups with n > 0; non-NULL distinct =
+      such groups without a NULL key part; null_pk = Σ n over NULL-keyed
+      groups; ts maxes = max of the per-key maxes.
+    - orphans = Σ sink_n over groups with src_n = 0 or a NULL key part:
+      ``left_anti`` never matches a NULL key, so a NULL-keyed sink row is
+      always an orphan even when the source holds the same NULL key.
+      Up to 10 example keys are collected only when there are orphans.
+
+    Results are value-identical to the standalone check functions
+    (orphan examples may name other orphan keys)."""
     report = TableReport(table)
     exists = check_exists(sink)
     report.results.append(exists)
     if exists.status == FAIL or sink is None:
         return report
-    src = _side_stats(source, pk_cols, ts_col, approx, rsd)
-    snk = _side_stats(sink, pk_cols, ts_col, approx, rsd)
 
-    # check 2: rowcount drift
-    diff = abs(src["total"] - snk["total"])
-    pct = (diff / src["total"] * 100.0) if src["total"] else (100.0 if snk["total"] else 0.0)
-    report.results.append(
-        CheckResult(
-            "rowcount",
-            _status_from_pct(pct),
-            {"source_count": src["total"], "sink_count": snk["total"], "diff": diff, "diff_pct": pct},
+    def tagged(df: DataFrame, side: int) -> DataFrame:
+        ts = F.col(ts_col) if ts_col is not None else F.lit(None).cast("long")
+        return df.select(*pk_cols, F.lit(side).alias("__side"), ts.alias("__ts"))
+
+    is_src = F.col("__side") == 0
+    per_key = (
+        tagged(source, 0)
+        .unionByName(tagged(sink, 1))
+        .groupBy(*pk_cols)
+        .agg(
+            F.count(F.when(is_src, 1)).alias("src_n"),
+            F.count(F.when(~is_src, 1)).alias("sink_n"),
+            F.max(F.when(is_src, F.col("__ts"))).alias("src_ts"),
+            F.max(F.when(~is_src, F.col("__ts"))).alias("sink_ts"),
         )
     )
-    # check 3: distinct-PK parity (struct-distinct: NULL tuples count)
-    d_diff = snk["dist_all"] - src["dist_all"]
-    d_pct = (abs(d_diff) / src["dist_all"] * 100.0) if src["dist_all"] else (100.0 if snk["dist_all"] else 0.0)
-    warn, fail = (
-        (max(ROWCOUNT_WARN_PCT, rsd * 100), max(ROWCOUNT_FAIL_PCT, 2 * rsd * 100))
-        if approx
-        else (ROWCOUNT_WARN_PCT, ROWCOUNT_FAIL_PCT)
-    )
-    report.results.append(
-        CheckResult(
-            "distinct_pk",
-            _status_from_pct(d_pct, warn, fail),
-            {
-                "source_distinct": src["dist_all"],
-                "sink_distinct": snk["dist_all"],
-                "diff": d_diff,
-                "diff_pct": d_pct,
-                "approx": approx,
-            },
-        )
-    )
-    # check 4: duplication + NULL-PK (non-null distinct, like the standalone)
-    null_pk = snk["null_pk"] or 0
-    dupes = (snk["total"] - null_pk) - snk["dist_nonnull"]
-    report.results.append(
-        CheckResult(
-            "duplication",
-            FAIL if (dupes > 0 or null_pk > 0) else PASS,
-            {
-                "total": snk["total"],
-                "distinct": snk["dist_nonnull"],
-                "duplicates": dupes,
-                "null_pk_rows": null_pk,
-            },
-        )
-    )
-    # check 5: orphans — inherently a two-sided join, unchanged
-    report.results.append(check_orphans(source, sink, pk_cols))
-    # check 6: freshness from the same aggregate's maxes
-    report.results.append(
-        _freshness_from_maxes(src.get("ts_max"), snk.get("ts_max"), ts_col)
-    )
+    any_null = reduce(or_, [F.col(c).isNull() for c in pk_cols])
+    orphan = (F.col("src_n") == 0) | any_null
+    s = per_key.agg(
+        F.sum("src_n").alias("src_total"),
+        F.sum("sink_n").alias("sink_total"),
+        F.count(F.when(F.col("src_n") > 0, 1)).alias("src_dist"),
+        F.count(F.when(F.col("sink_n") > 0, 1)).alias("sink_dist"),
+        F.count(F.when((F.col("sink_n") > 0) & ~any_null, 1)).alias("sink_dist_nonnull"),
+        F.sum(F.when(any_null, F.col("sink_n"))).alias("sink_null_pk"),
+        F.sum(F.when(orphan, F.col("sink_n"))).alias("orphans"),
+        F.max("src_ts").alias("src_ts"),
+        F.max("sink_ts").alias("sink_ts"),
+    ).collect()[0]
+    n = {k: v or 0 for k, v in s.asDict().items() if not k.endswith("_ts")}
+
+    examples = []
+    if n["orphans"]:
+        hits = per_key.filter(orphan & (F.col("sink_n") > 0)).select(*pk_cols).limit(10)
+        examples = [tuple(r) for r in hits.collect()]
+    report.results += [
+        _rowcount(n["src_total"], n["sink_total"]),
+        _distinct_pk(n["src_dist"], n["sink_dist"]),
+        _duplication(n["sink_total"], n["sink_dist_nonnull"], n["sink_null_pk"]),
+        _orphans(n["orphans"], examples),
+        _freshness(s["src_ts"], s["sink_ts"], ts_col),
+    ]
     return report
-
-
-def _freshness_from_maxes(src_max, sink_max, ts_col: str | None) -> CheckResult:
-    """check_freshness's thresholding over already-computed maxes."""
-    if ts_col is None:
-        return CheckResult("freshness", SKIP, {}, "no timestamp column")
-    if src_max is None or sink_max is None:
-        return CheckResult("freshness", SKIP, {"source_max": str(src_max), "sink_max": str(sink_max)})
-    diff = src_max - sink_max
-    if hasattr(diff, "total_seconds"):
-        lag_min = diff.total_seconds() / 60.0
-    else:
-        divisor = 1000.0 if abs(float(src_max)) >= 1e12 else 1.0
-        lag_min = float(diff) / divisor / 60.0
-    if lag_min > FRESHNESS_FAIL_MINUTES:
-        status = FAIL
-    elif lag_min > FRESHNESS_FAIL_MINUTES * FRESHNESS_WARN_RATIO:
-        status = WARN
-    else:
-        status = PASS
-    return CheckResult(
-        "freshness",
-        status,
-        {"source_max": str(src_max), "sink_max": str(sink_max), "lag_minutes": lag_min},
-    )
 
 
 def summarize(reports: list[TableReport]) -> dict:

@@ -53,7 +53,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--sink-root", required=True)
     ap.add_argument("--tables", required=True, help="name:pk[+pk2][,name2:pk...]")
     ap.add_argument("--database", default="db", help="label for the report header")
-    ap.add_argument("--approx", action="store_true", help="HLL distinct-PK check (scale monitoring mode)")
     ap.add_argument(
         "--slack",
         action="store_true",
@@ -73,7 +72,7 @@ def main(argv: list[str] | None = None) -> int:
         except Exception:  # noqa: BLE001 — missing sink is what check 1 reports
             sink = None
         ts_col = find_ts_column(source.columns)
-        report = run_all_checks(table, source, sink, pks, ts_col, approx=args.approx)
+        report = run_all_checks(table, source, sink, pks, ts_col)
         reports.append(report)
         for r in report.results:
             print(f"[{r.status:4s}] {table}.{r.check}  {json.dumps(r.metrics, default=str)}")

@@ -370,3 +370,122 @@ def test_referential_integrity_counts_orphans_and_nulls(spark):
     empty = child.filter("id < 0")
     [r3] = referential_integrity([("empty->parent", empty, "fk", parent, "pk")]).collect()
     assert (r3.child_rows, r3.distinct_fks, r3.orphan_rows, r3.null_fks) == (0, 0, 0, 0)
+
+
+@pytest.fixture(scope="module")
+def ansi_spark(spark):
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    yield spark
+    spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
+def _ts_rows(spark, keys):
+    base = datetime.datetime(2024, 1, 1)
+    rows = [(k, i % 7, base + datetime.timedelta(seconds=i)) for i, k in enumerate(keys)]
+    return spark.createDataFrame(rows, "id long, v long, updated_at timestamp")
+
+
+def _case_null_keys_both_sides(spark, tmp_path):
+    src = _ts_rows(spark, list(range(50)) + [None] * 3)
+    return src, _ts_rows(spark, list(range(50)) + [None] * 2), ["id"], "updated_at"
+
+
+def _case_null_keyed_sink_orphans(spark, tmp_path):
+    return _ts_rows(spark, list(range(50))), _ts_rows(spark, list(range(50)) + [None] * 4), ["id"], "updated_at"
+
+
+def _case_duplicated_orphans(spark, tmp_path):
+    return _ts_rows(spark, list(range(50))), _ts_rows(spark, list(range(48)) + [100, 100, 101, 7]), ["id"], "updated_at"
+
+
+def _case_composite_null_part(spark, tmp_path):
+    schema = "cid int, metric string, v double"
+    src = spark.createDataFrame([(1, "a", 1.0), (1, None, 2.0), (2, "b", 3.0)], schema)
+    sink = spark.createDataFrame([(1, "a", 1.0), (1, None, 2.0), (1, None, 4.0), (3, None, 5.0)], schema)
+    return src, sink, ["cid", "metric"], None
+
+
+def _case_empty_source(spark, tmp_path):
+    return _ts_rows(spark, []), _ts_rows(spark, range(20)), ["id"], "updated_at"
+
+
+def _case_empty_sink(spark, tmp_path):
+    return _ts_rows(spark, range(20)), _ts_rows(spark, []), ["id"], "updated_at"
+
+
+def _case_no_ts_column(spark, tmp_path):
+    return _ts_rows(spark, range(1000)), _ts_rows(spark, range(995)), ["id"], None
+
+
+def _case_epoch_ms_ts(spark, tmp_path):
+    base_ms = 1_700_000_000_000
+    src = spark.createDataFrame([(i, base_ms + i * 60_000) for i in range(20)], "id long, __ts_ms long")
+    sink = src.filter("id < 7")  # 13 minutes behind: the WARN band
+    return src, sink, ["id"], "__ts_ms"
+
+
+def _case_txlog_mor_deltas(spark, tmp_path):
+    from cdc_connector_spark.changelog.txlog import TxLogMergeSink
+
+    sink = TxLogMergeSink(spark, str(tmp_path / "sink"), ["id"], num_buckets=4)
+    sink.overwrite(_ts_rows(spark, range(200)))
+    for n, (op, keys) in enumerate([("u", [3, 50, 120]), ("d", [4, 5]), ("c", [300, 301]), ("u", [50, 7])], 1):
+        sink.apply_delta(
+            _ts_rows(spark, keys)
+            .withColumn("__op", F.lit(op))
+            .withColumn("__ts_ms", F.lit(n).cast("long"))
+            .withColumn("__seq", F.lit(n).cast("long"))
+        )
+    # the source never saw key 301: one orphan, and 2 of 201 keys deleted
+    src = _ts_rows(spark, [k for k in range(201) if k not in (4, 5)] + [300])
+    return src, sink.read(), ["id"], "updated_at"
+
+
+@pytest.mark.parametrize(
+    "make",
+    [
+        _case_null_keys_both_sides,
+        _case_null_keyed_sink_orphans,
+        _case_duplicated_orphans,
+        _case_composite_null_part,
+        _case_empty_source,
+        _case_empty_sink,
+        _case_no_ts_column,
+        _case_epoch_ms_ts,
+        _case_txlog_mor_deltas,
+    ],
+    ids=lambda make: make.__name__[len("_case_"):],
+)
+def test_run_all_checks_matches_standalone_checks(make, ansi_spark, tmp_path):
+    """``run_all_checks`` computes checks 2-6 in one pass; each result must
+    equal its standalone check's, status and metrics, on NULL-keyed,
+    orphaned, composite, empty, timestamp-less, epoch-ms and MOR inputs.
+    Orphan examples may differ in choice, but each is an orphan key and
+    there are at most 10."""
+    src, sink, pk, ts = make(ansi_spark, tmp_path)
+    fused = run_all_checks("t", src, sink, pk, ts)
+    assert [r.check for r in fused.results] == [
+        "exists", "rowcount", "distinct_pk", "duplication", "orphans", "freshness"
+    ]
+    got = {r.check: r for r in fused.results}
+    src_keys = {tuple(r) for r in src.select(*pk).collect()}
+    orphan_keys = {
+        k for k in (tuple(r) for r in sink.select(*pk).collect()) if None in k or k not in src_keys
+    }
+    for want in [
+        check_rowcount(src, sink),
+        check_distinct_pk(src, sink, pk),
+        check_duplication(sink, pk),
+        check_orphans(src, sink, pk),
+        check_freshness(src, sink, ts),
+    ]:
+        have = got[want.check]
+        assert (have.status, have.details) == (want.status, want.details), want.check
+        have_m, want_m = dict(have.metrics), dict(want.metrics)
+        if want.check == "orphans":
+            examples = have_m.pop("examples")
+            want_m.pop("examples")
+            assert len(examples) <= 10 and set(examples) <= orphan_keys
+            assert bool(examples) == bool(orphan_keys)
+        assert have_m == want_m, want.check
