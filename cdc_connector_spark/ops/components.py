@@ -11,9 +11,8 @@ iterated to fixpoint. Each iteration is ONE join of the label frame against
 the (small, static) edge frame + one aggregation — two shuffles over frames
 of longs. Convergence takes O(graph diameter) rounds; near-dup graphs are
 dense clique-ish clusters (diameter 2-3 in practice), so the loop runs 3-5
-times, not log(n). Lineage is cut per round (localCheckpoint) so the plan
-does not grow with iterations — the standard Spark pattern for iterative
-graph algorithms.
+times, not log(n). Both variants run their rounds through
+``ops.graph.iterate`` (one loop, one lineage policy).
 
 For adversarial DEEP graphs (chains, long paths — diameter ≫ the round
 budget) ``connected_components_star`` implements the two-phase
@@ -33,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .graph import iterate, unchanged_count
+
 
 def connected_components(
     pairs: DataFrame,
@@ -49,7 +50,6 @@ def connected_components(
     is pathologically deep, not clique-ish — the computation FALLS BACK to
     the O(log n) large-star/small-star contraction instead of failing.
     """
-    spark = pairs.sparkSession
     # undirected: keep both orientations so min labels flow both ways
     e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     edges = e.unionByName(
@@ -63,25 +63,26 @@ def connected_components(
         .withColumn("comp", F.col("id"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iterations):
+
+    def hash_min(labels: DataFrame) -> DataFrame:
         # min label among neighbors, then min with own label
         neighbor_min = (
             edges.join(labels, edges.dst == labels.id)
             .groupBy("src")
             .agg(F.min("comp").alias("nmin"))
         )
-        new_labels = (
-            labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
-            .select(
-                "id",
-                F.least(F.col("comp"), F.coalesce(F.col("nmin"), F.col("comp"))).alias("comp"),
-                (F.col("nmin") < F.col("comp")).alias("__changed"),
-            )
-        ).localCheckpoint(eager=True)
-        changed = new_labels.filter(F.col("__changed")).count()
-        labels = new_labels.drop("__changed")
-        if changed == 0:
-            return labels.select("id", "comp")
+        return labels.join(neighbor_min, labels.id == neighbor_min.src, "left").select(
+            "id",
+            F.least(F.col("comp"), F.coalesce(F.col("nmin"), F.col("comp"))).alias("comp"),
+            (F.col("nmin") < F.col("comp")).alias("__changed"),
+        )
+
+    labels, converged = iterate(
+        labels, hash_min, max_iterations,
+        lambda _, nxt: nxt.filter(F.col("__changed")).count() == 0,
+    )
+    if converged:
+        return labels.select("id", "comp")
     # diameter exceeds the hash-min budget: switch to the depth-independent
     # star contraction rather than raising (its round count is O(log n))
     return connected_components_star(pairs, id_a, id_b)
@@ -135,8 +136,8 @@ def connected_components_star(
     n_edges = edges.count()
     if n_edges == 0:
         return nodes.select("id", F.col("id").alias("comp"))
-    converged = False
-    for _ in range(max_iterations):
+
+    def star_round(edges: DataFrame) -> DataFrame:
         # large-star: m(x) = min over closed neighborhood of x; every
         # neighbor y > x re-links to m(x). Output keeps u > v orientation
         # by construction (y > x >= m(x)).
@@ -151,12 +152,12 @@ def connected_components_star(
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=True)  # feeds mins2 AND the small-star join
         )
         # small-star: with edges oriented high->low, m(x) = min low
         # neighbor of x; every low neighbor and x itself link to m(x).
         mins2 = large.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
+        return (
             large.join(mins2, "u")
             .select(F.col("v").alias("a"), F.col("m").alias("b"))
             .unionByName(
@@ -165,14 +166,13 @@ def connected_components_star(
             .filter(F.col("a") != F.col("b"))
             .select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        n_next = small.count()
-        if n_next == n_edges and small.subtract(edges).count() == 0:
-            edges = small
-            converged = True
-            break
-        edges, n_edges = small, n_next
+
+    same_size = unchanged_count(n_edges)
+    edges, converged = iterate(
+        edges, star_round, max_iterations,
+        lambda old, new: same_size(old, new) and new.subtract(old).count() == 0,
+    )
     if not converged:
         # 40 rounds covers n ≈ 2^40 nodes; reaching here means a logic bug,
         # not a big graph — fail loudly rather than return a non-star set

@@ -1,40 +1,114 @@
-"""Distributed graph ranking: PageRank over an edge DataFrame.
+"""Distributed graph operators over an edge DataFrame.
 
-Complements ``ops/components.py`` (connected components) on the graph
-side of the analytics surface: components answer "which records belong
-together", PageRank answers "which nodes matter" — the
-centrality/importance primitive behind seed-page selection for crawls,
-entity salience, and influence scoring on interaction graphs (the
-Brin & Page 1998 formulation; no reference-repo analogue — the
-reference has no graph plane).
+Ranking (``pagerank``, ``hits``), local structure (``triangle_count``,
+``clustering_coefficient``, ``degree_assortativity``, ``kcore``),
+reachability (``bfs_hops``, ``shortest_paths``), communities
+(``label_propagation``) and ``link_prediction``; connected components
+live in ``ops/components.py``. No reference-repo analogue — the
+reference has no graph plane.
 
-Spark-first, value-verifiable shape:
-- a fixed number of Lloyd's-style synchronous iterations (the
-  ``kmeans_fit`` evidence pattern): each iteration is ONE join of the
-  edge table against the current rank vector plus ONE aggregation keyed
-  by destination — two shuffles per iteration, both on node ids, and
-  the edge table never changes partitioning (co-partitioned join reuse).
-- engine-portable arithmetic: per-edge contributions are computed as one
-  fixed double expression, ROUNDED to 12 places and accumulated as
-  DECIMAL(28,12) — exact, order-independent summation (the
-  ``source_quality_filter`` trick), so the oracle's unrolled-CTE replay
-  is bit-identical; the damping update is again a single double
-  expression.
-- dangling nodes (no out-edges) keep their rank out of circulation (the
-  "dangling mass leaks" convention, stated rather than hidden; pass
-  ``redistribute_dangling=True`` to add the standard uniform
-  redistribution at the cost of one scalar aggregate per iteration).
+Every operator is value-verifiable against a SQL replay: float scores
+are accumulated from per-edge contributions ROUNDED to 12 places and
+summed as DECIMAL(28,12) (exact, order-independent), then finished by
+one fixed IEEE expression; counts, hops and weights are exact integers.
 
-At 100 TB: cost is O(iters · |E|) shuffle bytes of (id, double) pairs;
-rank state is O(|V|). Both are keyed hash shuffles AQE can size; skewed
-high-degree destinations are plain aggregation skew (map-side partials
-absorb it).
+The iterative operators (and both components variants) run their rounds
+through one loop, ``iterate``, which owns the round budget, the
+convergence test and the lineage policy; each operator supplies only its
+step and what an exhausted budget means.
+
+At 100 TB: per-round cost is O(|E|) shuffle bytes of node-keyed pairs,
+round state is O(|V|); every shuffle is a keyed hash shuffle AQE can
+size, and hub skew is aggregation skew map-side partials absorb.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def iterate(state, step, rounds, done=None):
+    """Run ``step`` for up to ``rounds`` rounds; returns ``(state,
+    converged)``.
+
+    ``state`` is a DataFrame or a tuple of DataFrames and plain values;
+    ``step(state)`` builds the next state lazily. ``done(prev, nxt)``
+    ends the loop early and is the only way to get ``converged=True``,
+    so each caller decides what an exhausted budget means: raise, fall
+    back, or return the bounded-horizon answer.
+
+    The lineage policy, for every round of every operator: each
+    DataFrame the step built is cut with an eager ``localCheckpoint``
+    before ``done`` reads it; a frame the step passes through unchanged
+    is already cut. Left lazy, round r's plan nests every earlier round
+    (analysis time grows quadratically, deep runs hit driver stack
+    limits) and a state referenced twice per round re-derives its whole
+    history per reference. The cut only truncates the plan, so it is
+    value-invisible. localCheckpoint, not persist: a checkpointed plan
+    is never substituted into unrelated queries by the cache manager. A
+    step checkpoints a mid-step frame itself only when the step
+    references that frame twice."""
+    def cut(new, old):
+        if not isinstance(new, DataFrame) or any(new is o for o in old):
+            return new
+        return new.localCheckpoint(eager=True)
+
+    for _ in range(rounds):
+        prev = state if isinstance(state, tuple) else (state,)
+        nxt = step(state)
+        nxt = tuple(cut(x, prev) for x in nxt) if isinstance(nxt, tuple) else cut(nxt, prev)
+        if done is not None and done(state, nxt):
+            return nxt, True
+        state = nxt
+    return state, False
+
+
+def unchanged_count(first: int):
+    """A ``done`` test for shrinking states: the round removed no row.
+    Each state is counted once — round r's count is round r+1's
+    baseline; ``first`` is the starting state's count."""
+    sizes = [first]
+
+    def done(prev: DataFrame, nxt: DataFrame) -> bool:
+        sizes.append(nxt.count())
+        return sizes[-1] == sizes[-2]
+
+    return done
+
+
+def _canonical_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """(a, b) with a < b: direction ignored, self-loops dropped, parallel
+    edges collapsed. Cut once — every caller references it several times,
+    and left lazy each reference re-derives the caller's edge lineage."""
+    s, d = F.col(src_col), F.col(dst_col)
+    return (
+        edges.filter(s != d)
+        .select(F.least(s, d).alias("a"), F.greatest(s, d).alias("b"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+
+
+def _degrees(e: DataFrame) -> DataFrame:
+    """(node, deg) over a canonical (a, b) edge set."""
+    return (
+        e.select(F.col("a").alias("node"))
+        .unionByName(e.select(F.col("b").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("deg"))
+    )
+
+
+def _node_set(e: DataFrame) -> DataFrame:
+    """Distinct nodes of an (__s, __d) edge frame; cut once, since every
+    round references it."""
+    return (
+        e.select(F.col("__s").alias("node"))
+        .unionByName(e.select(F.col("__d").alias("node")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
 
 
 def pagerank(
@@ -44,67 +118,51 @@ def pagerank(
     src_col: str = "src",
     dst_col: str = "dst",
     redistribute_dangling: bool = False,
-    checkpoint_every: int | None = 8,
 ) -> DataFrame:
-    """PageRank after ``iters`` synchronous iterations from a uniform
-    start. Returns (node, rank) with rank rounded to 6 — ranks sum to ~1
-    minus the dangling leak (or ~1 with ``redistribute_dangling``).
+    """PageRank (Brin & Page 1998) after ``iters`` synchronous iterations
+    from a uniform start. Returns (node, rank) with rank rounded to 6 —
+    ranks sum to ~1 minus the dangling leak (or ~1 with
+    ``redistribute_dangling``).
+
+    Each iteration is one join of the edges against the rank vector plus
+    one aggregation keyed by destination; contributions are (rank /
+    outdeg) rounded to 12 and DECIMAL-summed, and the damping update is
+    one double expression, so the oracle's unrolled-CTE replay is
+    bit-identical. Dangling nodes (no out-edges) keep their rank out of
+    circulation unless ``redistribute_dangling`` adds the standard
+    uniform spread (one scalar aggregate per iteration).
 
     Parallel edges are honored (each contributes separately — pre-weight
     by deduplicating upstream if multiplicity should not count);
     self-loops count as ordinary edges.
 
-    The unrolled lazy loop references the edge DataFrame ~iters+2 times;
-    Spark re-derives its lineage per reference. When the edges come from
-    an expensive derivation (joins, distinct), ``edges.localCheckpoint()``
-    (or write them out once) before calling — the GraphFrames convention;
-    the function deliberately does not cache internally (a library-held
-    cache outlives the call and pollutes unrelated plans — the round-7
-    cross-module cache-leak lesson).
-
-    ``checkpoint_every``: the rank vector's lazy plan grows linearly with
-    the iteration count (each iteration nests the previous), so deep runs
-    pay quadratic analysis time and risk driver stack limits. Every
-    ``checkpoint_every`` iterations the O(|V|) rank vector is cut with an
-    eager ``localCheckpoint`` — the same lineage discipline as the BPE
-    merge loop (``ops/bpe.py``). Values are unchanged (pinned by test);
-    pass ``None`` to disable for fully-lazy composition."""
+    The edge frame is referenced every iteration; when it comes from an
+    expensive derivation (joins, distinct), ``localCheckpoint`` it before
+    calling — the GraphFrames convention; the function does not cache
+    internally (a library-held cache outlives the call and pollutes
+    unrelated plans)."""
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
     if not 0.0 < damping < 1.0:
         raise ValueError(f"damping must be in (0,1), got {damping}")
-    if checkpoint_every is not None and checkpoint_every < 1:
-        raise ValueError(f"checkpoint_every must be >= 1 or None, got {checkpoint_every}")
     e = edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))
-    nodes = (
-        e.select(F.col("__s").alias("node"))
-        .unionByName(e.select(F.col("__d").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)  # referenced 2x per iteration
-    )
+    nodes = _node_set(e)
     n_total = nodes.agg(F.count(F.lit(1)).alias("__n"))
     outdeg = e.groupBy("__s").agg(F.count(F.lit(1)).alias("__out"))
-    # NOTE (r15 optimization round): hoisting the loop-invariant
-    # e⋈outdeg join out of the loop behind an eager localCheckpoint was
-    # tried and REVERTED — measured 4.25 s → 6.8 s on the sf0.1 trade
-    # graph (within-session A/B): the per-iteration join is a broadcast
-    # of the node-sized degree table fused into the rank join's stage
-    # (near-free), while the checkpoint materializes an |E|-sized frame
-    # per call. The lazy form is the right one at any scale where the
-    # degree table broadcasts; revisit only if outdeg outgrows that.
-    # rank_0 = 1/N for every node (single double division, portable)
-    rank = nodes.crossJoin(F.broadcast(n_total)).select(
-        "node", (F.lit(1.0) / F.col("__n").cast("double")).alias("rank")
-    )
+    # Hoisting the loop-invariant e⋈outdeg join out of the loop behind an
+    # eager localCheckpoint measured slower (4.25 s → 6.8 s on the sf0.1
+    # trade graph): the per-iteration join is a broadcast of the
+    # node-sized degree table fused into the rank join's stage, while the
+    # checkpoint materializes an |E|-sized frame. Revisit only if outdeg
+    # outgrows the broadcast.
     base = F.lit(1.0 - damping) / F.col("__n").cast("double")
-    for it in range(iters):
+
+    def step(rank: DataFrame) -> DataFrame:
         contrib = (
             e.join(outdeg, "__s")
             .join(rank.withColumnRenamed("node", "__s"), "__s")
             .select(
                 F.col("__d").alias("node"),
-                # fixed shape: (rank / outdeg) rounded, DECIMAL-summed —
-                # order-independent, exact, SQL-replayable
                 F.round(
                     F.col("rank") / F.col("__out").cast("double"), 12
                 ).cast("decimal(28,12)").alias("__c"),
@@ -112,45 +170,75 @@ def pagerank(
             .groupBy("node")
             .agg(F.sum("__c").alias("__in"))
         )
+        out = nodes.join(contrib, "node", "left").crossJoin(F.broadcast(n_total))
         extra = F.lit(0.0)
         if redistribute_dangling:
-            # dangling mass = total rank of nodes with no out-edges; the
-            # standard uniform spread costs one scalar per iteration
-            dangling = (
-                rank.join(outdeg.withColumnRenamed("__s", "node"), "node", "left_anti")
-                .agg(
-                    F.coalesce(
-                        F.sum(F.round(F.col("rank"), 12).cast("decimal(28,12)")),
-                        F.lit(0).cast("decimal(28,12)"),
-                    ).alias("__dm")
-                )
+            dangling = rank.join(
+                outdeg.withColumnRenamed("__s", "node"), "node", "left_anti"
+            ).agg(
+                F.coalesce(
+                    F.sum(F.round(F.col("rank"), 12).cast("decimal(28,12)")),
+                    F.lit(0).cast("decimal(28,12)"),
+                ).alias("__dm")
             )
-            rank_next_extra = dangling
+            out = out.crossJoin(F.broadcast(dangling))
             extra = F.lit(damping) * F.col("__dm").cast("double") / F.col("__n").cast("double")
-        out = (
-            nodes.join(contrib, "node", "left")
-            .crossJoin(F.broadcast(n_total))
-        )
-        if redistribute_dangling:
-            out = out.crossJoin(F.broadcast(rank_next_extra))
-        rank = out.select(
+        return out.select(
             "node",
             (
                 base
                 + extra
-                + F.lit(damping)
-                * F.coalesce(F.col("__in").cast("double"), F.lit(0.0))
+                + F.lit(damping) * F.coalesce(F.col("__in").cast("double"), F.lit(0.0))
             ).alias("rank"),
         )
-        # cut the linearly-growing plan; skip after the final iteration
-        # (the caller's terminal select is cheap to leave lazy)
-        if (
-            checkpoint_every is not None
-            and (it + 1) % checkpoint_every == 0
-            and it + 1 < iters
-        ):
-            rank = rank.localCheckpoint(eager=True)
+
+    # rank_0 = 1/N for every node (single double division, portable)
+    rank0 = nodes.crossJoin(F.broadcast(n_total)).select(
+        "node", (F.lit(1.0) / F.col("__n").cast("double")).alias("rank")
+    )
+    rank, _ = iterate(rank0, step, iters)
     return rank.select("node", F.round("rank", 6).alias("rank"))
+
+
+def _triangles(e: DataFrame) -> DataFrame:
+    """(node, triangles) over a canonical, checkpointed (a, b) edge set —
+    the wedge step behind ``triangle_count`` and
+    ``clustering_coefficient``."""
+    deg = _degrees(e)
+    # orient: u -> v iff (deg_u, u) < (deg_v, v) — a total order, so every
+    # canonical edge gets exactly one direction
+    da = deg.select(F.col("node").alias("a"), F.col("deg").alias("__da"))
+    db = deg.select(F.col("node").alias("b"), F.col("deg").alias("__db"))
+    ed = e.join(da, "a").join(db, "b")
+    fwd = (F.col("__da") < F.col("__db")) | (
+        (F.col("__da") == F.col("__db")) & (F.col("a") < F.col("b"))
+    )
+    oriented = ed.select(
+        F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("u"),
+        F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("v"),
+    ).localCheckpoint(eager=True)  # both wedge sides
+    o1, o2 = oriented.alias("o1"), oriented.alias("o2")
+    wedges = o1.join(
+        o2,
+        on=[F.col("o1.u") == F.col("o2.u"), F.col("o1.v") < F.col("o2.v")],
+    ).select(
+        F.col("o1.u").alias("u"),
+        F.col("o1.v").alias("x"),
+        F.col("o2.v").alias("y"),
+    )
+    closed = wedges.join(
+        e,
+        on=[
+            F.least(F.col("x"), F.col("y")) == F.col("a"),
+            F.greatest(F.col("x"), F.col("y")) == F.col("b"),
+        ],
+    ).select("u", "x", "y")
+    corners = (
+        closed.select(F.col("u").alias("node"))
+        .unionByName(closed.select(F.col("x").alias("node")))
+        .unionByName(closed.select(F.col("y").alias("node")))
+    )
+    return corners.groupBy("node").agg(F.count(F.lit(1)).alias("triangles"))
 
 
 def triangle_count(
@@ -189,58 +277,9 @@ def triangle_count(
     The canonical edge set is referenced four times (degree census ×2,
     orientation, closing join) and the oriented list twice (both wedge
     sides); both are cut with eager ``localCheckpoint`` — left lazy,
-    each reference re-derives the caller's full edge lineage and the
-    plan multiplies combinatorially (measured: 166 exchanges → 10 on
-    the co-purchase entry). localCheckpoint, not persist: checkpointed
-    plans are never substituted into unrelated queries by the cache
-    manager (the round-7 cache-leak rule)."""
-    a, b = F.least(F.col(src_col), F.col(dst_col)), F.greatest(F.col(src_col), F.col(dst_col))
-    e = (
-        edges.filter(F.col(src_col) != F.col(dst_col))
-        .select(a.alias("a"), b.alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    deg = (
-        e.select(F.col("a").alias("node"))
-        .unionByName(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    # orient: u -> v iff (deg_u, u) < (deg_v, v) — a total order, so every
-    # canonical edge gets exactly one direction
-    da = deg.select(F.col("node").alias("a"), F.col("deg").alias("__da"))
-    db = deg.select(F.col("node").alias("b"), F.col("deg").alias("__db"))
-    ed = e.join(da, "a").join(db, "b")
-    fwd = (F.col("__da") < F.col("__db")) | (
-        (F.col("__da") == F.col("__db")) & (F.col("a") < F.col("b"))
-    )
-    oriented = ed.select(
-        F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("u"),
-        F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("v"),
-    ).localCheckpoint(eager=True)
-    o1, o2 = oriented.alias("o1"), oriented.alias("o2")
-    wedges = o1.join(
-        o2,
-        on=[F.col("o1.u") == F.col("o2.u"), F.col("o1.v") < F.col("o2.v")],
-    ).select(
-        F.col("o1.u").alias("u"),
-        F.col("o1.v").alias("x"),
-        F.col("o2.v").alias("y"),
-    )
-    closed = wedges.join(
-        e,
-        on=[
-            F.least(F.col("x"), F.col("y")) == F.col("a"),
-            F.greatest(F.col("x"), F.col("y")) == F.col("b"),
-        ],
-    ).select("u", "x", "y")
-    corners = (
-        closed.select(F.col("u").alias("node"))
-        .unionByName(closed.select(F.col("x").alias("node")))
-        .unionByName(closed.select(F.col("y").alias("node")))
-    )
-    return corners.groupBy("node").agg(F.count(F.lit(1)).alias("triangles"))
+    the plan multiplies combinatorially (measured: 166 exchanges → 10
+    on the co-purchase entry)."""
+    return _triangles(_canonical_edges(edges, src_col, dst_col))
 
 
 def hits(
@@ -264,80 +303,44 @@ def hits(
     Parallel edges contribute separately (dedupe upstream if
     multiplicity should not count).
 
-    Scale shape: two node-keyed shuffles per iteration (the edge joins),
-    two scalar max aggregates broadcast back; the edge frame is
+    Scale shape: one node-keyed shuffle per half-step (the edge join)
+    plus a scalar max aggregate broadcast back; the edge frame is
     referenced 2·iters times — ``localCheckpoint`` expensive derivations
-    first (the pagerank convention). Each half-step's raw-score and
-    normalized frames are eagerly checkpointed (the kcore discipline):
-    every one is referenced twice (its max aggregate / the next join +
-    the final assembly), so the lazy form re-derives each subtree ~2×
-    per reference — 2^(2·iters) leaf evaluations, measured 11.9 s → 5.3 s
-    whole-entry on the sf0.1 trade graph at iters=3. Checkpointing is
-    value-invisible (pagerank pins that property)."""
+    first (the pagerank convention). Each half-step's raw-score frame
+    feeds both its max and the normalize, so the step checkpoints it
+    (with the per-round cuts: 11.9 s → 5.3 s whole-entry on the sf0.1
+    trade graph at iters=3)."""
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
     e = edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))
-    nodes = (
-        e.select(F.col("__s").alias("node"))
-        .unionByName(e.select(F.col("__d").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)  # referenced 2x per iteration
-    )
+    nodes = _node_set(e)
     dec = "decimal(28,12)"
-    hub = nodes.select("node", F.lit(1.0).alias("hub"))
-    auth = None
-    for _ in range(iters):
-        araw = (
-            e.join(hub.withColumnRenamed("node", "__s"), "__s")
-            .select(
-                F.col("__d").alias("node"),
-                F.round("hub", 12).cast(dec).alias("__c"),
-            )
+
+    def half(state):
+        # one half-step: ``vec`` scores one side (hubs when ``to_auth``);
+        # the new vector scores the other side, ``vec`` is kept for output
+        vec, _, to_auth = state
+        frm, to = ("__s", "__d") if to_auth else ("__d", "__s")
+        raw = (
+            e.join(vec.withColumnRenamed("node", frm), frm)
+            .select(F.col(to).alias("node"), F.round("score", 12).cast(dec).alias("__c"))
             .groupBy("node")
-            .agg(F.sum("__c").cast("double").alias("__a"))
+            .agg(F.sum("__c").cast("double").alias("__r"))
             .localCheckpoint(eager=True)  # feeds its max AND the normalize
         )
-        amax = araw.agg(F.max("__a").alias("__m"))
-        auth = (
-            nodes.join(araw, "node", "left")
-            .crossJoin(F.broadcast(amax))
-            .select(
-                "node",
-                F.when(
-                    F.col("__m") > 0, F.coalesce("__a", F.lit(0.0)) / F.col("__m")
-                )
-                .otherwise(F.lit(0.0))
-                .alias("auth"),
-            )
-            .localCheckpoint(eager=True)  # feeds the hub step AND the output
+        top = raw.agg(F.max("__r").alias("__m"))
+        score = F.when(F.col("__m") > 0, F.coalesce("__r", F.lit(0.0)) / F.col("__m"))
+        nxt = (
+            nodes.join(raw, "node", "left")
+            .crossJoin(F.broadcast(top))
+            .select("node", score.otherwise(F.lit(0.0)).alias("score"))
         )
-        hraw = (
-            e.join(auth.withColumnRenamed("node", "__d"), "__d")
-            .select(
-                F.col("__s").alias("node"),
-                F.round("auth", 12).cast(dec).alias("__c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("__c").cast("double").alias("__h"))
-            .localCheckpoint(eager=True)  # feeds its max AND the normalize
-        )
-        hmax = hraw.agg(F.max("__h").alias("__m"))
-        hub = (
-            nodes.join(hraw, "node", "left")
-            .crossJoin(F.broadcast(hmax))
-            .select(
-                "node",
-                F.when(
-                    F.col("__m") > 0, F.coalesce("__h", F.lit(0.0)) / F.col("__m")
-                )
-                .otherwise(F.lit(0.0))
-                .alias("hub"),
-            )
-            .localCheckpoint(eager=True)  # feeds the next iteration AND the output
-        )
-    return (
-        hub.join(auth, "node")
-        .select("node", F.round("hub", 6).alias("hub"), F.round("auth", 6).alias("authority"))
+        return nxt, vec, not to_auth
+
+    hub0 = nodes.select("node", F.lit(1.0).alias("score"))
+    (hub, auth, _), _ = iterate((hub0, None, True), half, 2 * iters)
+    return hub.join(auth.withColumnRenamed("score", "auth"), "node").select(
+        "node", F.round("score", 6).alias("hub"), F.round("auth", 6).alias("authority")
     )
 
 
@@ -361,9 +364,7 @@ def kcore(
     Each round: one degree aggregation + one semi-join edge filter —
     O(E) per round, converging in at most the peel depth (≤ diameter-ish
     in practice; ``max_rounds`` is a loud guard, never a silent cap —
-    raises if the fixpoint isn't reached). Lineage is cut every round
-    (eager localCheckpoint — the iterative-op discipline), so the plan
-    never nests."""
+    raises if the fixpoint isn't reached)."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     und = (
@@ -377,25 +378,22 @@ def kcore(
     sym = pairs.unionByName(
         pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).localCheckpoint(eager=True)
-    for _ in range(max_rounds):
+
+    def peel(sym: DataFrame) -> DataFrame:
         deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("degree"))
         keep = deg.filter(F.col("degree") >= k).select("a")
-        n_before = sym.count()
-        sym2 = (
+        return (
             sym.join(keep, "a", "left_semi")
             .join(keep.withColumnRenamed("a", "b"), "b", "left_semi")
             .select("a", "b")
-            .localCheckpoint(eager=True)
         )
-        if sym2.count() == n_before:
-            return (
-                sym2.groupBy(F.col("a").alias("node"))
-                .agg(F.count(F.lit(1)).alias("degree"))
-            )
-        sym = sym2
-    raise RuntimeError(
-        f"k-core did not reach a fixpoint within max_rounds={max_rounds}"
-    )
+
+    sym, converged = iterate(sym, peel, max_rounds, unchanged_count(sym.count()))
+    if not converged:
+        raise RuntimeError(
+            f"k-core did not reach a fixpoint within max_rounds={max_rounds}"
+        )
+    return sym.groupBy(F.col("a").alias("node")).agg(F.count(F.lit(1)).alias("degree"))
 
 
 def bfs_hops(
@@ -424,38 +422,44 @@ def bfs_hops(
 
     Shape: per round, ONE frontier⋈edges join keyed by node id + one
     distinct + one anti-join against the visited set — O(edges touched
-    by the frontier) per round, never O(|V|²); visited/frontier are
-    eagerly localCheckpointed each round (the iterative-op discipline —
-    lineage stays flat). At 100 TB the frontier join is a plain keyed
-    shuffle AQE can size; hub-node fan-out is aggregation skew the
-    distinct absorbs map-side. Early-exits when a frontier empties."""
+    by the frontier) per round, never O(|V|²). At 100 TB the frontier
+    join is a plain keyed shuffle AQE can size; hub-node fan-out is
+    aggregation skew the distinct absorbs map-side. Early-exits when a
+    frontier empties."""
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
     e = edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
     if not directed:
         e = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     e = e.distinct().localCheckpoint(eager=True)
-    dist = (
+    sources = (
         sources.select(F.col(id_col).alias("node"))
         .distinct()
         .withColumn("hop", F.lit(0))
         .localCheckpoint(eager=True)
     )
-    frontier = dist.select("node")
-    for h in range(1, max_hops + 1):
+
+    def visited(frontier: DataFrame, before: DataFrame | None) -> DataFrame:
+        return frontier if before is None else before.unionByName(frontier)
+
+    def step(state):
+        # state: the last round's new nodes, every node reached before
+        # them (None at the start), and their hop
+        frontier, before, h = state
+        seen = visited(frontier, before)
         nxt = (
             frontier.join(e, frontier["node"] == e["a"])
             .select(F.col("b").alias("node"))
             .distinct()
-            .join(dist.select("node"), "node", "left_anti")
-            .withColumn("hop", F.lit(h))
-            .localCheckpoint(eager=True)
+            .join(seen.select("node"), "node", "left_anti")
+            .withColumn("hop", F.lit(h + 1))
         )
-        if nxt.isEmpty():
-            break
-        dist = dist.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt.select("node")
-    return dist
+        return nxt, seen, h + 1
+
+    (frontier, before, _), _ = iterate(
+        (sources, None, 0), step, max_hops, lambda _, s: s[0].isEmpty()
+    )
+    return visited(frontier, before)
 
 
 def clustering_coefficient(
@@ -476,27 +480,14 @@ def clustering_coefficient(
     NULL would just re-ask the question downstream). Exact integers +
     ONE fixed IEEE division rounded 6.
 
-    Cost: ``triangle_count`` (degree-oriented wedges) + one degree
-    census + a node-keyed left join."""
-    a, b = F.least(F.col(src_col), F.col(dst_col)), F.greatest(
-        F.col(src_col), F.col(dst_col)
-    )
-    e = (
-        edges.filter(F.col(src_col) != F.col(dst_col))
-        .select(a.alias("a"), b.alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)  # degree census + triangle pipeline
-    )
-    deg = (
-        e.select(F.col("a").alias("node"))
-        .unionByName(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
-    tri = triangle_count(e, "a", "b")
+    Cost: the ``triangle_count`` wedge step over the same canonical edge
+    set + one degree census + a node-keyed left join."""
+    e = _canonical_edges(edges, src_col, dst_col)
     d = F.col("degree").cast("double")
     return (
-        deg.join(tri, "node", "left")
+        _degrees(e)
+        .withColumnRenamed("deg", "degree")
+        .join(_triangles(e), "node", "left")
         .select(
             "node",
             "degree",
@@ -537,21 +528,8 @@ def degree_assortativity(
     correlate), stated rather than NULL."""
     from cdc_connector_spark.validation.checks import pearson_corr_exact
 
-    a, b = F.least(F.col(src_col), F.col(dst_col)), F.greatest(
-        F.col(src_col), F.col(dst_col)
-    )
-    e = (
-        edges.filter(F.col(src_col) != F.col(dst_col))
-        .select(a.alias("a"), b.alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)  # degree census + both endpoint joins
-    )
-    deg = (
-        e.select(F.col("a").alias("node"))
-        .unionByName(e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
+    e = _canonical_edges(edges, src_col, dst_col)
+    deg = _degrees(e)
     sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     pairs = (
         sym.join(deg.select(F.col("node").alias("a"), F.col("deg").alias("__dx")), "a")
@@ -677,9 +655,8 @@ def shortest_paths(
     horizon bounds the cost and IS the documented operator contract).
 
     Shape per round: ONE dist⋈edges join keyed on the node id + one
-    map-side-combinable MIN aggregation; dist is eagerly
-    localCheckpointed (iterative-op discipline). Early-exits when a
-    round changes nothing."""
+    map-side-combinable MIN aggregation. Early-exits when a round
+    changes nothing."""
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
     e = edges.select(
@@ -695,24 +672,25 @@ def shortest_paths(
         .withColumn("dist", F.lit(0).cast("long"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_hops):
-        relaxed = (
+
+    def relax(dist: DataFrame) -> DataFrame:
+        return (
             dist.join(e, dist["node"] == e["a"])
             .select(F.col("b").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
             .unionByName(dist)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
         )
-        # converged: same node set and no distance improved
-        converged = (
-            relaxed.join(dist.withColumnRenamed("dist", "__old"), "node", "left")
+
+    def converged(old: DataFrame, new: DataFrame) -> bool:
+        # same node set and no distance improved
+        return (
+            new.join(old.withColumnRenamed("dist", "__old"), "node", "left")
             .filter(F.col("__old").isNull() | (F.col("dist") < F.col("__old")))
             .isEmpty()
         )
-        dist = relaxed
-        if converged:
-            break
+
+    dist, _ = iterate(dist, relax, max_hops, converged)
     return dist.orderBy("node")
 
 
@@ -742,8 +720,7 @@ def label_propagation(
 
     Shape per round: one labels⋈edges join keyed on node id + one
     (node, label) count + one per-node top-1 window — all map-side-
-    combinable aggregations on node-sized frames; labels eagerly
-    localCheckpointed (the iterative-op discipline)."""
+    combinable aggregations on node-sized frames."""
     from pyspark.sql import Window
 
     if rounds < 0:
@@ -763,15 +740,17 @@ def label_propagation(
         .localCheckpoint(eager=True)
     )
     w = Window.partitionBy("node").orderBy(F.col("cnt").desc(), F.col("label").asc())
-    for _ in range(rounds):
+
+    def adopt(labels: DataFrame) -> DataFrame:
         neigh = sym.join(labels, sym["a"] == labels["node"]).select(
             F.col("b").alias("node"), "label"
         )
         counts = neigh.groupBy("node", "label").agg(F.count(F.lit(1)).alias("cnt"))
-        labels = (
+        return (
             counts.withColumn("__pk", F.row_number().over(w))
             .filter(F.col("__pk") == 1)
             .select("node", "label")
-            .localCheckpoint(eager=True)
         )
+
+    labels, _ = iterate(labels, adopt, rounds)
     return labels.orderBy("node")

@@ -1,4 +1,4 @@
-"""ops/graph.py — PageRank (synchronous iterations, portable arithmetic)."""
+"""ops/graph.py — the graph operators (portable arithmetic, one round loop)."""
 
 from __future__ import annotations
 
@@ -68,8 +68,6 @@ def test_pagerank_guards(spark):
         pagerank(df, iters=0)
     with pytest.raises(ValueError, match="damping"):
         pagerank(df, damping=1.0)
-    with pytest.raises(ValueError, match="checkpoint_every"):
-        pagerank(df, checkpoint_every=0)
 
 
 def _brute_triangles(edges):
@@ -119,17 +117,20 @@ def test_triangle_count_random_vs_brute(spark):
 
 
 def test_pagerank_checkpoint_is_value_invisible(spark):
-    """Deep runs cut the rank lineage every checkpoint_every iterations;
-    the cut must not change a single bit of the output (it only truncates
-    the lazy plan). 10 iterations with two cuts vs fully lazy."""
-    df = spark.createDataFrame(EDGES, "src bigint, dst bigint")
-    lazy = {r["node"]: r["rank"] for r in pagerank(df, iters=10, checkpoint_every=None).collect()}
-    cut = {r["node"]: r["rank"] for r in pagerank(df, iters=10, checkpoint_every=3).collect()}
-    assert lazy == cut
-    # and the python reference still agrees at depth 10
-    want = _reference_pagerank(EDGES, iters=10, damping=0.85)
-    for v in want:
-        assert abs(cut[v] - want[v]) < 1e-9
+    """Every iteration's rank vector is cut with an eager localCheckpoint
+    (the ``iterate`` lineage policy); the cuts must not change the
+    output. 10 iterations cross 10 cuts and still match the plain-python
+    reference — also with dangling redistribution, whose step reads the
+    rank vector twice (node 5 is dangling)."""
+    for edges, redistribute in ((EDGES, False), (EDGES + [(4, 5)], True)):
+        df = spark.createDataFrame(edges, "src bigint, dst bigint")
+        got = {r["node"]: r["rank"] for r in pagerank(
+            df, iters=10, redistribute_dangling=redistribute
+        ).collect()}
+        want = _reference_pagerank(edges, iters=10, damping=0.85, redistribute=redistribute)
+        assert got.keys() == want.keys()
+        for v in want:
+            assert abs(got[v] - want[v]) < 1e-9, (redistribute, v, got[v], want[v])
 
 
 def test_hits_one_iteration_hand_computed(spark):
@@ -365,3 +366,60 @@ def test_link_prediction_excludes_existing_edges_and_orders(spark):
     assert pairs == sorted(pairs)  # deterministic order at equal scores
     assert set(pairs) == {(2, 4), (3, 4)}
     assert all((a, b) not in {(1, 2), (1, 3), (2, 3), (1, 4)} for a, b in pairs)
+
+
+# ---------------------------------------------------------- Spark job pin
+
+_JOB_EDGES = [(1, 2, 3), (2, 3, 1), (3, 1, 4), (3, 4, 1), (4, 5, 5), (5, 6, 9)]
+
+
+def _graph_ops():
+    from cdc_connector_spark.ops import components as cc
+    from cdc_connector_spark.ops import graph as g
+
+    return {
+        # one cut per iteration: 3 checkpoints + the final collect
+        "pagerank": (lambda e, s: g.pagerank(e, iters=3), 9),
+        "hits": (lambda e, s: g.hits(e, iters=3), 20),
+        # 4 peel rounds; one count per state, not two
+        "kcore": (lambda e, s: g.kcore(e, k=2), 11),
+        "bfs_hops": (lambda e, s: g.bfs_hops(e, s, max_hops=5), 17),
+        "shortest_paths": (lambda e, s: g.shortest_paths(e, s, max_hops=8), 14),
+        "label_propagation": (lambda e, s: g.label_propagation(e, rounds=3), 7),
+        "connected_components": (lambda e, s: cc.connected_components(e, "src", "dst"), 13),
+        "connected_components_star": (
+            lambda e, s: cc.connected_components_star(e, "src", "dst"), 15
+        ),
+        "triangle_count": (lambda e, s: g.triangle_count(e), 3),
+        # one canonical-edge checkpoint shared with the triangle step
+        "clustering_coefficient": (lambda e, s: g.clustering_coefficient(e), 3),
+        "degree_assortativity": (lambda e, s: g.degree_assortativity(e), 2),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_graph_ops()))
+def test_graph_operator_job_counts(spark, name):
+    """Pins the Spark jobs each graph operator runs on one small graph
+    (every round's cut, convergence test and the final collect), so a
+    change to the round loop that adds or drops a job shows here. AQE is
+    off for the count: it re-plans as concurrent stages finish, so its
+    job count varies between runs of the same code (bfs_hops reads 47 or
+    48 on this graph); without it every action or cut is one job plus
+    one per broadcast."""
+    import uuid
+
+    run, want = _graph_ops()[name]
+    e = spark.createDataFrame(_JOB_EDGES, "src long, dst long, w long")
+    sources = spark.createDataFrame([(1,)], "node long")
+    sc = spark.sparkContext
+    group = f"graph-jobs-{name}-{uuid.uuid4().hex}"
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup(group, group)
+    try:
+        run(e, sources).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events are async
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == want
